@@ -124,6 +124,22 @@ def test_binaryfile_source_extracts(spark, tmp_path):
     assert rows == expected
 
 
+def test_empty_run_reads_back_as_empty_frame(spark, tmp_path):
+    # no rows -> every bucket commits empty and no bucket= directory is
+    # written; reading the output back must not fail on the missing glob
+    out = str(tmp_path / "empty")
+    empty = spark.createDataFrame([], "url string, html binary")
+    summary = run_pipeline(spark, empty, out, n_buckets=16)
+    assert summary["n_docs"] == 0
+    assert len(CheckpointStore(out).committed_buckets()) == 16
+    extracted = read_extracted(spark, out)
+    assert extracted.count() == 0
+    # the schema a non-empty output reads back with
+    assert extracted.schema.simpleString() == (
+        "struct<url:string,text:string,n_pages:int,n_chars:int,"
+        "error:string,_nbytes:int,bucket:int>")
+
+
 def test_multiwave_survives_static_overwrite_session(spark, documents, tmp_path):
     # a session NOT built by make_spark defaults to STATIC partition
     # overwrite, under which wave 2's path overwrite would wipe wave 1's
