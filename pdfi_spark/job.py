@@ -13,8 +13,10 @@ Production launch (north rule: spark-submit --py-files at scale):
 
 The job is kill-safe: rerunning with the same --output resumes from the
 bucket-commit manifest (see pipeline.run_pipeline). On a real cluster
---buckets should be ~2-4x total executor cores and --wave-size bounds
-the blast radius of a failure between commits.
+--buckets should be ~2-4x total executor cores. --wave-size bounds the
+blast radius of a failure between commits, and also the files a wave
+writes: each wave writes about one parquet file per bucket, so about
+--wave-size files.
 """
 from __future__ import annotations
 

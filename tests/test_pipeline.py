@@ -166,3 +166,64 @@ def test_null_payload_is_contained(spark):
     assert rows["u1"]["error"] == "TypeError: null payload"
     assert rows["u1"]["text"] is None
     assert rows["u2"]["error"] is not None  # malformed, contained too
+
+
+def test_wave_writes_one_file_per_bucket(spark, documents, tmp_path):
+    # every read task holds rows of every bucket; the wave's write must
+    # still leave one parquet file per bucket, not one per task
+    out = str(tmp_path / "files")
+    run_pipeline(spark, documents.repartition(4), out, n_buckets=4)
+    bucket_dirs = sorted(d for d in os.listdir(out) if d.startswith("bucket="))
+    assert bucket_dirs == [f"bucket={b}" for b in range(4)]
+    for d in bucket_dirs:
+        files = [f for f in os.listdir(os.path.join(out, d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    assert read_extracted(spark, out).count() == documents.count()
+
+
+def test_lineage_counts_match_the_output(spark, documents, tmp_path):
+    # a malformed PDF and a NULL payload make n_errors > 0; 256 buckets
+    # over ~500 documents leave some buckets empty. A NULL payload takes
+    # about a microsecond, which rounds to 0.000 ms; its url puts it in a
+    # bucket with three documents, so that bucket's p50 is a real one.
+    bad = spark.createDataFrame(
+        [("bad.pdf", b"%PDF-1.4 not really"), ("null-1.pdf", None)],
+        "url string, html binary",
+    )
+    corpus = documents.select("url", "html").unionByName(bad)
+    out = str(tmp_path / "lineage")
+    summary = run_pipeline(spark, corpus, out, n_buckets=256)
+    assert summary["n_errors"] == 2
+
+    expected = {
+        r["bucket"]: r for r in read_extracted(spark, out).groupBy("bucket").agg(
+            F.count("*").alias("n_docs"),
+            F.coalesce(F.sum("_nbytes"), F.lit(0)).alias("n_bytes"),
+            F.count("error").alias("n_errors"),
+        ).collect()
+    }
+    metrics = CheckpointStore(out).metrics()
+    assert sorted(m["bucket"] for m in metrics) == list(range(256))
+    assert any(m["n_docs"] == 0 for m in metrics)
+    for m in metrics:
+        want = expected.get(m["bucket"])
+        if want is None:
+            assert (m["n_docs"], m["n_bytes"], m["n_errors"]) == (0, 0, 0)
+            assert m["p50_ms"] is None and m["p99_ms"] is None
+            continue
+        assert (m["n_docs"], m["n_bytes"], m["n_errors"]) == (
+            want["n_docs"], want["n_bytes"], want["n_errors"])
+        assert 0 < m["p50_ms"] <= m["p99_ms"]
+
+
+def test_one_row_input_commits_every_bucket(spark, documents, tmp_path):
+    out = str(tmp_path / "one_row")
+    one = documents.select("url", "html").limit(1)
+    summary = run_pipeline(spark, one, out, n_buckets=16)
+    assert summary["n_docs"] == 1
+    metrics = CheckpointStore(out).metrics()
+    assert sorted(m["bucket"] for m in metrics) == list(range(16))
+    assert [m["n_docs"] for m in metrics].count(1) == 1
+    assert sum(m["n_docs"] for m in metrics) == 1
+    assert read_extracted(spark, out).count() == 1

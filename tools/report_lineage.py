@@ -1,7 +1,7 @@
 """Report the BASELINE.md protocol's secondary numbers (line 38):
 bytes/sec, error-row rate, and p50/p99 per-document latency — all from
 the checkpointed pipeline's per-bucket lineage manifest (the Observation
-metrics that ride on the write job itself; pipeline.py:257-295).
+metrics that ride on the write job itself; pipeline.py:304-382).
 
 Two runs over the mixed sf0.1 corpus (100k docs, local[32]):
 1. clean — throughput + latency percentiles, error rate must be 0;
