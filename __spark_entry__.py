@@ -347,7 +347,7 @@ def _html_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfi_spark.core.htmlgen import ORACLE_PER_BLOCK as HTML_ORACLE_PER_BLOCK
     from pdfi_spark.core.htmlgen import build_html
     from pdfi_spark.ops.webtext import strip_boilerplate
-    from pdfi_spark.streaming import scratch_dir
+    from pdfi_spark.streaming import run_available_now, scratch_dir
 
     base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
@@ -369,17 +369,10 @@ def _html_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages.write.mode("overwrite").parquet(input_dir)
 
     stream = spark.readStream.schema("url string, html binary").parquet(input_dir)
-    stripped = strip_boilerplate(stream)
-    name = f"html_streaming_{uuid.uuid4().hex[:8]}"
-    query = (
-        stripped.writeStream.queryName(name).format("memory")
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="pdfi_html_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).select(
+    return run_available_now(
+        strip_boilerplate(stream), f"html_streaming_{uuid.uuid4().hex[:8]}",
+        "append", "pdfi_html_ckpt_",
+    ).select(
         F.col("url").cast("long").alias("doc_id"), "main_text"
     )
 
@@ -395,7 +388,7 @@ def _warc_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfi_spark.core.htmlgen import build_html
     from pdfi_spark.core.warc import build_capture_records, gzip_member
     from pdfi_spark.ops.webtext import read_warc_pages, strip_boilerplate
-    from pdfi_spark.streaming import scratch_dir
+    from pdfi_spark.streaming import run_available_now, scratch_dir
 
     base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
@@ -426,16 +419,10 @@ def _warc_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_dir
     )
     stripped = strip_boilerplate(read_warc_pages(stream), page_col="page")
-    name = f"warc_streaming_{uuid.uuid4().hex[:8]}"
-    query = (
-        stripped.writeStream.queryName(name).format("memory")
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="pdfi_warc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).select(
+    return run_available_now(
+        stripped, f"warc_streaming_{uuid.uuid4().hex[:8]}", "append",
+        "pdfi_warc_ckpt_",
+    ).select(
         F.replace(
             F.col("url"), F.lit("https://example.org/page/"), F.lit("")
         ).cast("long").alias("doc_id"),
@@ -449,25 +436,15 @@ def _extract_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     available-now pass (same oracle as the batch path)."""
     import uuid
 
-    from pdfi_spark.streaming import scratch_dir
+    from pdfi_spark.streaming import extract_stream, scratch_dir
 
     docs = build_documents_with_id(spark, sf_dir, "flate", per_block=ORACLE_PER_BLOCK)
     input_dir = scratch_dir(prefix="pdfi_stream_q_")
     docs.select(F.col("doc_id").cast("string").alias("url"), "html") \
         .write.mode("overwrite").parquet(input_dir)
-
-    stream = spark.readStream.schema("url string, html binary").parquet(input_dir)
-    extracted = extract_text(stream, payload_col="html")
-    name = f"extract_streaming_{uuid.uuid4().hex[:8]}"
-    query = (
-        extracted.writeStream.queryName(name).format("memory")
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="pdfi_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).select(
+    return extract_stream(
+        spark, input_dir, query_name=f"extract_streaming_{uuid.uuid4().hex[:8]}"
+    ).select(
         F.col("url").cast("long").alias("doc_id"), "text"
     )
 
@@ -693,7 +670,7 @@ from pdfi_spark.ops.dedup import (
 
 def _minhash128_cte() -> str:
     """CTE chain ending in perms(doc_id, p0..p127): the 128-permutation
-    MinHash, in lockstep with ops.dedup._minhash128_sig — one md5 per
+    MinHash, in lockstep with ops.dedup._minhash128_artifacts — one md5 per
     distinct word sliced into four 32-bit lanes, then the universal-hash
     coefficients REGENERATED from the same seeded _minhash128_params()
     so both engines fold identical (a*h+b) mod P arithmetic (exact in

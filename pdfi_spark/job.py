@@ -11,6 +11,11 @@ Production launch (north rule: spark-submit --py-files at scale):
         --output <extracted parquet/Iceberg path> \
         --run-id run42 --buckets 4096 --wave-size 64
 
+The workers import pdfi_spark from the zip's path on the submitting
+host (``make_spark`` puts it on their PYTHONPATH), so on a cluster the
+zip must sit at that path on every worker host, or the cluster manager
+must ship it (YARN puts --py-files on the executors' PYTHONPATH).
+
 The job is kill-safe: rerunning with the same --output resumes from the
 bucket-commit manifest (see pipeline.run_pipeline). On a real cluster
 --buckets should be ~2-4x total executor cores. --wave-size bounds the

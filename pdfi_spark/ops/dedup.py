@@ -60,12 +60,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_fanned(spark, f"{sf_dir}/documents.parquet")
 
 
-def _hash32(col):
-    """First 8 hex digits of md5 as an unsigned 32-bit value in a long —
-    reproducible in DuckDB as ('0x' || substr(md5(x),1,8))::BIGINT."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on a 5-word prefix key: one hash-aggregate shuffle."""
     docs = _docs(spark, sf_dir)
@@ -75,10 +69,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dedup_key")
         .agg(F.count("*").alias("n_dups"), F.min("doc_id").alias("keep_id"))
     )
-
-
-def _doc_words(docs: DataFrame) -> DataFrame:
-    return docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,54 +123,42 @@ def minhash_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash128_sig_hof(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig: array<long>[128]) — the 128-permutation signature as
-    a NARROW zero-exchange per-row fold, still ONE md5 per distinct word:
-    the nested transform materializes each word's digest once and slices
-    it into the four 32-bit base lanes; the fold then runs all 128
-    universal-hash lanes ((a*h+b) mod P over the lane picked per
-    permutation) as a zip_with against a LITERAL params array (built once
-    at plan time). Per word that is 1 hash + ~384 integer ops — the hash
-    stays the dominant CPU term, so 32x more permutations than
-    minhash_signatures costs far less than 32x. The signature never
-    leaves the row (no explode shuffle: the same 10^15-row-exchange
-    argument as minhash_signatures); the fold output is projected in a
-    SEPARATE select, which Catalyst keeps separate because
-    CollapseProject refuses to duplicate non-cheap producer
-    expressions. Single-evaluation is asserted in tests/test_plans.py."""
-    words = F.array_distinct(F.split("text", " "))
-    lanes = F.transform(
-        F.transform(words, F.md5),
-        lambda hx: F.array(*[
-            F.conv(hx.substr(off, 8), 16, 10).cast("long")
-            for off in MINHASH_LANE_OFFSETS
-        ]),
+def _batch_vocab(words_per_doc: list[list[str]]):
+    """The batch vocabulary of an Arrow batch's per-doc word lists:
+    (vocab, widx, starts). ``vocab`` maps each BATCH-distinct word to its
+    row, in first-occurrence order; ``widx`` is the vocab row of every
+    word occurrence, docs concatenated; ``starts`` are the per-doc
+    segment offsets into ``widx`` for ``np.<ufunc>.reduceat``. Real
+    corpora share vocabulary across documents, so a fold hashes and
+    expands each vocab row once and gathers it with ``widx`` — per-word
+    results are identical, so signatures stay bit-for-bit unchanged
+    (pinned against the HOF twins in test_dedup_clusters.py). Every doc
+    holds at least one word (``split`` yields ``[""]`` for ""), so no
+    segment is empty."""
+    import numpy as np
+
+    vocab: dict[str, int] = {}
+    setdefault = vocab.setdefault
+    widx = np.asarray(
+        [setdefault(w, len(vocab)) for ws in words_per_doc for w in ws],
+        dtype=np.int64,
     )
-    params = F.array(*[
-        F.struct(
-            F.lit(a).cast("long").alias("a"),
-            F.lit(b).cast("long").alias("b"),
-            F.lit(lane + 1).alias("li"),
-        )
-        for a, b, lane in _minhash128_params()
-    ])
-    init = F.array_repeat(
-        F.lit(MINHASH128_P).cast("long"), MINHASH128_PERMS
-    )
-    mins = F.aggregate(
-        lanes,
-        init,
-        lambda acc, lv: F.zip_with(
-            acc,
-            params,
-            lambda m, p: F.least(
-                m,
-                (p["a"] * F.element_at(lv, p["li"]) + p["b"])
-                % F.lit(MINHASH128_P).cast("long"),
-            ),
-        ),
-    )
-    return docs.select("doc_id", mins.alias("sig"))
+    counts = np.asarray([len(ws) for ws in words_per_doc])
+    starts = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=starts[1:])
+    return vocab, widx, starts
+
+
+def _shingle_lists(words_per_doc, n: int) -> list[list[str]]:
+    """Distinct word n-gram shingles per doc over the RAW word sequence,
+    in first-occurrence order — the same list as the ``_shingles``
+    expression (a doc with fewer than n words gets [])."""
+    return [
+        list(dict.fromkeys(
+            " ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)
+        ))
+        for ws in words_per_doc
+    ]
 
 
 def _minhash128_artifacts(docs: DataFrame, with_words: bool = False,
@@ -191,16 +169,18 @@ def _minhash128_artifacts(docs: DataFrame, with_words: bool = False,
     distinct word set (`words`, for true-Jaccard audits) and the
     distinct n-gram shingles (`shingles`, for pair verification).
 
-    Signature math is the bit-identical numpy twin of the HOF fold in
-    ``_minhash128_sig_hof``: Catalyst higher-order functions never
-    enter whole-stage codegen (every lambda element is interpreted, so
-    the 128-lane fold costs ~8x the 4-lane op for 32x the permutations
-    — measured; CLAUDE.md). Here all words of an Arrow batch are hashed
-    in one hashlib loop (one md5 per distinct word), digests framed as
-    a (W,4) big-endian uint32 lane matrix (exactly the hex substrings
-    at offsets 1/9/17/25), expanded to (W,128) by column gather, and
-    segment-reduced per doc with np.minimum.reduceat; a_i*h+b_i < 2^63
-    stays exact in int64 (same ANSI-safety argument as the JVM side).
+    Signature math is the bit-identical numpy twin of the HOF fold
+    ``minhash128_sig_hof`` in tests/reference_folds.py: Catalyst
+    higher-order functions never enter whole-stage codegen (every
+    lambda element is interpreted, so the 128-lane fold costs ~8x the
+    4-lane op for 32x the permutations — measured; CLAUDE.md). Here the
+    batch vocabulary (``_batch_vocab``) is hashed in one hashlib loop
+    (one md5 per distinct word), digests framed as a (V,4) big-endian
+    uint32 lane matrix (exactly the hex substrings at offsets
+    1/9/17/25), expanded to (V,128) by column gather, gathered per word
+    and segment-reduced per doc with np.minimum.reduceat; a_i*h+b_i <
+    2^63 stays exact in int64 (same ANSI-safety argument as the JVM
+    side).
 
     The optional columns exist so downstream consumers scan the corpus
     ONCE: dedup_clusters_128 previously ran a second scan+fold for
@@ -231,41 +211,19 @@ def _minhash128_artifacts(docs: DataFrame, with_words: bool = False,
             words_per_doc = [
                 list(dict.fromkeys(ws)) for ws in raw_per_doc
             ]
-            counts = np.asarray([len(w) for w in words_per_doc])
-            # hash each BATCH-distinct word once and gather: real corpora
-            # share vocabulary across documents, so the md5 calls and the
-            # (a*h+b) mod P lane expansion both collapse from
-            # sum(per-doc distinct words) rows to batch-vocabulary rows —
-            # per-word results are identical, so signatures are
-            # bit-for-bit unchanged (pinned against the HOF fold in
-            # test_dedup_clusters.py)
-            vocab: dict[str, int] = {}
-            setdefault = vocab.setdefault
-            widx = [
-                setdefault(w, len(vocab))
-                for ws in words_per_doc for w in ws
-            ]
+            vocab, widx, starts = _batch_vocab(words_per_doc)
             digests = b"".join(
                 md5(w.encode("utf-8")).digest() for w in vocab
             )
             # digest bytes [4i,4i+4) big-endian == hex[8i:8i+8] parsed
             lanes = np.frombuffer(digests, dtype=">u4").reshape(-1, 4)
             vals_u = (lanes.astype(np.int64)[:, IDX] * A + B) % P
-            vals = vals_u[np.asarray(widx, dtype=np.int64)]
-            starts = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=starts[1:])
-            mins = np.minimum.reduceat(vals, starts, axis=0)
+            mins = np.minimum.reduceat(vals_u[widx], starts, axis=0)
             out = {"doc_id": batch["doc_id"], "sig": list(mins)}
             if with_words:
                 out["words"] = words_per_doc
             if with_shingles:
-                out["shingles"] = [
-                    list(dict.fromkeys(
-                        " ".join(ws[i:i + shingle_n])
-                        for i in range(len(ws) - shingle_n + 1)
-                    ))
-                    for ws in raw_per_doc
-                ]
+                out["shingles"] = _shingle_lists(raw_per_doc, shingle_n)
             yield pd.DataFrame(out)
 
     schema = "doc_id long, sig array<long>"
@@ -276,24 +234,12 @@ def _minhash128_artifacts(docs: DataFrame, with_words: bool = False,
     return docs.select("doc_id", "text").mapInPandas(fold, schema=schema)
 
 
-def _minhash128_sig_np(docs: DataFrame) -> DataFrame:
-    """Signature-only view of the fused artifacts pass (the default
-    _minhash128_sig)."""
-    return _minhash128_artifacts(docs)
-
-
-# default signature path: the vectorized variant (bit-identical to the
-# HOF fold — tests/test_dedup_clusters.py compares them lane-for-lane;
-# tools/bench_minhash_udf.py holds the measured ratio)
-_minhash128_sig = _minhash128_sig_np
-
-
 def minhash128_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Digest view of the 128-perm signature: (doc_id, sig_md5) where
     sig_md5 = md5 of the comma-joined lane minima — 2 columns instead of
     128, but the value hash still pins every lane bit-for-bit against
     the DuckDB twin."""
-    sig = _minhash128_sig(_docs(spark, sf_dir))
+    sig = _minhash128_artifacts(_docs(spark, sf_dir))
     joined = F.concat_ws(
         ",", F.transform("sig", lambda x: x.cast("string"))
     )
@@ -320,7 +266,7 @@ def _lsh128_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     The signature is localCheckpoint'ed before banding for the same
     subtree-reuse reason as _lsh_members: downstream self-joins would
     otherwise re-run the 128-lane fold per join side."""
-    sig = _minhash128_sig(_docs(spark, sf_dir)).localCheckpoint(eager=True)
+    sig = _minhash128_artifacts(_docs(spark, sf_dir)).localCheckpoint(eager=True)
     return (
         sig.select("doc_id", F.explode(_minhash128_bands()).alias("bb"))
         .select("doc_id", F.col("bb.band").alias("band"),
@@ -334,7 +280,7 @@ def minhash128_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, bucket) — the banding explode multiplies rows 16x but each
     row is ~50 bytes, and at 10^12 docs the exchange is keyed and
     combiner-friendly (map-side partial counts)."""
-    sig = _minhash128_sig(_docs(spark, sf_dir))
+    sig = _minhash128_artifacts(_docs(spark, sf_dir))
     return (
         sig.select("doc_id", F.explode(_minhash128_bands()).alias("bb"))
         .select("doc_id", F.col("bb.band").alias("band"),
@@ -393,15 +339,16 @@ def minhash128_jaccard_estimates(spark: SparkSession,
 
 
 def _simhash_np(docs: DataFrame) -> DataFrame:
-    """Vectorized numpy twin of the HOF SimHash fold (the default —
-    same precedent as _minhash128_sig_np: Catalyst HOF lambdas are
-    interpreted per element, so the 32-lane zip_with costs ~32
-    interpreter steps per WORD; here a batch's distinct words hash once
-    each, the +-1 bit matrix expands once per distinct word, and the
-    per-doc accumulation is one np.add.reduceat). All-integer math in
-    the identical bit layout (first 4 md5 bytes big-endian == the
-    conv(substr(md5,1,8)) lane), so the result is bit-identical to the
-    HOF fold — pinned lane-for-lane in tests/test_dedup_clusters.py."""
+    """Vectorized numpy SimHash fold (the default — same precedent as
+    _minhash128_artifacts: Catalyst HOF lambdas are interpreted per
+    element, so the 32-lane zip_with costs ~32 interpreter steps per
+    WORD; here the batch vocabulary (``_batch_vocab``) hashes once per
+    distinct word, the +-1 bit matrix expands once per distinct word,
+    and the per-doc accumulation is one np.add.reduceat). All-integer
+    math in the identical bit layout (first 4 md5 bytes big-endian ==
+    the conv(substr(md5,1,8)) lane), so the result is bit-identical to
+    the HOF fold ``simhash_hof`` in tests/reference_folds.py — pinned
+    lane-for-lane in tests/test_dedup_clusters.py."""
     import numpy as np
     import pandas as pd
 
@@ -412,24 +359,16 @@ def _simhash_np(docs: DataFrame) -> DataFrame:
         powers = 1 << np.arange(SIMHASH_BITS, dtype=np.int64)
         shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         for batch in iterator:
-            words_per_doc = [str(t).split(" ") for t in batch["text"]]
-            counts = np.asarray([len(ws) for ws in words_per_doc])
-            vocab: dict[str, int] = {}
-            setdefault = vocab.setdefault
-            widx = [
-                setdefault(w, len(vocab))
-                for ws in words_per_doc for w in ws
-            ]
+            vocab, widx, starts = _batch_vocab(
+                [str(t).split(" ") for t in batch["text"]]
+            )
             digests = b"".join(
                 md5(w.encode("utf-8")).digest()[:4] for w in vocab
             )
             h = np.frombuffer(digests, dtype=">u4").astype(np.int64)
             # (vocab, 32) of +-1: bit b set -> +1 else -1
             bits = (((h[:, None] >> shifts) & 1) * 2 - 1)
-            vals = bits[np.asarray(widx, dtype=np.int64)]
-            starts = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=starts[1:])
-            acc = np.add.reduceat(vals, starts, axis=0)
+            acc = np.add.reduceat(bits[widx], starts, axis=0)
             sim = ((acc > 0) * powers).sum(axis=1)
             yield pd.DataFrame({"doc_id": batch["doc_id"], "simhash": sim})
 
@@ -439,47 +378,8 @@ def _simhash_np(docs: DataFrame) -> DataFrame:
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash with word-frequency weights — vectorized numpy
-    default (see _simhash_np); the Catalyst-HOF fold below remains as
-    the cross-check twin."""
+    """32-bit SimHash with word-frequency weights (see _simhash_np)."""
     return _simhash_np(_docs(spark, sf_dir))
-
-
-def _simhash_hof(docs: DataFrame) -> DataFrame:
-    """32-bit SimHash as a NARROW per-row Catalyst fold: hash each word
-    once (transform), accumulate the 32 per-bit +-1 counts with
-    aggregate/zip_with, recombine sign bits — all inside the row, no
-    explode shuffle (same 10^15-row-exchange argument as
-    minhash_signatures). Kept as the JVM cross-check for _simhash_np."""
-    hashes = F.transform(F.split("text", " "), lambda w: _hash32(w))
-    # bit masks as a LITERAL array: the old sequence+pow formulation
-    # recomputed pow(2.0, b) per word per bit — 32 pow calls/word of pure
-    # waste; a literal array is built once at plan time
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)])
-    bit_counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                masks,
-                lambda mask: F.when(h.bitwiseAND(mask) != 0, F.lit(1))
-                .otherwise(F.lit(-1))
-                .cast("long"),
-            ),
-            lambda a, d: a + d,
-        ),
-    )
-    powers = F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)])
-    sim = F.aggregate(
-        F.zip_with(
-            bit_counts, powers,
-            lambda c, p: F.when(c > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return docs.select("doc_id", sim.alias("simhash"))
 
 
 SIMHASH_BANDS = 4
@@ -552,22 +452,18 @@ def _shingles(col="text", n=3):
 
 def _shingles_df(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingles): distinct word n-gram shingles built in
-    Python per Arrow batch — the same first-occurrence-distinct set as
-    the _shingles HOF expression (pinned element-for-element in
-    tests/test_dedup_clusters.py), without the per-window interpreted
-    concat_ws/slice lambdas (the HOF fold never enters whole-stage
-    codegen; one Python join per window is measurably cheaper). Callers
-    must pre-filter docs with >= n words, exactly like _shingles."""
+    Python per Arrow batch (``_shingle_lists``) — the same
+    first-occurrence-distinct set as the _shingles HOF expression
+    (pinned element-for-element in tests/test_dedup_clusters.py),
+    without the per-window interpreted concat_ws/slice lambdas (the HOF
+    fold never enters whole-stage codegen; one Python join per window
+    is measurably cheaper). Callers must pre-filter docs with >= n
+    words, exactly like _shingles."""
     import pandas as pd
 
     def fold(iterator):
         for batch in iterator:
-            sh = [
-                list(dict.fromkeys(
-                    " ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)
-                ))
-                for ws in (str(t).split(" ") for t in batch["text"])
-            ]
+            sh = _shingle_lists([str(t).split(" ") for t in batch["text"]], n)
             yield pd.DataFrame({"doc_id": batch["doc_id"], "shingles": sh})
 
     return docs.select("doc_id", "text").mapInPandas(

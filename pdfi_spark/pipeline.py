@@ -62,22 +62,25 @@ METRICS_COLUMNS = [
 # of PDFs fits comfortably in the Python worker (SURVEY.md §4.2).
 ARROW_BATCH_SIZE = 64  # default for multi-MB real PDFs; bench corpora override via SQL conf
 
+# the directory (a checkout) or zip (a --py-files archive) that holds the
+# imported pdfi_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
-               shuffle_partitions: int = 32,
-               advisory_partition_size: str | None = None) -> SparkSession:
+               shuffle_partitions: int = 32) -> SparkSession:
     """Session factory with the pipeline's physical knobs set.
 
-    ``advisory_partition_size`` sizes AQE's post-shuffle partition
-    coalescing BY BYTES instead of pinning partition count to the core
-    count (``parallelismFirst=false`` below — the tuning-guide-
-    recommended setting): iterative operators (connected components,
-    PageRank/HITS rounds) produce many near-empty shuffles whose 32
-    scheduled tasks each are pure overhead, while data-bearing shuffles
-    keep sub-advisory-sized partitions merged. Default 8 MB suits a
-    single machine (measured best across the iterative + windowed op
-    mix); a production cluster raises it to the guide's 128-256 MB via
-    the env override ``PDFI_SPARK_ADVISORY_PARTITION``.
+    AQE coalesces post-shuffle partitions BY BYTES instead of pinning
+    partition count to the core count (``parallelismFirst=false`` below
+    — the tuning-guide-recommended setting): iterative operators
+    (connected components, PageRank/HITS rounds) produce many near-empty
+    shuffles whose 32 scheduled tasks each are pure overhead, while
+    data-bearing shuffles keep sub-advisory-sized partitions merged. The
+    advisory size defaults to 8 MB, which suits a single machine
+    (measured best across the iterative + windowed op mix); a production
+    cluster raises it to the guide's 128-256 MB through the environment
+    variable ``PDFI_SPARK_ADVISORY_PARTITION``.
 
     The Python worker daemon is always ``pdfi_spark._worker_daemon``.
     PySpark's worker calls ``importlib.invalidate_caches()`` at the start
@@ -90,18 +93,23 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
     daemon re-reads an archive only when its mtime or size changed.
     Sessions not built here (a bare ``SparkSession.builder``, the
     driver's ``__spark_entry__`` session) keep paying the per-task cost.
-    Workers must be able to import ``pdfi_spark`` when the daemon starts
-    (from the working directory, ``PYTHONPATH`` or an installed package),
-    as they must to run its UDFs; otherwise every Python task fails with
-    an error naming ``pdfi_spark._worker_daemon`` and ``No module named
-    'pdfi_spark'``.
+
+    The daemon is imported before a task adds ``--py-files`` to
+    ``sys.path``, so the session prepends ``PACKAGE_ROOT`` (the directory
+    or zip this ``pdfi_spark`` was imported from) to the ``PYTHONPATH``
+    of its Python workers: the ``spark.executorEnv.PYTHONPATH`` value
+    that PySpark hands every Python function and merges into the
+    daemon's environment. A launch therefore needs ``PACKAGE_ROOT`` at
+    the same path on every worker host: always true in local mode, and
+    on a cluster when the package zip or checkout sits at one shared
+    path. YARN also puts the shipped ``--py-files`` on that variable,
+    which covers its executors.
     """
-    advisory = (advisory_partition_size
-                or os.environ.get("PDFI_SPARK_ADVISORY_PARTITION", "8m"))
+    advisory = os.environ.get("PDFI_SPARK_ADVISORY_PARTITION", "8m")
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    return (
+    spark = (
         builder
         # measured sweet spot for local-mode extraction on this box: the
         # 1g default GC-thrashes under 32 concurrent binary Arrow batches,
@@ -126,6 +134,13 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
         .config("spark.python.daemon.module", "pdfi_spark._worker_daemon")
         .getOrCreate()
     )
+    # prepend, never replace: YARN ships --py-files through this same
+    # variable (spark.executorEnv.PYTHONPATH)
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])
+    return spark
 
 
 def read_pdf_files(spark: SparkSession, path: str,

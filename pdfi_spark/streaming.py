@@ -33,6 +33,26 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
+def run_available_now(df: DataFrame, query_name: str, output_mode: str,
+                      checkpoint_prefix: str,
+                      checkpoint_dir: str | None = None) -> DataFrame:
+    """Run the streaming frame ``df`` as one available-now pass into a
+    memory sink named ``query_name`` and return the sink's table. The
+    checkpoint goes to ``checkpoint_dir``, or else to a fresh
+    self-cleaning ``scratch_dir`` with ``checkpoint_prefix``."""
+    (
+        df.writeStream.queryName(query_name)
+        .format("memory")
+        .outputMode(output_mode)
+        .option("checkpointLocation",
+                checkpoint_dir or scratch_dir(prefix=checkpoint_prefix))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(query_name)
+
+
 def extract_stream(spark: SparkSession, input_dir: str,
                    query_name: str = "extract_stream",
                    checkpoint_dir: str | None = None) -> DataFrame:
@@ -43,18 +63,10 @@ def extract_stream(spark: SparkSession, input_dir: str,
     makes the stream resume-exactly-once; here the memory sink keeps the
     result inspectable and the checkpoint is still exercised."""
     stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_dir)
-    extracted = extract_text(stream, payload_col="html")
-    checkpoint = checkpoint_dir or scratch_dir(prefix="pdfi_stream_ckpt_")
-    query = (
-        extracted.writeStream.queryName(query_name)
-        .format("memory")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        extract_text(stream, payload_col="html"), query_name, "append",
+        "pdfi_stream_ckpt_", checkpoint_dir,
     )
-    query.awaitTermination()
-    return spark.table(query_name)
 
 
 def windowed_event_counts(spark: SparkSession, sf_dir: str,
@@ -98,17 +110,9 @@ def windowed_event_counts(spark: SparkSession, sf_dir: str,
                 "sum_value",
             )
         )
-        checkpoint = scratch_dir(prefix="pdfi_stream_ckpt_")
-        query = (
-            agg.writeStream.queryName(query_name)
-            .format("memory")
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        return run_available_now(
+            agg, query_name, "complete", "pdfi_stream_ckpt_"
         )
-        query.awaitTermination()
-        return spark.table(query_name)
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -162,21 +166,13 @@ def streaming_dedup_state(spark: SparkSession, sf_dir: str,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    checkpoint = scratch_dir(prefix="pdfi_dedup_state_ckpt_")
-    query = (
-        updates.writeStream.queryName(query_name)
-        .format("memory")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    ledger = run_available_now(
+        updates, query_name, "update", "pdfi_dedup_state_ckpt_"
     )
-    query.awaitTermination()
     # the memory sink holds one row per key PER BATCH that touched it;
     # the final ledger row per key is the max count / min keep_id
     return (
-        spark.table(query_name)
-        .groupBy("dedup_key")
+        ledger.groupBy("dedup_key")
         .agg(F.max("n_dups").alias("n_dups"), F.min("keep_id").alias("keep_id"))
     )
 
@@ -232,20 +228,12 @@ def url_dedup_streaming(spark: SparkSession, sf_dir: str,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    checkpoint = scratch_dir(prefix="pdfi_url_dedup_ckpt_")
-    query = (
-        updates.writeStream.queryName(query_name)
-        .format("memory")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    ledger = run_available_now(
+        updates, query_name, "update", "pdfi_url_dedup_ckpt_"
     )
-    query.awaitTermination()
     # one row per key per touching batch -> final ledger row per key
     return (
-        spark.table(query_name)
-        .groupBy("canon_url")
+        ledger.groupBy("canon_url")
         .agg(F.max("n_docs").alias("n_docs"), F.min("keep_id").alias("keep_id"))
     )
 
@@ -326,18 +314,10 @@ def frontier_schedule_streaming(spark: SparkSession, sf_dir: str,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    checkpoint = scratch_dir(prefix="pdfi_frontier_ckpt_")
-    query = (
-        updates.writeStream.queryName(query_name)
-        .format("memory")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     # each doc is emitted exactly once (in the batch that delivered it)
-    return spark.table(query_name)
+    return run_available_now(
+        updates, query_name, "update", "pdfi_frontier_ckpt_"
+    )
 
 
 def session_window_events(spark: SparkSession, sf_dir: str,
@@ -376,17 +356,9 @@ def session_window_events(spark: SparkSession, sf_dir: str,
                 "first_event",
             )
         )
-        checkpoint = scratch_dir(prefix="pdfi_sesswin_ckpt_")
-        query = (
-            agg.writeStream.queryName(query_name)
-            .format("memory")
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        return run_available_now(
+            agg, query_name, "complete", "pdfi_sesswin_ckpt_"
         )
-        query.awaitTermination()
-        return spark.table(query_name)
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 

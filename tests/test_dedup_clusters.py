@@ -43,7 +43,7 @@ def test_minhash128_sketch_behavior(spark):
     from pdfi_spark.ops.dedup import (
         MINHASH128_BANDS,
         MINHASH128_PERMS,
-        _minhash128_sig,
+        _minhash128_artifacts,
     )
 
     base = " ".join(f"w{i}" for i in range(50))
@@ -52,7 +52,8 @@ def test_minhash128_sketch_behavior(spark):
     docs = spark.createDataFrame(
         [(0, base), (1, base), (2, near), (3, far)], "doc_id long, text string"
     )
-    sig = {r["doc_id"]: r["sig"] for r in _minhash128_sig(docs).collect()}
+    sig = {r["doc_id"]: r["sig"]
+           for r in _minhash128_artifacts(docs).collect()}
     assert all(len(s) == MINHASH128_PERMS for s in sig.values())
     assert sig[0] == sig[1]  # identical text -> identical signature
     agree_near = sum(a == b for a, b in zip(sig[0], sig[2]))
@@ -71,12 +72,14 @@ def test_minhash128_sketch_behavior(spark):
 
 
 def test_minhash128_numpy_fold_matches_hof_fold(spark):
-    """The vectorized numpy fold (the default _minhash128_sig) and the
+    """The vectorized numpy fold (_minhash128_artifacts) and the
     Catalyst-HOF fold are the SAME function: lane-for-lane identical on
     awkward inputs — empty string, repeated/duplicate words, consecutive
     spaces (split(' ') emits empty-string words), non-ASCII (md5 over
     UTF-8 bytes), and a single-word doc."""
-    from pdfi_spark.ops.dedup import _minhash128_sig_hof, _minhash128_sig_np
+    from reference_folds import minhash128_sig_hof
+
+    from pdfi_spark.ops.dedup import _minhash128_artifacts
 
     docs = spark.createDataFrame(
         [
@@ -90,9 +93,9 @@ def test_minhash128_numpy_fold_matches_hof_fold(spark):
         "doc_id long, text string",
     )
     hof = {r["doc_id"]: list(r["sig"])
-           for r in _minhash128_sig_hof(docs).collect()}
+           for r in minhash128_sig_hof(docs).collect()}
     np_ = {r["doc_id"]: list(r["sig"])
-           for r in _minhash128_sig_np(docs).collect()}
+           for r in _minhash128_artifacts(docs).collect()}
     assert hof == np_
 
 
@@ -101,7 +104,9 @@ def test_simhash_numpy_fold_matches_hof_fold(spark):
     fold are the SAME function — bit-identical on the same awkward
     inputs as the minhash twin (frequency weighting included: repeated
     words must tip sign bits exactly like the sequential fold)."""
-    from pdfi_spark.ops.dedup import _simhash_hof, _simhash_np
+    from reference_folds import simhash_hof
+
+    from pdfi_spark.ops.dedup import _simhash_np
 
     docs = spark.createDataFrame(
         [
@@ -114,7 +119,7 @@ def test_simhash_numpy_fold_matches_hof_fold(spark):
         ],
         "doc_id long, text string",
     )
-    hof = {r["doc_id"]: r["simhash"] for r in _simhash_hof(docs).collect()}
+    hof = {r["doc_id"]: r["simhash"] for r in simhash_hof(docs).collect()}
     np_ = {r["doc_id"]: r["simhash"] for r in _simhash_np(docs).collect()}
     assert hof == np_
 

@@ -62,9 +62,11 @@ def test_minhash128_hof_fold_one_md5_zero_exchanges(spark):
     # path) must still cost ONE md5 per distinct word: if CollapseProject
     # ever inlined the 128-lane fold into a downstream projection, the
     # count would multiply
-    from pdfi_spark.ops.dedup import _docs, _minhash128_sig_hof
+    from reference_folds import minhash128_sig_hof
 
-    plan = _plan(_minhash128_sig_hof(_docs(spark, SF)))
+    from pdfi_spark.ops.dedup import _docs
+
+    plan = _plan(minhash128_sig_hof(_docs(spark, SF)))
     assert _shuffles(plan) == 0
     assert plan.count("md5(") == 1, plan
 

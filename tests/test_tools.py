@@ -1,0 +1,77 @@
+"""The tools under tools/: the documented production launch built from
+``tools/make_pyfiles.py``, and the query names the tools take from
+``__spark_entry__.queries()``."""
+import importlib.util
+import os
+import subprocess
+import sys
+
+import pandas as pd
+import pyspark
+
+from pdfi_spark.core.pdfgen import build_pdf
+from pdfi_spark.pipeline import read_extracted
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SPARK_SUBMIT = os.path.join(os.path.dirname(pyspark.__file__), "bin",
+                            "spark-submit")
+
+
+def _tool(name: str):
+    spec = importlib.util.spec_from_file_location(
+        name, os.path.join(REPO, "tools", f"{name}.py"))
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_spark_submit_py_files_outside_checkout(spark, tmp_path):
+    """``spark-submit --py-files <zip> job.py`` run from a directory
+    outside the checkout, with no ``PYTHONPATH``, commits every document
+    exactly once (the workers' daemon must import ``pdfi_spark`` from the
+    zip)."""
+    zip_path = _tool("make_pyfiles").build(
+        str(tmp_path / "dist" / "pdfi_spark.zip"))
+    expected = {}
+    for i in range(24):
+        pdf, text = build_pdf(f"launch document {i} body", "simple")
+        expected[f"doc-{i}"] = (pdf, text)
+    input_path = str(tmp_path / "input.parquet")
+    pd.DataFrame({"url": list(expected),
+                  "html": [pdf for pdf, _ in expected.values()]}) \
+        .to_parquet(input_path)
+    output = str(tmp_path / "output")
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+
+    proc = subprocess.run(
+        [SPARK_SUBMIT, "--master", "local[2]", "--py-files", zip_path,
+         "--conf", "spark.ui.enabled=false",
+         os.path.join(REPO, "pdfi_spark", "job.py"),
+         "--input", input_path, "--output", output, "--buckets", "4"],
+        cwd=elsewhere, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+
+    got = read_extracted(spark, output).select("url", "text", "error") \
+        .toPandas()
+    assert sorted(got["url"]) == sorted(expected)
+    assert got["error"].isna().all()
+    assert dict(zip(got["url"], got["text"])) == {
+        url: text for url, (_, text) in expected.items()
+    }
+
+
+def test_tool_query_lists_resolve_in_registry():
+    """Every query ``dump_plans`` dumps is registered, and
+    ``bench_extra --all`` times exactly the registered queries."""
+    from __spark_entry__ import queries
+
+    registry = queries()
+    dump_plans = _tool("dump_plans")
+    assert [n for n, _ in dump_plans.CASES if n not in registry] == []
+    bench_extra = _tool("bench_extra")
+    assert bench_extra.selected(bench_extra.parse_args(["--all"])) \
+        == list(registry)

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Per-query noop-sink isolation bench (guide §1.4) — times any subset
-of the bench.py op queries without the full-run wall clock, so each
-optimization's before/after lands on the query it touched.
+of the registered queries (``__spark_entry__.queries()``) without the
+full-run wall clock, so each optimization's before/after lands on the
+query it touched.
 
 Usage:
     python tools/bench_extra.py q1 q2 ...      # named queries
-    python tools/bench_extra.py --all          # every op query
+    python tools/bench_extra.py --all          # every registered query
     python tools/bench_extra.py --trials 3 q1  # more trials
 
 Same methodology as bench.py: reads $SPARK_GRAFT_SF_DIR (default
@@ -23,92 +24,28 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdfi_spark import ops  # noqa: E402
+from __spark_entry__ import queries  # noqa: E402
 from pdfi_spark.pipeline import make_spark  # noqa: E402
 
-QUERIES = {
-    "dedup_exact": ops.dedup_exact,
-    "minhash_signatures": ops.minhash_signatures,
-    "minhash_lsh_buckets": ops.minhash_lsh_buckets,
-    "minhash128_signatures": ops.minhash128_signatures,
-    "minhash128_lsh_buckets": ops.minhash128_lsh_buckets,
-    "simhash": ops.simhash,
-    "ngram_jaccard": ops.ngram_jaccard_pairs,
-    "cosine_topk": ops.cosine_topk,
-    "cosine_adjacent": ops.cosine_adjacent_pairs,
-    "lsh_ann_buckets": ops.lsh_ann_buckets,
-    "ivf_cell_counts": ops.ivf_cell_counts,
-    "ivf_topk": ops.ivf_topk,
-    "lang_stopwords": ops.lang_stopword_counts,
-    "quality_scores": ops.quality_scores,
-    "token_counts": ops.token_counts,
-    "doc_fingerprint": ops.doc_fingerprint,
-    "media_metadata": ops.media_metadata,
-    "media_features": ops.media_features,
-    "dedup_clusters": ops.dedup_clusters,
-    "dedup_clusters_128": ops.dedup_clusters_128,
-    "embedding_neardup_topk": ops.embedding_neardup_topk,
-    "ivf_train_cells": ops.ivf_train_cells,
-    "nation_revenue_topk": ops.nation_revenue_topk,
-    "html_main_content": ops.html_main_content("boiler"),
-    "html_block_stats": ops.html_block_stats,
-    "link_graph_degrees": ops.link_graph_degrees,
-    "link_graph_pagerank": ops.link_graph_pagerank,
-    "link_graph_pagerank_dangling": ops.link_graph_pagerank_dangling,
-    "warc_extract": ops.warc_extract,
-    "wet_export": ops.wet_export,
-    "url_canonicalize": ops.url_canonicalize,
-    "url_dedup_counts": ops.url_dedup_counts,
-    "host_stats": ops.host_stats,
-    "robots_filter": ops.robots_filter,
-    "minhash128_jaccard_estimates": ops.minhash128_jaccard_estimates,
-    "lang_balance_sample": ops.lang_balance_sample,
-    "tfidf_top_terms": ops.tfidf_top_terms,
-    "unigram_surprisal": ops.unigram_surprisal,
-    "anchor_text_index": ops.anchor_text_index,
-    "frontier_schedule": ops.frontier_schedule,
-    "paragraph_dedup": ops.paragraph_dedup,
-    "pack_training_shards": ops.pack_training_shards,
-    "training_shuffle_manifest": ops.training_shuffle_manifest,
-    "semdedup": ops.semdedup,
-    "bigram_surprisal": ops.bigram_surprisal,
-    "crawl_diff": ops.crawl_diff,
-    "incremental_content_dedup": ops.incremental_content_dedup,
-    "exact_substring_dup": ops.exact_substring_dup,
-    "exact_substring_excise": ops.exact_substring_excise,
-    "bm25_topk": ops.bm25_topk,
-    "surprisal_buckets": ops.surprisal_buckets,
-    "link_graph_hits": ops.link_graph_hits,
-    "cdx_index": ops.cdx_index,
-    "pq_codes": ops.pq_codes,
-    "pq_topk": ops.pq_topk,
-    "pq_topk_refine": ops.pq_topk_refine,
-    "host_url_hll": ops.host_url_hll,
-    "cms_heavy_hitters": ops.cms_heavy_hitters,
-    "bloom_dedup_gate": ops.bloom_dedup_gate,
-    "host_cap_sample": ops.host_cap_sample,
-    "pmi_collocations": ops.pmi_collocations,
-    "weighted_sample": ops.weighted_sample,
-    "length_histogram_quantiles": ops.length_histogram_quantiles,
-    "q1_pricing_summary": ops.q1_pricing_summary,
-    "q3_shipping_priority": ops.q3_shipping_priority,
-    "q5_local_supplier_volume": ops.q5_local_supplier_volume,
-    "q14_promo_revenue": ops.q14_promo_revenue,
-    "q4_order_priority": ops.q4_order_priority,
-    "q18_large_volume_customer": ops.q18_large_volume_customer,
-    "link_graph_triangles": ops.link_graph_triangles,
-}
 
-
-def main() -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--trials", type=int, default=2)
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
-    names = list(QUERIES) if args.all else args.names
-    unknown = [n for n in names if n not in QUERIES]
+
+def selected(args: argparse.Namespace) -> list[str]:
+    """The query names to time: every registered query for ``--all``."""
+    return list(queries()) if args.all else args.names
+
+
+def main() -> int:
+    args = parse_args()
+    names = selected(args)
+    registry = queries()
+    unknown = [n for n in names if n not in registry]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
@@ -125,7 +62,7 @@ def main() -> int:
         for name in names:
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.mode("overwrite") \
+            registry[name](spark, sf_dir).write.mode("overwrite") \
                 .format("noop").save()
             dt = round(time.time() - t0, 3)
             if name not in timings or dt < timings[name]:

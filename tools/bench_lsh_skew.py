@@ -54,8 +54,8 @@ def main() -> int:
         MAX_LSH_BUCKET,
         MINHASH128_BANDS,
         _docs,
+        _minhash128_artifacts,
         _minhash128_bands,
-        _minhash128_sig,
         _pairs_from_members,
     )
     from pdfi_spark.pipeline import make_spark
@@ -74,7 +74,7 @@ def main() -> int:
     planted = spark.createDataFrame(planted_rows, "doc_id long, text string")
     docs = base.unionAll(planted).repartition(32).localCheckpoint(eager=True)
 
-    sig = _minhash128_sig(docs).localCheckpoint(eager=True)
+    sig = _minhash128_artifacts(docs).localCheckpoint(eager=True)
     members = (
         sig.select("doc_id", F.explode(_minhash128_bands()).alias("bb"))
         .select("doc_id", F.col("bb.band").alias("band"),
