@@ -20,6 +20,7 @@ from pdfi_spark import ops
 from pdfi_spark.core.api import read_pdf
 from pdfi_spark.core.pdfgen import ORACLE_EXPECTED_SQL, ORACLE_PER_BLOCK, build_pdf
 from pdfi_spark.datagen import build_documents, build_documents_with_id
+from pdfi_spark.ops._scan import read
 from pdfi_spark.ops.dedup import MINHASH_LANE_OFFSETS, SIMHASH_BITS
 from pdfi_spark.ops.similarity import LSH_PLANES
 from pdfi_spark.ops.textstats import BPE_ISH_RE, EN_STOPWORDS
@@ -104,7 +105,7 @@ def _extract_errors_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted = extract_text(payload, payload_col="html")
     return extracted.agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
+        F.count_if(F.col("error").isNotNull()).alias("n_errors"),
     )
 
 
@@ -256,7 +257,7 @@ def _layout_lines_window_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfi_spark.core.api import extract_spans
     from pdfi_spark.core.pdfgen import build_pdf
 
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
     def spans_batches(iterator):
         for batch in iterator:
@@ -319,7 +320,7 @@ def _pipeline_resume_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every PDF per wave and again on resume (~3 full passes)
     input_dir = scratch_dir(prefix="pdfi_resume_in_")
     payload.write.mode("overwrite").parquet(input_dir)
-    payload = spark.read.parquet(input_dir)
+    payload = read(spark, input_dir)
     out = scratch_dir(prefix="pdfi_resume_q_")
     run_pipeline(spark, payload, out, n_buckets=4, wave_size=2)
     store = CheckpointStore(out)
@@ -349,7 +350,7 @@ def _html_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfi_spark.ops.webtext import strip_boilerplate
     from pdfi_spark.streaming import run_available_now, scratch_dir
 
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
     def gen(iterator):
         for batch in iterator:
@@ -390,7 +391,7 @@ def _warc_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfi_spark.ops.webtext import read_warc_pages, strip_boilerplate
     from pdfi_spark.streaming import run_available_now, scratch_dir
 
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
     def gen(iterator):
         for batch in iterator:

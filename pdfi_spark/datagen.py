@@ -47,7 +47,9 @@ def build_documents(spark: SparkSession, sf_dir: str, recipe: str = "flate",
     (deterministic doc_id = id*k+rep) to scale bench corpora beyond the
     driver's testdata row counts.
     """
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text", "lang")
+    from .ops._scan import read
+
+    base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text", "lang")
     if replicate > 1:
         base = (
             base.withColumn(
@@ -98,7 +100,9 @@ def build_documents(spark: SparkSession, sf_dir: str, recipe: str = "flate",
 def build_documents_with_id(spark: SparkSession, sf_dir: str, recipe: str,
                             per_block: int = ORACLE_PER_BLOCK) -> DataFrame:
     """Like build_documents but keyed by doc_id (for oracle joins)."""
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    from .ops._scan import read
+
+    base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
     def generate(iterator):
         for batch in iterator:

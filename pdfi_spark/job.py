@@ -52,6 +52,8 @@ def main() -> int:
                      "binaryfile (that source always emits 'html')")
         documents = read_pdf_files(spark, args.input)
     else:
+        # the production input: a directory or remote prefix of many files,
+        # whose schema Spark infers once per run (no footer to read locally)
         documents = spark.read.parquet(args.input)
     summary = run_pipeline(
         spark, documents, args.output, run_id=args.run_id,

@@ -1,101 +1,122 @@
-"""Scan fan-out for under-split inputs.
+"""The one batch parquet reader: ``read(spark, path, fan=...)``.
 
-A parquet file is splittable only at row-group granularity, so a
-single-file single-row-group table scans as ONE task no matter how many
-cores the cluster has — and every narrow stage above it (Arrow UDF
-passes, per-row expression folds, map-side partial aggregates) runs
-serially until the first exchange. That is the canonical "unsplittable
-input" skew case (spark_optimization_guide §2.5: "one huge unsplittable
-file ... repartition immediately after the read").
+Every batch parquet read in ``pdfi_spark`` and ``__spark_entry__`` goes
+through ``read`` (``tests/test_tools.py`` greps for others; ``job.py``'s
+production input is the one stated exception).
 
-``read_parquet_fanned`` reads a parquet path and, ONLY when the scan
-plans fewer splits than the cluster's parallelism, round-robin
-repartitions right above the scan. At production scale (many files /
-many row groups / bucketed layouts) the scan already yields >= cores
-splits and this is a NO-OP — the repartition never appears in the plan,
-so the zero-extra-exchange shape of every operator is preserved exactly
-where it matters. Round-robin repartition is deterministic under task
-retries (sort-before-repartition is on by default, SPARK-23207), and
-column pruning / filter pushdown both traverse a Repartition node, so
-PushedFilters/ReadSchema still reach the scan.
+**Schema, from the footer.** ``spark.read.parquet(path)`` with no schema
+runs a Spark job to read the footer while the query is still being
+built: one job and 70-105 ms per read. pyarrow reads the same footer in
+this process in under 1 ms, so ``read`` hands Spark the schema: for a
+single local file, the footer's (``footer_schema``, converted as Spark's
+inference converts it); for a ``run_pipeline`` output (a directory with
+the ``_metrics.jsonl`` manifest), ``pipeline.OUTPUT_SCHEMA``. Anything
+else (a directory, a glob, a remote URI) keeps Spark's inference: its
+files need not share one footer. Plans, PushedFilters, ReadSchema and
+results are unchanged; only the job is gone.
 
-The split count is planning metadata (file listing), memoized per
-(session, path) so repeated reads inside one bench process don't re-plan
-the probe; no data or results are ever cached.
+**Fan-out (``fan=``).** A parquet file splits only at row-group
+granularity, so a single-row-group file scans as ONE task however many
+cores there are, and every narrow stage above it runs serially until
+the first exchange (spark_optimization_guide §2.5: "one huge
+unsplittable file ... repartition immediately after the read").
+
+- ``"raw"``: the plain scan.
+- ``"fanned"``: a round-robin repartition right above the scan, ONLY
+  when the scan plans fewer splits than the cluster's parallelism (never
+  at production split counts). It is deterministic under retries
+  (SPARK-23207); pruning and filter pushdown traverse it.
+- ``"auto"``: raw below ``MIN_FAN_BYTES``, fanned above it.
+
+The split count is planning metadata, memoized per (session, path); no
+data or results are ever cached.
 """
 from __future__ import annotations
 
+import json
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _SCAN_PARTS: dict[tuple[int, str], int] = {}
 
-
-def scan_partitions(spark: SparkSession, path: str, df: DataFrame) -> int:
-    key = (id(spark), path)
-    n = _SCAN_PARTS.get(key)
-    if n is None:
-        try:
-            n = df.rdd.getNumPartitions()
-        except Exception:  # pragma: no cover — exotic sources
-            n = 1 << 30
-        _SCAN_PARTS[key] = n
-    return n
-
-
-def read_parquet_fanned(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet(path), fanned out to the cluster's parallelism
-    iff the scan itself is under-split (see module docstring)."""
-    df = spark.read.parquet(path)
-    p = spark.sparkContext.defaultParallelism
-    if scan_partitions(spark, path, df) < p:
-        return df.repartition(p)
-    return df
-
-
-# Below this input size the fan-out exchange costs more than the serial
-# narrow work it parallelizes for aggregate-/exchange-bound operators
-# (measured at sf0.1, where the 0.6 MB documents file favored the raw
-# scan by 0.2-0.7 s per query); at ~10x that size (3.4 MB compressed)
-# the same operators' serial narrow work dominates instead (measured:
-# bigram_surprisal 5.4 s raw vs ~2 s fanned at 10x) and fanning wins.
-# Size is a coarse proxy for rows x per-row work, which is what
-# actually serializes.
+# Below this size the fan-out exchange costs aggregate-bound operators
+# more than the serial narrow work it parallelizes (sf0.1's 0.6 MB
+# documents file: raw won by 0.2-0.7 s per query); at ~10x (3.4 MB) the
+# serial narrow work dominates (bigram_surprisal 5.4 s raw vs ~2 s
+# fanned). Size is a coarse proxy for rows x per-row work.
 MIN_FAN_BYTES = 2 << 20
+
+# where Spark's parquet writer stores its own schema; Spark's inference
+# prefers it to the parquet types
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable, as
+    Spark makes every file-source schema (``StructType.asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True,
+                                       f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, read in this
+    process from the footer of a single local file; None for anything
+    else."""
+    if not os.path.isfile(path):
+        return None
+    arrow = pq.read_schema(path)
+    spark_json = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        schema = StructType.fromJson(json.loads(spark_json))
+    else:
+        # Spark infers parquet timestamps that are not UTC-adjusted as
+        # TIMESTAMP_NTZ, and Arrow marks exactly those with no time zone
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    return _nullable(schema)
+
+
+def read(spark: SparkSession, path: str, fan: str = "raw") -> DataFrame:
+    """Read the parquet ``path`` with the schema from its footer or
+    ``OUTPUT_SCHEMA``, fanned out per ``fan`` (see the module docstring)."""
+    if os.path.isfile(os.path.join(path, "_metrics.jsonl")):
+        from ..pipeline import OUTPUT_SCHEMA
+
+        # only the manifest: the committed buckets held no rows
+        if not any(n.startswith("bucket=") for n in os.listdir(path)):
+            return spark.createDataFrame([], OUTPUT_SCHEMA)
+        df = (spark.read.schema(OUTPUT_SCHEMA).option("basePath", path)
+              .parquet(os.path.join(path, "bucket=*")))
+    else:
+        schema = footer_schema(path)
+        # None (a directory, glob or remote URI): Spark infers the schema
+        df = (spark.read.schema(schema) if schema is not None
+              else spark.read).parquet(path)
+    if fan not in ("raw", "fanned", "auto"):
+        raise ValueError(f"fan must be 'raw', 'fanned' or 'auto', not {fan!r}")
+    if fan == "raw" or (fan == "auto" and os.path.isfile(path)
+                        and os.path.getsize(path) < MIN_FAN_BYTES):
+        return df
+    p = spark.sparkContext.defaultParallelism
+    key = (id(spark), path)
+    if key not in _SCAN_PARTS:
+        _SCAN_PARTS[key] = df.rdd.getNumPartitions()
+    return df.repartition(p) if _SCAN_PARTS[key] < p else df
 
 
 def parquet_num_rows(spark: SparkSession, path: str) -> int:
-    """Exact row count from the parquet FOOTER (the file's own
-    authoritative metadata) — a driver-side footer read instead of a
-    count-star job, for the generator-modulus/count scalars several
-    operators embed. Falls back to a Spark count for non-local /
-    multi-file inputs (where a count-star is metadata-cheap anyway:
-    Spark reads only row-group headers)."""
-    import os
-
-    try:
-        if os.path.isfile(path):
-            import pyarrow.parquet as pq
-
-            return pq.ParquetFile(path).metadata.num_rows
-    except Exception:  # pragma: no cover — unreadable footer etc.
-        pass
-    return spark.read.parquet(path).count()
-
-
-def read_parquet_auto(spark: SparkSession, path: str,
-                      min_fan_bytes: int = MIN_FAN_BYTES) -> DataFrame:
-    """Size-adaptive reader for operators whose fan-out break-even
-    depends on input volume: RAW scan below ``min_fan_bytes`` (tiny
-    inputs: an exchange is pure overhead next to their map-side partial
-    aggregation), fanned above it. Multi-file/directory inputs skip the
-    size probe and use the ordinary under-split rule (production inputs
-    are many-split, where both paths are the same no-op)."""
-    import os
-
-    try:
-        size = os.path.getsize(path) if os.path.isfile(path) else None
-    except OSError:  # pragma: no cover — exotic paths
-        size = None
-    if size is not None and size < min_fan_bytes:
-        return spark.read.parquet(path)
-    return read_parquet_fanned(spark, path)
+    """Exact row count, for the count scalars several operators embed:
+    from the footer of a single local file (no Spark job), else a Spark
+    count (metadata-cheap: Spark reads only row-group headers)."""
+    if os.path.isfile(path):
+        return pq.ParquetFile(path).metadata.num_rows
+    return read(spark, path).count()

@@ -22,7 +22,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._scan import read_parquet_fanned
+from ._scan import read
 
 MINHASH_PERMS = 4
 # hex-digit start offsets (1-based) of the four 32-bit lanes of one md5
@@ -57,7 +57,7 @@ def _minhash128_params() -> list[tuple[int, int, int]]:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet_fanned(spark, f"{sf_dir}/documents.parquet")
+    return read(spark, f"{sf_dir}/documents.parquet", fan="fanned")
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

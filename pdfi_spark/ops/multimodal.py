@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._scan import read_parquet_fanned
+from ._scan import read
 
 # magic-byte sniffing table: prefix -> (codec, modality)
 MAGIC = [
@@ -37,7 +37,7 @@ N_FRAMES = 4    # frame-sample stub count
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet_fanned(spark, f"{sf_dir}/documents.parquet")
+    return read(spark, f"{sf_dir}/documents.parquet", fan="fanned")
 
 
 def sniff_codec(payload: bytes) -> tuple[str, str]:

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._scan import read
+
 TOP_K = 5
 MKT_SEGMENT = "BUILDING"
 
@@ -35,16 +37,16 @@ def nation_revenue_topk(spark: SparkSession, sf_dir: str,
                         segment: str = MKT_SEGMENT, k: int = TOP_K) -> DataFrame:
     """Top-k nations by lineitem revenue from customers in one market
     segment: lineitem -> orders -> customer -> broadcast(nation)."""
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    lineitem = read(spark, f"{sf_dir}/lineitem.parquet")
+    orders = read(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey"
     )
     customer = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read(spark, f"{sf_dir}/customer.parquet")
         .filter(F.col("c_mktsegment") == segment)   # pushed to the scan
         .select("c_custkey", "c_nationkey")
     )
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
+    nation = read(spark, f"{sf_dir}/nation.parquet").select(
         "n_nationkey", "n_name"
     )
     per_order = (
@@ -102,7 +104,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc_cp = price_c * (F.lit(100) - d)
     charge_cpp = disc_cp * (F.lit(100) + t)
     agg = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read(spark, f"{sf_dir}/lineitem.parquet")
         .filter(F.col("l_shipdate") <= cutoff)
         .select(
             "l_returnflag", "l_linestatus",
@@ -149,17 +151,17 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str,
     Revenue is exact integer cent-percent units, engine-order-free."""
     cutoff = F.lit(Q3_CUTOFF).cast("timestamp")
     customer = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read(spark, f"{sf_dir}/customer.parquet")
         .filter(F.col("c_mktsegment") == segment)
         .select("c_custkey")
     )
     orders = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read(spark, f"{sf_dir}/orders.parquet")
         .filter(F.col("o_orderdate") < cutoff)
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
     )
     per_order = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read(spark, f"{sf_dir}/lineitem.parquet")
         .filter(F.col("l_shipdate") > cutoff)
         .select("l_orderkey", _rev_cents().alias("rev"))
         .groupBy("l_orderkey")
@@ -197,25 +199,25 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str,
     Never a cartesian; revenue exact integer cent-percent."""
     lo = F.lit(Q5_FROM).cast("timestamp")
     hi = F.lit(Q5_TO).cast("timestamp")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    lineitem = read(spark, f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_suppkey", _rev_cents().alias("rev")
     )
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
+    supplier = read(spark, f"{sf_dir}/supplier.parquet").select(
         "s_suppkey", "s_nationkey"
     )
     orders = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read(spark, f"{sf_dir}/orders.parquet")
         .filter((F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi))
         .select("o_orderkey", "o_custkey")
     )
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    customer = read(spark, f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_nationkey"
     )
     nations = (
-        spark.read.parquet(f"{sf_dir}/nation.parquet")
+        read(spark, f"{sf_dir}/nation.parquet")
         .join(
             F.broadcast(
-                spark.read.parquet(f"{sf_dir}/region.parquet")
+                read(spark, f"{sf_dir}/region.parquet")
                 .filter(F.col("r_name") == region)
             ),
             F.col("n_regionkey") == F.col("r_regionkey"),
@@ -260,11 +262,11 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = F.lit(Q4_FROM).cast("timestamp")
     hi = F.lit(Q4_TO).cast("timestamp")
     orders = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read(spark, f"{sf_dir}/orders.parquet")
         .filter((F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi))
         .select("o_orderkey", "o_orderdate", "o_orderpriority")
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read(spark, f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_shipdate"
     )
     late = orders.join(
@@ -298,17 +300,17 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject. Determinism: quantities are integral (cast
     long), money in exact cents, dates cross engines as strings."""
     big = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read(spark, f"{sf_dir}/lineitem.parquet")
         .groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"))
         .filter(F.col("sum_qty") > Q18_MIN_QTY)
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderdate",
         F.round(F.col("o_totalprice") * 100, 0).cast("long")
         .alias("total_price_cents"),
     )
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    customer = read(spark, f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_name"
     )
     return (
@@ -346,13 +348,11 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = F.lit(Q14_FROM).cast("timestamp")
     hi = F.lit(Q14_TO).cast("timestamp")
     li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read(spark, f"{sf_dir}/lineitem.parquet")
         .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
         .select("l_partkey", _rev_cents().alias("rev"))
     )
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        "p_partkey", "p_type"
-    )
+    part = read(spark, f"{sf_dir}/part.parquet").select("p_partkey", "p_type")
     agg = (
         li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
         .agg(
@@ -377,7 +377,7 @@ def top_events_per_user(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFra
     rank prunes before anything wide is carried."""
     from pyspark.sql import Window
 
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read(spark, f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("value"), F.asc("event_id")
     )
@@ -408,7 +408,7 @@ def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND need an inequality post-filter)."""
     from pyspark.sql import Window
 
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read(spark, f"{sf_dir}/events.parquet")
     # the matched view rides as ONE nullable struct so id and value can
     # never decouple (two independent last(ignorenulls) calls would pull
     # them from different view rows when a view's value is NULL)
@@ -449,7 +449,7 @@ def range_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n^2) SortMergeJoin-with-residual path."""
     from pyspark.sql import Window
 
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read(spark, f"{sf_dir}/events.parquet")
     # only clicks contribute to the frame sum and only errors survive the
     # final filter: pre-filtering the other types (~60% of events) before
     # the window halves the one shuffle this rewrite exists to minimize
@@ -484,7 +484,7 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side (get_json_object — no Python, no UDF) and aggregate per
     event_type. The narrow extract + one hash aggregate is the whole
     plan."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read(spark, f"{sf_dir}/events.parquet")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         events.select("event_type", k.alias("k"))

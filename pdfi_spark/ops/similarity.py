@@ -15,7 +15,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._scan import read_parquet_fanned
+from ._scan import read
 
 LSH_PLANES = 8
 LSH_MAX_DIMS = 64  # widest embedding the literal weight arrays cover
@@ -33,7 +33,7 @@ def plane_weights(plane: int, n_dims: int = LSH_MAX_DIMS) -> list[int]:
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet_fanned(spark, f"{sf_dir}/embeddings.parquet")
+    return read(spark, f"{sf_dir}/embeddings.parquet", fan="fanned")
 
 
 def _dot(a, b):

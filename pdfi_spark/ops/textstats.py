@@ -6,30 +6,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._scan import (parquet_num_rows, read_parquet_auto,
-                    read_parquet_fanned)
+from ._scan import parquet_num_rows, read
 
 EN_STOPWORDS = ["the", "a", "of", "and", "in", "to", "is"]
 BPE_ISH_RE = "[a-z]{1,4}"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fanned-out scan — for operators whose dominant cost is per-row
-    narrow work (md5 shingle folds, HOF array math, regex chains): a
-    single-row-group input would otherwise run all of it on one core
-    (see ops/_scan.py)."""
-    return read_parquet_fanned(spark, f"{sf_dir}/documents.parquet")
+    """Fanned scan, for operators dominated by per-row narrow work (md5
+    shingle folds, HOF array math, regex chains)."""
+    return read(spark, f"{sf_dir}/documents.parquet", fan="fanned")
 
 
 def _docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Size-adaptive scan — for operators that are aggregate/exchange-
-    bound (explode -> keyed aggregate, windows): their map-side
-    partials compress before the first exchange, so on SMALL inputs the
-    fan-out repartition adds an exchange of raw text rows that costs
-    more than the serial narrow work it parallelizes (measured at
-    sf0.1); past the _scan.MIN_FAN_BYTES break-even the serial narrow
-    work dominates instead (measured at 10x) and the scan fans out."""
-    return read_parquet_auto(spark, f"{sf_dir}/documents.parquet")
+    """Size-adaptive scan, for aggregate/exchange-bound operators
+    (explode -> keyed aggregate, windows), whose map-side partials
+    shrink before the first exchange (see _scan.MIN_FAN_BYTES)."""
+    return read(spark, f"{sf_dir}/documents.parquet", fan="auto")
 
 
 def lang_stopword_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,8 +409,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str,
     from pyspark.sql import Window
 
     docs = _docs_raw(spark, sf_dir)
-    # exact doc count from the parquet footer (_scan.parquet_num_rows;
-    # was a count-star job)
     n_docs = parquet_num_rows(spark, f"{sf_dir}/documents.parquet")
     tf = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
@@ -474,7 +465,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str,
     # narrow agg of per-doc sizes — same exact integer as the old
     # explode+count, one cheap pass instead of a 10^15-row generate
     total = docs.agg(
-        F.sum(F.size(F.split("text", " ")))
+        F.coalesce(F.sum(F.size(F.split("text", " "))), F.lit(0))
     ).first()[0]
     surprisal = F.round(
         -F.log(F.col("cnt").cast("double") / F.lit(float(total))), 9
@@ -602,12 +593,11 @@ def pmi_collocations(spark: SparkSession, sf_dir: str,
     drift cannot reach the grid)."""
     docs = _docs_raw(spark, sf_dir)
     ws = F.split("text", " ")
-    # both corpus totals in ONE narrow agg (was: two explode+count jobs
-    # — two extra full scans materializing a row per token; the per-doc
-    # sizes sum to the identical exact integers: every doc has >= 1
-    # split token, so bigram positions per doc = size - 1 >= 0)
+    # both corpus totals in ONE narrow agg of per-doc sizes (every doc
+    # has >= 1 split token, so its bigram positions = size - 1 >= 0)
     n_uni, n_bi = docs.agg(
-        F.sum(F.size(ws)), F.sum(F.size(ws) - 1)
+        F.coalesce(F.sum(F.size(ws)), F.lit(0)),
+        F.coalesce(F.sum(F.size(ws) - 1), F.lit(0)),
     ).first()
     pairs = F.zip_with(
         F.slice(ws, 1, F.size(ws) - 1),
@@ -678,8 +668,6 @@ def pack_training_shards(spark: SparkSession, sf_dir: str,
     from pyspark.sql import Window
 
     docs = _docs_raw(spark, sf_dir)
-    # exact doc count from the parquet footer (_scan.parquet_num_rows;
-    # was a count-star job)
     n_docs = parquet_num_rows(spark, f"{sf_dir}/documents.parquet")
     span = max(1, -(-n_docs // SHARD_CHUNKS))  # ceil
     toks = docs.select(
@@ -821,13 +809,13 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (<= |query| addends, drift ~1e-15) to 6."""
     docs = _docs_raw(spark, sf_dir)
     words = F.split("text", " ")
-    # both scalars in ONE narrow agg (was: a count job plus an
-    # explode+count job — the explode materialized a row per token where
-    # sum(size(words)) gets the identical exact integer in-row)
+    # both scalars in ONE narrow agg: sum(size(words)) is the exact
+    # token total without a row per token
     n_docs, total_words = docs.agg(
-        F.count("*"), F.sum(F.size(words))
+        F.count("*"), F.coalesce(F.sum(F.size(words)), F.lit(0))
     ).first()
-    avgdl = total_words / n_docs  # exact ints -> one correctly-rounded double
+    # exact ints -> one correctly-rounded double (no row reads it if empty)
+    avgdl = total_words / max(n_docs, 1)
     hits = docs.select(
         "doc_id",
         F.size(words).alias("dl"),

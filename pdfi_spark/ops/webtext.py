@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..core.html import block_stats, extract_main_text, parse_blocks, parse_links
 from ..core.htmlgen import ORACLE_PER_BLOCK, build_html, build_linked_page
-from ._scan import read_parquet_auto, read_parquet_fanned
+from ._scan import parquet_num_rows, read
 
 HTML_ORACLE_RECIPES = [
     "plain", "boiler", "linkfarm", "entities", "nested", "malformed",
@@ -45,38 +45,27 @@ BOILER_N_BOILER_WORDS = _PROBE["n_boiler_words"]
 
 
 def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet_fanned(spark, f"{sf_dir}/documents.parquet").select(
+    return read(spark, f"{sf_dir}/documents.parquet", fan="fanned").select(
         "doc_id", "text"
     )
 
 
 def _n_docs(spark: SparkSession, sf_dir: str) -> int:
-    """Exact doc count from the parquet footer (see
-    _scan.parquet_num_rows) — the scalar several operators embed; was a
-    count-star job per query."""
-    from ._scan import parquet_num_rows
-
+    """Exact doc count from the parquet footer: no Spark job."""
     return parquet_num_rows(spark, f"{sf_dir}/documents.parquet")
 
 
 def _nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id) node list over the RAW scan: it feeds several tiny
-    per-iteration joins in the graph fixed-point operators, and each
-    reference would re-pay the fan-out repartition for a one-column
-    projection with no narrow work to parallelize."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    """(doc_id) over the RAW scan: it feeds many tiny per-iteration
+    joins, each of which would re-pay a fan-out for no narrow work."""
+    return read(spark, f"{sf_dir}/documents.parquet").select("doc_id")
 
 
 def _base_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, text) over the RAW scan at ANY size — for the
-    snapshot-diff family, whose narrow work (one md5 per doc) is
-    proportional to the bytes the scan already decodes serially, so
-    the fan-out exchange never pays for itself (measured a net loss at
-    sf0.1 AND at 10x, unlike the regex/explode-bound families that use
-    the size-adaptive reader)."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    """(doc_id, text) over the RAW scan at ANY size, for the snapshot-diff
+    family: one md5 per doc never pays for the fan-out exchange
+    (measured a net loss at sf0.1 AND at 10x)."""
+    return read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
 
 def strip_boilerplate(df: DataFrame, page_col: str = "html",
@@ -153,13 +142,12 @@ def html_outlinks(spark: SparkSession, sf_dir: str,
     anchor collector; citation anchors explode to one edge row
     (src, dst, link_rank) each, nav/ad/footer links filtered by href
     shape. At 100 TB: the parse is a narrow Arrow-batched mapInPandas
-    (zero exchanges — the only extra job is a parquet metadata
-    count-star for the generator's modulus, absent in production where
-    hrefs come off real pages); edge fan-out happens inside the UDF, so
-    no explode shuffle either."""
+    (zero exchanges; the generator's modulus is a footer row count,
+    absent in production where hrefs come off real pages); edge fan-out
+    happens inside the UDF, so no explode shuffle either."""
     base = _base(spark, sf_dir)
     if n_docs is None:
-        n_docs = _n_docs(spark, sf_dir)  # raw-scan count-star: cheap
+        n_docs = _n_docs(spark, sf_dir)  # footer read: no Spark job
 
     def run(iterator):
         for batch in iterator:
@@ -267,7 +255,7 @@ def url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _scan.MIN_FAN_BYTES. robots_filter additionally layers
     # per-(page, rule) regexp matching on top and fans unconditionally.
     return _url_canonicalize_from(
-        read_parquet_auto(spark, f"{sf_dir}/documents.parquet")
+        read(spark, f"{sf_dir}/documents.parquet", fan="auto")
     )
 
 
@@ -305,7 +293,7 @@ def robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regexp per (page, host rule) — real narrow CPU that a single-split
     # scan would serialize (measured interleaved A/B win at sf0.1)
     canon = _url_canonicalize_from(
-        read_parquet_fanned(spark, f"{sf_dir}/documents.parquet")
+        read(spark, f"{sf_dir}/documents.parquet", fan="fanned")
     )
     pages = canon.select(
         "doc_id",
@@ -384,7 +372,7 @@ def anchor_text_index(spark: SparkSession, sf_dir: str,
     as link_graph_degrees."""
     base = _base(spark, sf_dir)
     if n_docs is None:
-        n_docs = _n_docs(spark, sf_dir)  # raw-scan count-star: cheap
+        n_docs = _n_docs(spark, sf_dir)  # footer read: no Spark job
 
     def run(iterator):
         for batch in iterator:
@@ -503,7 +491,7 @@ def crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on the join key and stream merge; digests are md5 computed
     in-row (narrow)."""
     docs = _base_raw(spark, sf_dir)
-    n = _n_docs(spark, sf_dir)  # raw-scan count-star: cheap
+    n = _n_docs(spark, sf_dir)  # footer read: no Spark job
     lo, hi = int(n * 0.2), int(n * 0.8)
     url = F.concat(F.lit("https://example.org/page/"),
                    F.col("doc_id").cast("string"))
@@ -547,7 +535,7 @@ def incremental_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Digests are computed in-row (narrow md5) — never a text-to-text
     compare."""
     docs = _base_raw(spark, sf_dir)
-    n = _n_docs(spark, sf_dir)  # raw-scan count-star: cheap
+    n = _n_docs(spark, sf_dir)  # footer read: no Spark job
     lo, hi = int(n * 0.2), int(n * 0.8)
     old_digests = (
         docs.filter(F.col("doc_id") < hi)
@@ -597,7 +585,7 @@ def bloom_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification column). The prior-digest subtree feeds both the
     filter and the exact side, so it's checkpointed once."""
     docs = _base_raw(spark, sf_dir)
-    n = _n_docs(spark, sf_dir)  # raw-scan count-star: cheap
+    n = _n_docs(spark, sf_dir)  # footer read: no Spark job
     lo, hi = int(n * 0.2), int(n * 0.8)
     old_digests = (
         docs.filter(F.col("doc_id") < hi)
@@ -1031,9 +1019,10 @@ def _pagerank_topk(nodes: DataFrame, edges: DataFrame,
                    "doc_id", "left_anti")
         .localCheckpoint(eager=True)
     )
-    base = F.lit((1.0 - PAGERANK_DAMPING) / n_docs)
+    # max(n, 1): an empty graph has no row that reads these literals
+    base = F.lit((1.0 - PAGERANK_DAMPING) / max(n_docs, 1))
     ranks = nodes.select(
-        "doc_id", F.round(F.lit(1.0 / n_docs), 12).alias("rank")
+        "doc_id", F.round(F.lit(1.0 / max(n_docs, 1)), 12).alias("rank")
     )
     for _ in range(PAGERANK_ITERS):
         contribs = (
@@ -1298,8 +1287,8 @@ def link_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out.localCheckpoint(eager=True) if checkpoint else out
 
-    hubs = nodes.select(
-        "doc_id", F.round(F.lit(1.0 / n_docs), 12).alias("hub")
+    hubs = nodes.select(  # max(n, 1): an empty graph reads no literal
+        "doc_id", F.round(F.lit(1.0 / max(n_docs, 1)), 12).alias("hub")
     )
     auths = None
     for it in range(HITS_ITERS):
@@ -1340,7 +1329,7 @@ def cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenate into the globally sorted CDX; the rows here are
     emitted unsorted (the sort is a sink property, not part of the
     per-capture map)."""
-    docs = read_parquet_auto(spark, f"{sf_dir}/documents.parquet")
+    docs = read(spark, f"{sf_dir}/documents.parquet", fan="auto")
     canon = canonical_url(_raw_url_expr())
     host = F.regexp_extract(canon, "^[a-z]+://([^/:?#]+)", 1)
     rest = F.regexp_extract(canon, "^[a-z]+://[^/?#]+(.*)$", 1)

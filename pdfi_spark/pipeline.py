@@ -398,16 +398,9 @@ def _run_pipeline_inner(spark: SparkSession, documents: DataFrame,
 
 
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Read a ``run_pipeline`` output back as ``OUTPUT_SCHEMA`` rows.
+    """Read a ``run_pipeline`` output back as ``OUTPUT_SCHEMA`` rows
+    (``ops._scan.read``; an output whose committed buckets hold no rows
+    reads as an empty frame of the same schema)."""
+    from .ops._scan import read
 
-    A run whose committed buckets hold no rows writes no ``bucket=``
-    directory, only the manifest; that output reads as an empty frame of
-    the same schema rather than a PATH_NOT_FOUND error.
-    """
-    if (os.path.exists(os.path.join(output_dir, "_metrics.jsonl"))
-            and not any(name.startswith("bucket=")
-                        for name in os.listdir(output_dir))):
-        return spark.createDataFrame([], OUTPUT_SCHEMA)
-    return spark.read.option("basePath", output_dir).parquet(
-        os.path.join(output_dir, "bucket=*")
-    )
+    return read(spark, output_dir)

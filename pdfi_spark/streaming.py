@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import DOCUMENTS_SCHEMA
+from .ops._scan import read
 from .pipeline import extract_text
 
 
@@ -132,7 +133,7 @@ def streaming_dedup_state(spark: SparkSession, sf_dir: str,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read(spark, f"{sf_dir}/documents.parquet").select(
         F.concat_ws(" ", F.slice(F.split("text", " "), 1, 5)).alias("dedup_key"),
         "doc_id",
     )
@@ -194,7 +195,7 @@ def url_dedup_streaming(spark: SparkSession, sf_dir: str,
 
     from .ops.webtext import _raw_url_expr, canonical_url
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     input_dir = scratch_dir(prefix="pdfi_url_dedup_in_")
     docs.repartition(n_input_files).write.mode("overwrite").parquet(input_dir)
 
@@ -375,7 +376,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str,
     # ts is TIMESTAMP_NTZ: derive epoch seconds NTZ-to-NTZ so the value is
     # a pure function of the stored wall clock — no session-tz mutation,
     # no DST edge cases on non-UTC hosts
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read(spark, f"{sf_dir}/events.parquet")
     tsec = F.expr("timestampdiff(SECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = tsec - F.lag(tsec).over(w)

@@ -46,6 +46,9 @@ def test_run_pipeline_commits_all_buckets(spark, documents, tmp_path):
         assert m["p50_ms"] > 0 and m["p99_ms"] >= m["p50_ms"]
 
     extracted = read_extracted(spark, out)
+    # the reader hands Spark OUTPUT_SCHEMA: exactly what Spark infers
+    inferred = spark.read.option("basePath", out).parquet(f"{out}/bucket=*")
+    assert extracted.schema.jsonValue() == inferred.schema.jsonValue()
     golden = documents.select("url", F.col("text").alias("expected"))
     mismatches = (
         extracted.join(golden, "url")

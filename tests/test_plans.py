@@ -821,9 +821,9 @@ def test_scan_fanout_adaptive(spark, tmp_path):
     # and column pruning / filter pushdown must still reach the scan
     # THROUGH that node. On an input with >= defaultParallelism splits
     # the reader must be a strict no-op (the production shape).
-    from pdfi_spark.ops._scan import read_parquet_fanned
+    from pdfi_spark.ops._scan import read
 
-    fanned = read_parquet_fanned(spark, f"{SF}/documents.parquet")
+    fanned = read(spark, f"{SF}/documents.parquet", fan="fanned")
     plan = _plan(fanned.filter(F.col("doc_id") == 3).select("doc_id", "text"))
     assert "RoundRobinPartitioning" in plan, plan
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
@@ -834,20 +834,20 @@ def test_scan_fanout_adaptive(spark, tmp_path):
     p = spark.sparkContext.defaultParallelism
     multi = str(tmp_path / "multi.parquet")
     spark.range(p * 4).repartition(p * 2).write.parquet(multi)
-    plan2 = _plan(read_parquet_fanned(spark, multi))
+    plan2 = _plan(read(spark, multi, fan="fanned"))
     assert "RoundRobinPartitioning" not in plan2, plan2
 
 
 def test_scan_auto_size_threshold(spark, tmp_path):
-    # ops/_scan.py::read_parquet_auto — the size-adaptive reader for
+    # ops/_scan.py::read(fan="auto") — the size-adaptive reader for
     # aggregate-bound operators: RAW below MIN_FAN_BYTES (the exchange
     # costs more than the serial narrow work), fanned above it.
     from pyspark.sql import functions as F
 
-    from pdfi_spark.ops._scan import MIN_FAN_BYTES, read_parquet_auto
+    from pdfi_spark.ops._scan import MIN_FAN_BYTES, read
 
     # the sf0.001 documents file is far below the threshold -> raw
-    small = read_parquet_auto(spark, f"{SF}/documents.parquet")
+    small = read(spark, f"{SF}/documents.parquet", fan="auto")
     assert "RoundRobinPartitioning" not in _plan(small), "small input fanned"
 
     # a single >threshold single-row-group file -> fanned
@@ -867,5 +867,5 @@ def test_scan_auto_size_threshold(spark, tmp_path):
     big_file = str(tmp_path / "big.parquet")
     shutil.move(part, big_file)
     assert os.path.getsize(big_file) > MIN_FAN_BYTES, "fixture too small"
-    big = read_parquet_auto(spark, big_file)
+    big = read(spark, big_file, fan="auto")
     assert "RoundRobinPartitioning" in _plan(big), "large input not fanned"

@@ -3,6 +3,7 @@
 ``__spark_entry__.queries()``."""
 import importlib.util
 import os
+import re
 import subprocess
 import sys
 
@@ -75,3 +76,31 @@ def test_tool_query_lists_resolve_in_registry():
     bench_extra = _tool("bench_extra")
     assert bench_extra.selected(bench_extra.parse_args(["--all"])) \
         == list(registry)
+
+
+# a batch parquet read: ``<x>.read``, then any chain of calls such as
+# ``.schema(...)`` or ``.option(...)``, then ``.parquet(``
+_PARQUET_READ = re.compile(
+    r"\.read(?:\s*\.\s*\w+\((?:[^()]|\([^()]*\))*\))*\s*\.\s*parquet\(")
+# the production input of job.py is a directory or remote prefix: no
+# local footer to read, so Spark infers its schema
+_READ_SITES_ALLOWED = {"pdfi_spark/job.py": 1}
+
+
+def test_parquet_reads_go_through_the_one_reader():
+    """No module but ``ops/_scan.py`` reads parquet in batch (the
+    ``job.py`` input excepted): a second reader would bring back the
+    schema-inference job ``_scan.read`` avoids."""
+    files = [os.path.join(REPO, "__spark_entry__.py")]
+    for root, _, names in os.walk(os.path.join(REPO, "pdfi_spark")):
+        files += [os.path.join(root, n) for n in names if n.endswith(".py")]
+    hits = {}
+    for path in files:
+        rel = os.path.relpath(path, REPO)
+        if rel == os.path.join("pdfi_spark", "ops", "_scan.py"):
+            continue
+        with open(path, encoding="utf-8") as f:
+            n = len(_PARQUET_READ.findall(f.read()))
+        if n:
+            hits[rel] = n
+    assert hits == _READ_SITES_ALLOWED
