@@ -1,27 +1,44 @@
-"""Spark Python worker daemon that keeps zipimport directories across tasks.
+"""Spark Python worker daemon that cuts the fixed cost of each Python task.
 
 ``make_spark`` selects this module as ``spark.python.daemon.module``; Spark
 starts it with ``python -m`` and it hands over to
 ``pyspark.daemon.manager()``, which forks the workers.
 
-Why: PySpark's worker calls ``importlib.invalidate_caches()`` at the start
-of every task (``pyspark.worker_util.setup_spark_files``). On Python 3.11
-that makes every ``zipimport.zipimporter`` re-read its archive's central
-directory — about 16 importers over the 1,328-entry ``pyspark.zip``, so
-each task re-parsed the archive about 16 times, roughly 0.2-0.3 s of a
-``mapInPandas`` task whose user code took about 1 ms.
+A reused worker paid two fixed costs per task with the stock daemon, one
+inside ``pyspark.worker.main`` and one after it returns:
 
-What: before the manager starts, ``install()`` wraps the directory reader
-to remember each archive's ``(st_mtime_ns, st_size)`` at the time it was
-read, and wraps ``zipimporter.invalidate_caches`` to reuse that directory
-while the archive's stamp is unchanged. An archive that is replaced on
-disk (``addPyFile``, ``spark.submit.pyFiles``) still gets re-read, so
-import semantics do not change. When pyspark runs unzipped there is no
-zipimporter over it and the wrap never fires. Forked workers inherit the
-wrap; importing this module (say in the driver) installs nothing.
+1. The zip re-read. PySpark's worker calls ``importlib.invalidate_caches()``
+   at the start of every task (``pyspark.worker_util.setup_spark_files``).
+   On Python 3.11 that makes every ``zipimport.zipimporter`` re-read its
+   archive's central directory — about 16 importers over the 1,328-entry
+   ``pyspark.zip``, so each task re-parsed the archive about 16 times:
+   an identity ``mapInPandas`` task spent a median 0.21 s in
+   ``worker.main`` (0.04 s without the re-read) for ~1 ms of user code.
+   Before the manager starts, ``install()`` wraps the directory reader to
+   remember each archive's ``(st_mtime_ns, st_size)`` at the time it was
+   read, and wraps ``zipimporter.invalidate_caches`` to reuse that
+   directory while the archive's stamp is unchanged. An archive that is
+   replaced on disk (``addPyFile``, ``spark.submit.pyFiles``) still gets
+   re-read, so import semantics do not change. When pyspark runs unzipped
+   there is no zipimporter over it and the wrap never fires.
+
+2. The post-task collection. The daemon runs ``gc.collect()`` in a reused
+   worker after every task. A worker that has imported ``pyspark.worker``,
+   pandas, pyarrow and ``pdfi_spark.core`` tracks about 73k objects, and a
+   full collection over them costs about 45 ms of CPU (2 ms in a bare
+   interpreter). ``freeze_after_first_task`` wraps the daemon's
+   ``worker_main`` so each worker calls ``gc.freeze()`` once, at the start
+   of its second task, which moves the imported heap out of the
+   collector's reach: Python-worker CPU per identity ``mapInPandas`` task
+   fell from about 55 ms to about 9 ms on a 4-core host at ``local[4]``
+   (``tools/bench_task_overhead.py``, 64 partitions).
+
+Forked workers inherit both wraps; importing this module (say in the
+driver) installs nothing.
 """
 from __future__ import annotations
 
+import gc
 import importlib
 import os
 import zipimport
@@ -64,6 +81,29 @@ def install() -> None:
     zipimport.zipimporter.invalidate_caches = cached_invalidate_caches
 
 
+def freeze_after_first_task(run_task):
+    """Wrap a forked worker's task function to ``gc.freeze()`` once, at the
+    start of its second task.
+
+    By then the first task has done the worker's imports and the
+    daemon's post-task ``gc.collect()`` has cleared that task's garbage,
+    so what is frozen is the imported heap. Freezing only once bounds
+    the permanent generation to what was live after the first task:
+    cycles among later tasks' survivors stay collectable. A worker that
+    is not reused runs one task and never freezes.
+    """
+    tasks = 0
+
+    def run(*args, **kwargs):
+        nonlocal tasks
+        tasks += 1
+        if tasks == 2:
+            gc.freeze()
+        return run_task(*args, **kwargs)
+
+    return run
+
+
 if __name__ == "__main__":
     install()
     # stamp the archives already read while this module was being found,
@@ -71,4 +111,6 @@ if __name__ == "__main__":
     importlib.invalidate_caches()
     from pyspark import daemon
 
+    # each forked worker inherits a wrapper whose task count is still 0
+    daemon.worker_main = freeze_after_first_task(daemon.worker_main)
     daemon.manager()

@@ -463,19 +463,22 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str,
     counts = words.groupBy("term").agg(F.count("*").alias("cnt"))
     # corpus token total WITHOUT materializing a row per word: one
     # narrow agg of per-doc sizes — same exact integer as the old
-    # explode+count, one cheap pass instead of a 10^15-row generate
+    # explode+count, one cheap pass instead of a 10^15-row generate.
+    # A 1-row aggregate crossJoined back broadcast (the PageRank
+    # dangling-mass shape), so building the query runs no job.
     total = docs.agg(
         F.coalesce(F.sum(F.size(F.split("text", " "))), F.lit(0))
-    ).first()[0]
+        .alias("total")
+    )
     surprisal = F.round(
-        -F.log(F.col("cnt").cast("double") / F.lit(float(total))), 9
+        -F.log(F.col("cnt").cast("double") / F.col("total").cast("double")),
+        9,
+    )
+    model = counts.crossJoin(F.broadcast(total)).select(
+        "term", surprisal.alias("s")
     )
     return (
-        words.join(
-            _vocab_dim(counts.select("term", surprisal.alias("s")),
-                       broadcast_vocab),
-            "term",
-        )
+        words.join(_vocab_dim(model, broadcast_vocab), "term")
         .groupBy("doc_id")
         .agg(
             F.round(F.avg("s"), 6).alias("mean_surprisal"),

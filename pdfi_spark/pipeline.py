@@ -82,17 +82,24 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
     cluster raises it to the guide's 128-256 MB through the environment
     variable ``PDFI_SPARK_ADVISORY_PARTITION``.
 
-    The Python worker daemon is always ``pdfi_spark._worker_daemon``.
-    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
-    of every task, and on Python 3.11 that makes each of the ~16
-    zipimporters over the 3.5 MB ``pyspark.zip`` re-read the archive's
-    directory: about 0.2-0.3 s per task against ~1 ms of user code. On
-    a 4-core Xeon at local[4], an identity ``mapInPandas`` task's median
-    time in ``pyspark.worker.main`` fell from 0.21 s to 0.04 s with the
-    daemon, and a 32-partition pass from 2.0-2.6 s to 0.8-0.9 s. The
-    daemon re-reads an archive only when its mtime or size changed.
-    Sessions not built here (a bare ``SparkSession.builder``, the
-    driver's ``__spark_entry__`` session) keep paying the per-task cost.
+    The Python worker daemon is always ``pdfi_spark._worker_daemon``. It
+    removes the two fixed costs a reused Python worker paid per task:
+    (1) inside ``pyspark.worker.main``, the zip re-read — the worker calls
+    ``importlib.invalidate_caches()`` at the start of every task, and on
+    Python 3.11 that makes each of the ~16 zipimporters over the 3.5 MB
+    ``pyspark.zip`` re-read the archive's directory. On a 4-core Xeon at
+    local[4], an identity ``mapInPandas`` task's median time in
+    ``worker.main`` fell from 0.21 s to 0.04 s, and a 32-partition pass
+    from 2.0-2.6 s to 0.8-0.9 s; the daemon re-reads an archive only when
+    its mtime or size changed. (2) after ``worker.main`` returns, the
+    daemon's ``gc.collect()`` over the ~73k objects the imports left
+    tracked, about 45 ms of CPU per task; the daemon freezes that heap
+    once, at each worker's second task. Python-worker CPU per identity
+    ``mapInPandas`` task then fell from about 55 ms to about 9 ms, and a
+    64-partition pass from 1.48 s to 1.13 s (``tools/
+    bench_task_overhead.py``). Sessions not built here (a bare
+    ``SparkSession.builder``, the driver's ``__spark_entry__`` session)
+    keep paying both costs.
 
     The daemon is imported before a task adds ``--py-files`` to
     ``sys.path``, so the session prepends ``PACKAGE_ROOT`` (the directory

@@ -63,8 +63,6 @@ def test_footer_schema_of_a_spark_written_file(spark, tmp_path):
 # result).
 CONSTRUCTION_JOBS = {
     "decontaminate": (2, "collects the benchmark shingle set (.first())"),
-    "unigram_surprisal": (2, "collects the corpus token total (.first())"),
-    "surprisal_buckets": (2, "unigram_surprisal's corpus token total"),
     "bm25_topk": (2, "collects N and the corpus token total (.first())"),
     "pmi_collocations": (4, "collects the token totals and checkpoints the unigram counts"),
     "cms_heavy_hitters": (2, "eager checkpoint of the per-term counts"),

@@ -1,6 +1,7 @@
 """The worker daemon ``make_spark`` selects: zipimport directories survive
 PySpark's per-task ``importlib.invalidate_caches()`` unless the archive
-changed on disk."""
+changed on disk, and a reused worker freezes its imported heap once so
+the daemon's post-task ``gc.collect()`` stops walking it."""
 import os
 import subprocess
 import sys
@@ -102,6 +103,80 @@ def test_daemon_wrap_rereads_only_changed_archives(tmp_path):
     archive = str(tmp_path / "pyfiles.zip")
     proc = subprocess.run(
         [sys.executable, "-c", SEMANTICS_SCRIPT, archive],
+        cwd=REPO, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip() == "ok"
+
+
+def test_reused_worker_freezes_its_imported_heap(spark):
+    def probe(batches):
+        import gc
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()],
+                            "tracked": [len(gc.get_objects())]})
+
+    # the first probe may start a worker; every later one reuses an idle
+    # worker that has run at least one task, so the last is its task >= 2
+    # (collect, not first: a task whose output is read to the end
+    # releases its worker for reuse)
+    for _ in range(3):
+        [row] = (spark.range(1, numPartitions=1)
+                 .mapInPandas(probe, "frozen long, tracked long").collect())
+    assert row["frozen"] > 0
+    assert row["tracked"] < row["frozen"] / 10, row
+
+
+FREEZE_SCRIPT = r"""
+import gc
+import weakref
+
+from pyspark import daemon
+
+original = daemon.worker_main
+from pdfi_spark import _worker_daemon
+# importing the module (as the driver does) must not wrap anything
+assert daemon.worker_main is original
+
+calls = []
+real_freeze = gc.freeze
+gc.freeze = lambda: calls.append(1) or real_freeze()
+run = _worker_daemon.freeze_after_first_task(lambda task: task())
+
+
+class Node:
+    pass
+
+
+def make_cycle():
+    a, b = Node(), Node()
+    a.other, b.other = b, a
+    return weakref.ref(a)
+
+
+seen = []
+probe = lambda: seen.append(gc.get_freeze_count())
+run(probe)
+assert (calls, seen) == ([], [0]), (calls, seen)  # task 1 runs unfrozen
+run(probe)
+assert len(calls) == 1 and seen[1] > 0, (calls, seen)  # task 2 runs frozen
+cycles = []
+run(lambda: cycles.append(make_cycle()))
+run(probe)
+assert len(calls) == 1, calls  # and never freezes again
+# a cycle made in task 3 is still reclaimed by the collector
+assert cycles[0]() is not None
+gc.collect()
+assert cycles[0]() is None
+print("ok")
+"""
+
+
+def test_freeze_once_at_the_second_task():
+    proc = subprocess.run(
+        [sys.executable, "-c", FREEZE_SCRIPT],
         cwd=REPO, capture_output=True, text=True, timeout=120,
     )
     assert proc.returncode == 0, proc.stderr
