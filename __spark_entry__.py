@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdfi_spark import ops
+from pdfi_spark import ops, streaming
 from pdfi_spark.core.api import read_pdf
 from pdfi_spark.core.pdfgen import ORACLE_EXPECTED_SQL, ORACLE_PER_BLOCK, build_pdf
 from pdfi_spark.datagen import build_documents, build_documents_with_id
@@ -80,29 +80,30 @@ def entry(spark: SparkSession) -> DataFrame:
 # extraction queries: one per PDF-generator recipe (SURVEY.md §2 operators)
 # ---------------------------------------------------------------------------
 
+def _payload(spark: SparkSession, sf_dir: str, recipe: str) -> DataFrame:
+    """The oracle corpus generated with ``recipe``, as extraction input:
+    ``doc_id`` cast to a ``url`` string, plus the ``html`` payload."""
+    docs = build_documents_with_id(spark, sf_dir, recipe, per_block=ORACLE_PER_BLOCK)
+    return docs.select(F.col("doc_id").cast("string").alias("url"), "html")
+
+
 def _extract_query(recipe: str) -> Callable[[SparkSession, str], DataFrame]:
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = build_documents_with_id(spark, sf_dir, recipe, per_block=ORACLE_PER_BLOCK)
-        payload = docs.select(F.col("doc_id").cast("string").alias("url"), "html")
-        extracted = extract_text(payload, payload_col="html")
+        extracted = extract_text(_payload(spark, sf_dir, recipe), payload_col="html")
         return extracted.select(F.col("url").cast("long").alias("doc_id"), "text")
 
     return q
 
 
 def _extract_meta_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = build_documents_with_id(spark, sf_dir, "simple", per_block=ORACLE_PER_BLOCK)
-    payload = docs.select(F.col("doc_id").cast("string").alias("url"), "html")
-    extracted = extract_text(payload, payload_col="html")
+    extracted = extract_text(_payload(spark, sf_dir, "simple"), payload_col="html")
     return extracted.select(
         F.col("url").cast("long").alias("doc_id"), "n_pages", "n_chars"
     )
 
 
 def _extract_errors_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = build_documents_with_id(spark, sf_dir, "flate", per_block=ORACLE_PER_BLOCK)
-    payload = docs.select(F.col("doc_id").cast("string").alias("url"), "html")
-    extracted = extract_text(payload, payload_col="html")
+    extracted = extract_text(_payload(spark, sf_dir, "flate"), payload_col="html")
     return extracted.agg(
         F.count("*").alias("n_docs"),
         F.count_if(F.col("error").isNotNull()).alias("n_errors"),
@@ -310,18 +311,16 @@ def _pipeline_resume_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
 
     from pdfi_spark.pipeline import CheckpointStore, read_extracted, run_pipeline
-    from pdfi_spark.streaming import scratch_dir
 
-    docs = build_documents_with_id(spark, sf_dir, "flate", per_block=ORACLE_PER_BLOCK)
-    payload = docs.select(F.col("doc_id").cast("string").alias("url"), "html")
+    payload = _payload(spark, sf_dir, "flate")
     # materialize the generated corpus once: run_pipeline's per-wave
     # bucket filter sits above the generator UDF (bucket = hash(url), an
     # output column), so streaming the plan in directly would regenerate
     # every PDF per wave and again on resume (~3 full passes)
-    input_dir = scratch_dir(prefix="pdfi_resume_in_")
+    input_dir = streaming.scratch_dir(prefix="pdfi_resume_in_")
     payload.write.mode("overwrite").parquet(input_dir)
     payload = read(spark, input_dir)
-    out = scratch_dir(prefix="pdfi_resume_q_")
+    out = streaming.scratch_dir(prefix="pdfi_resume_q_")
     run_pipeline(spark, payload, out, n_buckets=4, wave_size=2)
     store = CheckpointStore(out)
     committed = store.metrics()[:2]
@@ -343,12 +342,9 @@ def _html_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator-built pages -> strip_boilerplate mapInPandas -> memory
     sink, one available-now pass (same oracle as the batch path) —
     the webtext axis through the streaming surface."""
-    import uuid
-
     from pdfi_spark.core.htmlgen import ORACLE_PER_BLOCK as HTML_ORACLE_PER_BLOCK
     from pdfi_spark.core.htmlgen import build_html
     from pdfi_spark.ops.webtext import strip_boilerplate
-    from pdfi_spark.streaming import run_available_now, scratch_dir
 
     base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
@@ -366,13 +362,9 @@ def _html_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["url", "html"])
 
     pages = base.mapInPandas(gen, schema="url string, html binary")
-    input_dir = scratch_dir(prefix="pdfi_html_stream_")
-    pages.write.mode("overwrite").parquet(input_dir)
-
-    stream = spark.readStream.schema("url string, html binary").parquet(input_dir)
-    return run_available_now(
-        strip_boilerplate(stream), f"html_streaming_{uuid.uuid4().hex[:8]}",
-        "append", "pdfi_html_ckpt_",
+    stream = streaming._scratch_stream(pages)
+    return streaming.run_available_now(
+        strip_boilerplate(stream), "append"
     ).select(
         F.col("url").cast("long").alias("doc_id"), "main_text"
     )
@@ -383,47 +375,23 @@ def _warc_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one capture triple per document, member-per-record gzip) ->
     read_warc_pages connector -> boilerplate strip -> memory sink, one
     available-now pass. Same oracle as the batch warc roundtrip."""
-    import uuid
-
-    from pdfi_spark.core.htmlgen import ORACLE_PER_BLOCK as HTML_ORACLE_PER_BLOCK
-    from pdfi_spark.core.htmlgen import build_html
-    from pdfi_spark.core.warc import build_capture_records, gzip_member
-    from pdfi_spark.ops.webtext import read_warc_pages, strip_boilerplate
-    from pdfi_spark.streaming import run_available_now, scratch_dir
+    from pdfi_spark.ops.webtext import _capture_blob, read_warc_pages, strip_boilerplate
 
     base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
     def gen(iterator):
         for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                doc_id = int(doc_id)
-                page = build_html(
-                    text, "boiler", per_block=HTML_ORACLE_PER_BLOCK
-                )[0]
-                blob = b"".join(
-                    gzip_member(r)
-                    for r in build_capture_records(
-                        f"https://example.org/page/{doc_id}",
-                        "2026-01-01T00:00:00Z", page,
-                        record_id=f"{doc_id:08x}",
-                    )
-                )
-                rows.append({"path": f"seg/{doc_id}.warc.gz", "content": blob})
+            rows = [
+                {"path": f"seg/{int(doc_id)}.warc.gz",
+                 "content": _capture_blob(int(doc_id), text)}
+                for doc_id, text in zip(batch["doc_id"], batch["text"])
+            ]
             yield pd.DataFrame(rows, columns=["path", "content"])
 
     blobs = base.mapInPandas(gen, schema="path string, content binary")
-    input_dir = scratch_dir(prefix="pdfi_warc_stream_")
-    blobs.write.mode("overwrite").parquet(input_dir)
-
-    stream = spark.readStream.schema("path string, content binary").parquet(
-        input_dir
-    )
+    stream = streaming._scratch_stream(blobs)
     stripped = strip_boilerplate(read_warc_pages(stream), page_col="page")
-    return run_available_now(
-        stripped, f"warc_streaming_{uuid.uuid4().hex[:8]}", "append",
-        "pdfi_warc_ckpt_",
-    ).select(
+    return streaming.run_available_now(stripped, "append").select(
         F.replace(
             F.col("url"), F.lit("https://example.org/page/"), F.lit("")
         ).cast("long").alias("doc_id"),
@@ -435,74 +403,10 @@ def _extract_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming twin of extract_flate: readStream over the
     same synthetic corpus -> mapInPandas extraction -> memory sink, one
     available-now pass (same oracle as the batch path)."""
-    import uuid
-
-    from pdfi_spark.streaming import extract_stream, scratch_dir
-
-    docs = build_documents_with_id(spark, sf_dir, "flate", per_block=ORACLE_PER_BLOCK)
-    input_dir = scratch_dir(prefix="pdfi_stream_q_")
-    docs.select(F.col("doc_id").cast("string").alias("url"), "html") \
-        .write.mode("overwrite").parquet(input_dir)
-    return extract_stream(
-        spark, input_dir, query_name=f"extract_streaming_{uuid.uuid4().hex[:8]}"
-    ).select(
+    input_dir = streaming.scratch_dir(prefix="pdfi_stream_q_")
+    _payload(spark, sf_dir, "flate").write.mode("overwrite").parquet(input_dir)
+    return streaming.extract_stream(spark, input_dir).select(
         F.col("url").cast("long").alias("doc_id"), "text"
-    )
-
-
-def _windowed_events_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdfi_spark.streaming import windowed_event_counts
-
-    import uuid
-
-    return windowed_event_counts(
-        spark, sf_dir, query_name=f"windowed_{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _url_dedup_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from pdfi_spark.streaming import url_dedup_streaming
-
-    return url_dedup_streaming(
-        spark, sf_dir, query_name=f"url_dedup_{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _frontier_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from pdfi_spark.streaming import frontier_schedule_streaming
-
-    return frontier_schedule_streaming(
-        spark, sf_dir, query_name=f"frontier_{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _streaming_dedup_state_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from pdfi_spark.streaming import streaming_dedup_state
-
-    return streaming_dedup_state(
-        spark, sf_dir, query_name=f"dedup_state_{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdfi_spark.streaming import sessionize_events
-
-    return sessionize_events(spark, sf_dir)
-
-
-def _session_window_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from pdfi_spark.streaming import session_window_events
-
-    return session_window_events(
-        spark, sf_dir, query_name=f"sesswin_{uuid.uuid4().hex[:8]}"
     )
 
 
@@ -556,10 +460,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["layout_lines_window"] = _layout_lines_window_query
     out["extract_zapf_dingbats"] = _extract_query("zapf_dingbats")
     out["extract_streaming"] = _extract_streaming_query
-    out["windowed_event_counts"] = _windowed_events_query
-    out["sessionize_events"] = _sessionize_query
-    out["session_window_events"] = _session_window_query
-    out["streaming_dedup_state"] = _streaming_dedup_state_query
+    out["windowed_event_counts"] = streaming.windowed_event_counts
+    out["sessionize_events"] = streaming.sessionize_events
+    out["session_window_events"] = streaming.session_window_events
+    out["streaming_dedup_state"] = streaming.streaming_dedup_state
     # -- group 2: most-changed in round 6, last sampled r04 (9 queries:
     #    fills the 50-row prefix exactly) --
     out["dedup_clusters_128"] = ops.dedup_clusters_128
@@ -575,7 +479,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["tfidf_top_terms"] = ops.tfidf_top_terms
     out["unigram_surprisal"] = ops.unigram_surprisal
     out["host_stats"] = ops.host_stats
-    out["url_dedup_streaming"] = _url_dedup_streaming_query
+    out["url_dedup_streaming"] = streaming.url_dedup_streaming
     out["robots_filter"] = ops.robots_filter
     out["warc_extract"] = ops.warc_extract
     out["warc_streaming"] = _warc_streaming_query
@@ -613,7 +517,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["q4_order_priority"] = ops.q4_order_priority
     out["q18_large_volume_customer"] = ops.q18_large_volume_customer
     out["link_graph_triangles"] = ops.link_graph_triangles
-    out["frontier_schedule_streaming"] = _frontier_streaming_query
+    out["frontier_schedule_streaming"] = streaming.frontier_schedule_streaming
     # -- group 4: r04-green remainder --
     out["pipeline_resume_counts"] = _pipeline_resume_query
     out["html_outlinks"] = ops.html_outlinks

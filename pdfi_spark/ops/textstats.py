@@ -120,22 +120,21 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap a benchmark shingle set (the pass every training-data
     pipeline runs against eval suites before training). The benchmark
     set here is the first N shingles of doc 0 (deterministic stand-in
-    for a real eval set); it is tiny, collected once on the driver and
-    shipped as a literal array — so the scan side is a pure narrow map,
-    exactly how a multi-thousand-shingle real benchmark set broadcasts."""
+    for a real eval set); it is tiny, built as a 1-row aggregate and
+    crossJoined back broadcast — so the scan side is a pure narrow map,
+    exactly how a multi-thousand-shingle real benchmark set broadcasts,
+    and building the query runs no job."""
     from .dedup import _shingles
 
     docs = _docs(spark, sf_dir).filter(F.size(F.split("text", " ")) >= 3)
     # lexicographically-smallest N shingles: order-insensitive choice
-    # (engines disagree on distinct-preserving order)
-    bench_row = (
-        docs.filter(F.col("doc_id") == 0)
-        .select(F.slice(F.array_sort(_shingles()), 1, N_BENCH_SHINGLES).alias("b"))
-        .first()
-    )
-    bench = F.array(*[F.lit(s) for s in (bench_row["b"] if bench_row else [])])
-    hits = F.size(F.array_intersect(_shingles(), bench))
-    return docs.select(
+    # (engines disagree on distinct-preserving order); no doc 0 -> empty
+    bench = docs.filter(F.col("doc_id") == 0).agg(F.coalesce(
+        F.first(F.slice(F.array_sort(_shingles()), 1, N_BENCH_SHINGLES)),
+        F.array().cast("array<string>"),
+    ).alias("bench"))
+    hits = F.size(F.array_intersect(_shingles(), F.col("bench")))
+    return docs.crossJoin(F.broadcast(bench)).select(
         "doc_id",
         hits.alias("n_bench_hits"),
         (hits >= DECON_FLAG_MIN_HITS).alias("contaminated"),
@@ -597,11 +596,12 @@ def pmi_collocations(spark: SparkSession, sf_dir: str,
     docs = _docs_raw(spark, sf_dir)
     ws = F.split("text", " ")
     # both corpus totals in ONE narrow agg of per-doc sizes (every doc
-    # has >= 1 split token, so its bigram positions = size - 1 >= 0)
-    n_uni, n_bi = docs.agg(
-        F.coalesce(F.sum(F.size(ws)), F.lit(0)),
-        F.coalesce(F.sum(F.size(ws) - 1), F.lit(0)),
-    ).first()
+    # has >= 1 split token, so its bigram positions = size - 1 >= 0): a
+    # 1-row aggregate crossJoined back broadcast, so no job at build time
+    totals = docs.agg(
+        F.coalesce(F.sum(F.size(ws)), F.lit(0)).cast("double").alias("n_uni"),
+        F.coalesce(F.sum(F.size(ws) - 1), F.lit(0)).cast("double").alias("n_bi"),
+    )
     pairs = F.zip_with(
         F.slice(ws, 1, F.size(ws) - 1),
         F.slice(ws, 2, F.size(ws) - 1),
@@ -623,10 +623,10 @@ def pmi_collocations(spark: SparkSession, sf_dir: str,
     )
     pmi = F.round(
         F.log(
-            (F.col("c12") / F.lit(float(n_bi)))
+            (F.col("c12") / F.col("n_bi"))
             / (
-                (F.col("c1") / F.lit(float(n_uni)))
-                * (F.col("c2") / F.lit(float(n_uni)))
+                (F.col("c1") / F.col("n_uni"))
+                * (F.col("c2") / F.col("n_uni"))
             )
         ),
         9,
@@ -636,6 +636,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str,
     return (
         c12.join(_vocab_dim(d1, broadcast_vocab), "w1")
         .join(_vocab_dim(d2, broadcast_vocab), "w2")
+        .crossJoin(F.broadcast(totals))
         .select("w1", "w2", "c12", pmi.alias("pmi"))
         .orderBy(F.desc("pmi"), "w1", "w2")
         .limit(PMI_TOPK)
@@ -801,8 +802,9 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the query-term filter lands INSIDE the explode (the
     array is filtered before generation), so the per-(doc,term) tf
     aggregate only ever carries |query| terms per doc; df is one more
-    tiny aggregate over that (|query| rows, broadcast back); avgdl and
-    N are metadata-cheap count aggregates. Top-k is orderBy+limit —
+    tiny aggregate over that (|query| rows, broadcast back); N is the
+    footer's row count and avgdl a 1-row aggregate broadcast back, so
+    building the query runs no job. Top-k is orderBy+limit —
     Spark plans TakeOrderedAndProject (per-partition partial top-k,
     driver merge of K rows), never a single-partition global sort.
 
@@ -812,13 +814,14 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (<= |query| addends, drift ~1e-15) to 6."""
     docs = _docs_raw(spark, sf_dir)
     words = F.split("text", " ")
-    # both scalars in ONE narrow agg: sum(size(words)) is the exact
-    # token total without a row per token
-    n_docs, total_words = docs.agg(
-        F.count("*"), F.coalesce(F.sum(F.size(words)), F.lit(0))
-    ).first()
-    # exact ints -> one correctly-rounded double (no row reads it if empty)
-    avgdl = total_words / max(n_docs, 1)
+    n_docs = parquet_num_rows(spark, f"{sf_dir}/documents.parquet")
+    # sum(size(words)) is the exact token total without a row per token;
+    # exact ints -> one correctly-rounded double (no row reads it if
+    # empty), as a 1-row aggregate crossJoined back broadcast
+    avgdl = docs.agg(
+        (F.coalesce(F.sum(F.size(words)), F.lit(0)) / F.lit(max(n_docs, 1)))
+        .alias("avgdl")
+    )
     hits = docs.select(
         "doc_id",
         F.size(words).alias("dl"),
@@ -833,11 +836,12 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     term_score = F.round(
         F.col("idf") * (F.col("tf") * (BM25_K1 + 1.0))
         / (F.col("tf")
-           + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))),
+           + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))),
         9,
     )
     scored = (
         tf.join(F.broadcast(df_tbl.select("term", idf.alias("idf"))), "term")
+        .crossJoin(F.broadcast(avgdl))
         .select("doc_id", term_score.alias("s"))
         .groupBy("doc_id")
         .agg(F.round(F.sum("s"), 6).alias("score"))

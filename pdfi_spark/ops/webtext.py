@@ -859,6 +859,22 @@ def read_warc_pages(df: DataFrame, warc_col: str = "content") -> DataFrame:
     )
 
 
+def _capture_blob(doc_id: int, text: str) -> bytes:
+    """One document's boiler-recipe page as its capture triple
+    (request/response/metadata) in .warc.gz form, one gzip member per
+    record, for target URI ``https://example.org/page/<doc_id>``."""
+    from ..core.warc import build_capture_records, gzip_member
+
+    page, _ = build_html(text, "boiler", per_block=ORACLE_PER_BLOCK)
+    return b"".join(
+        gzip_member(rec)
+        for rec in build_capture_records(
+            f"https://example.org/page/{doc_id}", "2026-01-01T00:00:00Z",
+            page, record_id=f"{doc_id:08x}",
+        )
+    )
+
+
 def warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC roundtrip query: build each document's capture triple
     (request/response/metadata, gzip member per record — the exact
@@ -867,27 +883,14 @@ def warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     strip. A hash match proves Content-Length framing, the member-per-
     record gzip layout, and response-record selection all survived.
     Fused generate+parse mapInPandas: zero exchanges, scan pruned."""
-    from ..core.warc import (
-        build_capture_records, gunzip_members, gzip_member, parse_records,
-        split_http_payload,
-    )
+    from ..core.warc import gunzip_members, parse_records, split_http_payload
 
     def run(iterator):
         for batch in iterator:
             rows = []
             for doc_id, text in zip(batch["doc_id"], batch["text"]):
                 doc_id = int(doc_id)
-                page, _ = build_html(text, "boiler",
-                                     per_block=ORACLE_PER_BLOCK)
-                url = f"https://example.org/page/{doc_id}"
-                blob = b"".join(
-                    gzip_member(rec)
-                    for rec in build_capture_records(
-                        url, "2026-01-01T00:00:00Z", page,
-                        record_id=f"{doc_id:08x}",
-                    )
-                )
-                recs = parse_records(gunzip_members(blob))
+                recs = parse_records(gunzip_members(_capture_blob(doc_id, text)))
                 caps = [r for r in recs if r["type"] == "response"]
                 rows.append({
                     "doc_id": doc_id,

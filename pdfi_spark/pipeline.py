@@ -110,7 +110,12 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
     the same path on every worker host: always true in local mode, and
     on a cluster when the package zip or checkout sits at one shared
     path. YARN also puts the shipped ``--py-files`` on that variable,
-    which covers its executors.
+    which covers its executors. Spark starts the daemon with
+    ``python -m`` in the worker's working directory, and ``-m`` puts
+    that directory first on ``sys.path``: a ``pdfi_spark`` package there
+    (another checkout) would shadow ``PACKAGE_ROOT``. The workers'
+    environment therefore also sets ``PYTHONSAFEPATH=1``, which drops
+    that entry. Python before 3.11 ignores the variable.
     """
     advisory = os.environ.get("PDFI_SPARK_ADVISORY_PARTITION", "8m")
     builder = SparkSession.builder.appName(app_name)
@@ -135,9 +140,6 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE))
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # overwrite only the bucket partitions a wave touches, never the
-        # whole output root (which also holds the commit manifest)
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.python.daemon.module", "pdfi_spark._worker_daemon")
         .getOrCreate()
     )
@@ -147,6 +149,9 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
     paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
     if PACKAGE_ROOT not in paths:
         env["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])
+    # the daemon starts as ``python -m``, which would otherwise put the
+    # working directory ahead of PACKAGE_ROOT on sys.path
+    env["PYTHONSAFEPATH"] = "1"
     return spark
 
 
@@ -303,51 +308,6 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, output_dir: str,
 
     Returns a summary dict with totals and resume stats.
     """
-    # the per-wave partitionBy overwrite is only additive under DYNAMIC
-    # partition-overwrite; a vanilla session defaults to STATIC, which
-    # would wipe previously committed buckets (and the manifest) on wave
-    # 2 — pin it here and restore after, like streaming's timezone pin
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        return _run_pipeline_inner(
-            spark, documents, output_dir, run_id, n_buckets, wave_size,
-            payload_col,
-        )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-
-
-def _lineage_aggregates(wave: list[int]) -> list:
-    """A wave's per-bucket lineage aggregates, written as SQL text.
-
-    Every call that builds a ``Column`` through the Python API is a py4j
-    round trip. On a 4-core Xeon at local[4], the same aggregates for a
-    16-bucket wave built from chained ``F.when``/``F.sum`` calls (80
-    columns) take a median 0.32 s of driver time; these 64 parsed
-    strings take 0.02 s. One sketch per bucket serves both percentiles,
-    so p50 and p99 come from the same inserts.
-    """
-    aggs = []
-    for b in wave:
-        aggs.extend(F.expr(sql) for sql in (
-            f"count_if(bucket = {b}) AS n_docs_{b}",
-            f"sum(if(bucket = {b}, _nbytes, 0)) AS n_bytes_{b}",
-            f"count_if(bucket = {b} AND error IS NOT NULL) AS n_errors_{b}",
-            f"percentile_approx(if(bucket = {b}, _ms, NULL), array(0.5, 0.99))"
-            f" AS p_ms_{b}",
-        ))
-    return aggs
-
-
-def _run_pipeline_inner(spark: SparkSession, documents: DataFrame,
-                        output_dir: str, run_id: str, n_buckets: int,
-                        wave_size: int | None, payload_col: str) -> dict:
     store = CheckpointStore(output_dir)
     done = store.committed_buckets()
     bucketed = with_bucket(documents, n_buckets=n_buckets)
@@ -378,8 +338,12 @@ def _run_pipeline_inner(spark: SparkSession, documents: DataFrame,
         obs = Observation(f"wave_{wave[0]}")
         observed = extracted.hint("rebalance", "bucket") \
             .observe(obs, *_lineage_aggregates(wave))
+        # dynamic partition overwrite, set on this write and not the
+        # session: replace only the bucket partitions this wave touches,
+        # never the committed ones or the manifest beside them
         observed.select("url", "text", "n_pages", "n_chars", "error", "_nbytes", "bucket") \
-            .write.mode("overwrite").partitionBy("bucket").parquet(output_dir)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("bucket").parquet(output_dir)
         wall_ms = int((time.time() - start) * 1000)
         stats = obs.get
         for bucket in wave:
@@ -402,6 +366,28 @@ def _run_pipeline_inner(spark: SparkSession, documents: DataFrame,
             summary["n_docs"] += row["n_docs"]
             summary["n_errors"] += row["n_errors"]
     return summary
+
+
+def _lineage_aggregates(wave: list[int]) -> list:
+    """A wave's per-bucket lineage aggregates, written as SQL text.
+
+    Every call that builds a ``Column`` through the Python API is a py4j
+    round trip. On a 4-core Xeon at local[4], the same aggregates for a
+    16-bucket wave built from chained ``F.when``/``F.sum`` calls (80
+    columns) take a median 0.32 s of driver time; these 64 parsed
+    strings take 0.02 s. One sketch per bucket serves both percentiles,
+    so p50 and p99 come from the same inserts.
+    """
+    aggs = []
+    for b in wave:
+        aggs.extend(F.expr(sql) for sql in (
+            f"count_if(bucket = {b}) AS n_docs_{b}",
+            f"sum(if(bucket = {b}, _nbytes, 0)) AS n_bytes_{b}",
+            f"count_if(bucket = {b} AND error IS NOT NULL) AS n_errors_{b}",
+            f"percentile_approx(if(bucket = {b}, _ms, NULL), array(0.5, 0.99))"
+            f" AS p_ms_{b}",
+        ))
+    return aggs
 
 
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -10,12 +10,16 @@ Determinism note: every query here is driven with
 ``trigger(availableNow=True)`` against static input, so results equal
 the batch equivalents exactly (the watermark never drops rows within a
 single available-now run) — which is what makes them oracle-checkable.
+Every stream starts in ``run_available_now``, which names its own
+memory sink and checkpoint, so no operator takes a sink name.
 """
 from __future__ import annotations
 
 import atexit
 import shutil
 import tempfile
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,6 +27,15 @@ from pyspark.sql import functions as F
 from .datagen import DOCUMENTS_SCHEMA
 from .ops._scan import read
 from .pipeline import extract_text
+
+# the tumbling event-time window and the watermark that bounds window
+# state; one session gap serves the native session windows and the
+# batch lag/cumsum sessionizer alike
+WINDOW = "1 hour"
+WATERMARK = "10 minutes"
+SESSION_GAP_MINUTES = 30
+# a split scratch input is this many files, delivered one per micro-batch
+N_INPUT_FILES = 4
 
 
 def scratch_dir(prefix: str) -> str:
@@ -34,28 +47,45 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
-def run_available_now(df: DataFrame, query_name: str, output_mode: str,
-                      checkpoint_prefix: str,
+def run_available_now(df: DataFrame, output_mode: str,
                       checkpoint_dir: str | None = None) -> DataFrame:
     """Run the streaming frame ``df`` as one available-now pass into a
-    memory sink named ``query_name`` and return the sink's table. The
-    checkpoint goes to ``checkpoint_dir``, or else to a fresh
-    self-cleaning ``scratch_dir`` with ``checkpoint_prefix``."""
+    memory sink and return the sink's table. The sink name and the
+    checkpoint prefix come from one unique label, so two runs in one
+    session never share a sink and a frame returned earlier keeps
+    reading its own result. The checkpoint goes to ``checkpoint_dir``,
+    or else to a fresh self-cleaning ``scratch_dir``."""
+    label = f"pdfi_stream_{uuid.uuid4().hex[:8]}"
     (
-        df.writeStream.queryName(query_name)
+        df.writeStream.queryName(label)
         .format("memory")
         .outputMode(output_mode)
         .option("checkpointLocation",
-                checkpoint_dir or scratch_dir(prefix=checkpoint_prefix))
+                checkpoint_dir or scratch_dir(prefix=f"{label}_ckpt_"))
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
     )
-    return df.sparkSession.table(query_name)
+    return df.sparkSession.table(label)
+
+
+def _scratch_stream(frame: DataFrame, split: bool = False) -> DataFrame:
+    """Write ``frame`` to a self-cleaning scratch directory and stream it
+    back with the frame's own schema. A ``split`` input is written as
+    N_INPUT_FILES files and delivered one file per micro-batch
+    (maxFilesPerTrigger=1), so operator state has to persist across
+    micro-batches."""
+    input_dir = scratch_dir(prefix="pdfi_stream_in_")
+    if split:
+        frame = frame.repartition(N_INPUT_FILES)
+    frame.write.mode("overwrite").parquet(input_dir)
+    reader = frame.sparkSession.readStream.schema(frame.schema)
+    if split:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return reader.parquet(input_dir)
 
 
 def extract_stream(spark: SparkSession, input_dir: str,
-                   query_name: str = "extract_stream",
                    checkpoint_dir: str | None = None) -> DataFrame:
     """Streaming twin of the batch pipeline: readStream(parquet) ->
     mapInPandas extraction -> memory sink, one available-now pass.
@@ -65,27 +95,23 @@ def extract_stream(spark: SparkSession, input_dir: str,
     result inspectable and the checkpoint is still exercised."""
     stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_dir)
     return run_available_now(
-        extract_text(stream, payload_col="html"), query_name, "append",
-        "pdfi_stream_ckpt_", checkpoint_dir,
+        extract_text(stream, payload_col="html"), "append", checkpoint_dir
     )
 
 
-def windowed_event_counts(spark: SparkSession, sf_dir: str,
-                          window: str = "1 hour",
-                          watermark: str = "10 minutes",
-                          query_name: str = "windowed_event_counts") -> DataFrame:
-    """Watermarked tumbling-window aggregation over the events stream:
-    count + sum(value) per (window, event_type). The watermark bounds
-    state at scale; with available-now input it drops nothing, so the
-    result equals the batch GROUP BY (the DuckDB oracle)."""
-    # the streaming file source needs a directory: stream the sf_dir with
-    # a glob filter selecting just the events file
-    # Watermarks require an LTZ event-time column, and NTZ-parquet -> LTZ
-    # reinterpretation depends on the session timezone. Pin it to UTC for
-    # exactly the duration of this run (restored in finally — no permanent
-    # session mutation) and emit window_start as TIMESTAMP_NTZ *inside*
-    # the query, so the materialized result is a pure function of the
-    # stored wall-clock values on any host timezone.
+def _utc_events_pass(spark: SparkSession, sf_dir: str,
+                     aggregate: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """Run ``aggregate`` over the watermarked events stream as one
+    complete-mode available-now pass.
+
+    The streaming file source needs a directory, so the sf_dir is
+    streamed with a glob filter selecting just the events file. Reading
+    NTZ parquet as the LTZ column a watermark needs depends on the
+    session timezone, so it is pinned to UTC for exactly the duration of
+    this run (restored in finally — no permanent session mutation), and
+    ``aggregate`` emits its window starts as TIMESTAMP_NTZ *inside* the
+    query: the materialized result is a pure function of the stored
+    wall-clock values on any host timezone."""
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
@@ -96,152 +122,104 @@ def windowed_event_counts(spark: SparkSession, sf_dir: str,
             )
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
-            .withWatermark("ts", watermark)
+            .withWatermark("ts", WATERMARK)
         )
-        agg = (
-            events.groupBy(F.window("ts", window).alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 6).alias("sum_value"),
-            )
-            .select(
-                F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
-        )
-        return run_available_now(
-            agg, query_name, "complete", "pdfi_stream_ckpt_"
-        )
+        return run_available_now(aggregate(events), "complete")
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
-def streaming_dedup_state(spark: SparkSession, sf_dir: str,
-                          query_name: str = "streaming_dedup_state",
-                          n_input_files: int = 4) -> DataFrame:
+def windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked tumbling-window aggregation over the events stream:
+    count + sum(value) per (window, event_type). The watermark bounds
+    state at scale; with available-now input it drops nothing, so the
+    result equals the batch GROUP BY (the DuckDB oracle)."""
+    return _utc_events_pass(spark, sf_dir, lambda events: (
+        events.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
+        )
+        .select(
+            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    ))
+
+
+def _first_seen_ledger(keyed: DataFrame, key: str, count_col: str) -> DataFrame:
     """CUSTOM STATEFUL streaming operator (applyInPandasWithState): a
-    first-seen dedup ledger keyed on the 5-word-prefix dedup key. Each
+    first-seen ledger over the streaming ``(key, doc_id)`` rows. Each
     micro-batch updates per-key GroupState (running count + smallest
-    doc_id); the input is split into several files with
-    maxFilesPerTrigger=1, so state genuinely persists ACROSS micro-batches
-    (an availableNow run executes n_input_files sequential batches).
-    The final ledger equals the batch dedup_exact aggregate — which is
-    what makes this oracle-checkable. State is bounded by distinct keys;
-    at crawl scale a TTL timeout (GroupStateTimeout) ages out cold keys."""
+    doc_id). Returns the update-mode memory sink, which holds one
+    ``(key, count_col, keep_id)`` row per key PER BATCH that touched it;
+    the final ledger row per key is the max count / min keep_id. State
+    is bounded by distinct keys; at crawl scale a TTL timeout
+    (GroupStateTimeout) ages out cold keys."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    def update(k, pdfs, state):
+        count, min_id = state.get if state.exists else (0, None)
+        for pdf in pdfs:
+            count += len(pdf)
+            batch_min = int(pdf["doc_id"].min())
+            min_id = batch_min if min_id is None else min(min_id, batch_min)
+        state.update((count, min_id))
+        yield pd.DataFrame([{key: k[0], count_col: count, "keep_id": min_id}])
+
+    updates = keyed.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=f"{key} string, {count_col} long, keep_id long",
+        stateStructType="count long, min_id long",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return run_available_now(updates, "update")
+
+
+def streaming_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The first-seen dedup ledger keyed on the 5-word-prefix dedup key.
+    The input is a split scratch stream, so state genuinely persists
+    ACROSS micro-batches (an availableNow run executes N_INPUT_FILES
+    sequential batches). The final ledger equals the batch dedup_exact
+    aggregate — which is what makes this oracle-checkable."""
     docs = read(spark, f"{sf_dir}/documents.parquet").select(
         F.concat_ws(" ", F.slice(F.split("text", " "), 1, 5)).alias("dedup_key"),
         "doc_id",
     )
-    input_dir = scratch_dir(prefix="pdfi_dedup_state_in_")
-    docs.repartition(n_input_files).write.mode("overwrite").parquet(input_dir)
-
-    stream = (
-        spark.readStream.schema("dedup_key string, doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    ledger = _first_seen_ledger(
+        _scratch_stream(docs, split=True), "dedup_key", "n_dups"
     )
-
-    def update(key, pdfs, state):
-        if state.exists:
-            count, min_id = state.get
-        else:
-            count, min_id = 0, None
-        for pdf in pdfs:
-            count += len(pdf)
-            batch_min = int(pdf["doc_id"].min())
-            min_id = batch_min if min_id is None else min(min_id, batch_min)
-        state.update((count, min_id))
-        yield pd.DataFrame(
-            [{"dedup_key": key[0], "n_dups": count, "keep_id": min_id}]
-        )
-
-    updates = stream.groupBy("dedup_key").applyInPandasWithState(
-        update,
-        outputStructType="dedup_key string, n_dups long, keep_id long",
-        stateStructType="count long, min_id long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    ledger = run_available_now(
-        updates, query_name, "update", "pdfi_dedup_state_ckpt_"
-    )
-    # the memory sink holds one row per key PER BATCH that touched it;
-    # the final ledger row per key is the max count / min keep_id
-    return (
-        ledger.groupBy("dedup_key")
-        .agg(F.max("n_dups").alias("n_dups"), F.min("keep_id").alias("keep_id"))
+    return ledger.groupBy("dedup_key").agg(
+        F.max("n_dups").alias("n_dups"), F.min("keep_id").alias("keep_id")
     )
 
 
-def url_dedup_streaming(spark: SparkSession, sf_dir: str,
-                        query_name: str = "url_dedup_streaming",
-                        n_input_files: int = 4) -> DataFrame:
+def url_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous crawl-ingest dedup: the codegen canonical_url chain
     applied INSIDE a stream (expression chains work unchanged on
     streaming DataFrames), feeding the same first-seen GroupState
     ledger as streaming_dedup_state but keyed on the canonical URL —
-    what a live crawler runs to skip re-fetched resources. Input split
-    across files with maxFilesPerTrigger=1 so state persists across
-    micro-batches; the final ledger equals the batch url_dedup_counts
-    aggregate (the oracle). At crawl scale the ledger gets a
-    GroupStateTimeout TTL; here keys are bounded."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    what a live crawler runs to skip re-fetched resources. The input is
+    a split scratch stream, so state persists across micro-batches; the
+    final ledger equals the batch url_dedup_counts aggregate (the
+    oracle)."""
     from .ops.webtext import _raw_url_expr, canonical_url
 
     docs = read(spark, f"{sf_dir}/documents.parquet").select("doc_id")
-    input_dir = scratch_dir(prefix="pdfi_url_dedup_in_")
-    docs.repartition(n_input_files).write.mode("overwrite").parquet(input_dir)
-
-    stream = (
-        spark.readStream.schema("doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    canon = _scratch_stream(docs, split=True).select(
+        canonical_url(_raw_url_expr()).alias("canon_url"), "doc_id"
     )
-    canon = stream.select(
-        "doc_id", canonical_url(_raw_url_expr()).alias("canon_url")
-    )
-
-    def update(key, pdfs, state):
-        if state.exists:
-            count, min_id = state.get
-        else:
-            count, min_id = 0, None
-        for pdf in pdfs:
-            count += len(pdf)
-            batch_min = int(pdf["doc_id"].min())
-            min_id = batch_min if min_id is None else min(min_id, batch_min)
-        state.update((count, min_id))
-        yield pd.DataFrame(
-            [{"canon_url": key[0], "n_docs": count, "keep_id": min_id}]
-        )
-
-    updates = canon.groupBy("canon_url").applyInPandasWithState(
-        update,
-        outputStructType="canon_url string, n_docs long, keep_id long",
-        stateStructType="count long, min_id long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    ledger = run_available_now(
-        updates, query_name, "update", "pdfi_url_dedup_ckpt_"
-    )
-    # one row per key per touching batch -> final ledger row per key
-    return (
-        ledger.groupBy("canon_url")
-        .agg(F.max("n_docs").alias("n_docs"), F.min("keep_id").alias("keep_id"))
+    ledger = _first_seen_ledger(canon, "canon_url", "n_docs")
+    return ledger.groupBy("canon_url").agg(
+        F.max("n_docs").alias("n_docs"), F.min("keep_id").alias("keep_id")
     )
 
 
-def frontier_schedule_streaming(spark: SparkSession, sf_dir: str,
-                                query_name: str = "frontier_stream",
-                                n_input_files: int = 4) -> DataFrame:
+def frontier_schedule_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous politeness scheduler: the streaming twin of
     ops.webtext.frontier_schedule. Robots-allowed pages arrive in
     micro-batches; per-host GroupState keeps the running fetch counter,
@@ -275,15 +253,15 @@ def frontier_schedule_streaming(spark: SparkSession, sf_dir: str,
     # the synthetic input files; production frontiers stream from a real
     # source and never run this block
     hi = allowed.agg(F.max("doc_id")).first()[0] or 0
-    span = hi // n_input_files + 1
+    span = hi // N_INPUT_FILES + 1
     input_dir = scratch_dir(prefix="pdfi_frontier_in_")
-    for i in range(n_input_files):  # sequential jobs: increasing mtimes
+    for i in range(N_INPUT_FILES):  # sequential jobs: increasing mtimes
         allowed.filter(
             (F.col("doc_id") >= i * span) & (F.col("doc_id") < (i + 1) * span)
         ).coalesce(1).write.mode("append").parquet(input_dir)
 
     stream = (
-        spark.readStream.schema("doc_id long, host string")
+        spark.readStream.schema(allowed.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )
@@ -316,56 +294,33 @@ def frontier_schedule_streaming(spark: SparkSession, sf_dir: str,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     # each doc is emitted exactly once (in the batch that delivered it)
-    return run_available_now(
-        updates, query_name, "update", "pdfi_frontier_ckpt_"
-    )
+    return run_available_now(updates, "update")
 
 
-def session_window_events(spark: SparkSession, sf_dir: str,
-                          gap: str = "30 minutes",
-                          watermark: str = "10 minutes",
-                          query_name: str = "session_window_events") -> DataFrame:
+def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NATIVE streaming session windows (F.session_window): Spark's
     merging-window state machine, vs sessionize_events' batch
     lag/cumsum formulation of the same sessions. Window semantics are
-    half-open — an event exactly `gap` after the previous one starts a
-    NEW session (the DuckDB oracle mirrors with `diff >= gap`).
-    Timezone handling matches windowed_event_counts: pin UTC for the
-    run, emit NTZ columns."""
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        events = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, "
-                "value double, props string"
-            )
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .withWatermark("ts", watermark)
+    half-open — an event exactly SESSION_GAP_MINUTES after the previous
+    one starts a NEW session (the DuckDB oracle mirrors with
+    `diff >= gap`). Timezone handling matches windowed_event_counts."""
+    gap = f"{SESSION_GAP_MINUTES} minutes"
+    return _utc_events_pass(spark, sf_dir, lambda events: (
+        events.groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.min("event_id").alias("first_event"),
         )
-        agg = (
-            events.groupBy("user_id", F.session_window("ts", gap).alias("w"))
-            .agg(
-                F.count("*").alias("n_events"),
-                F.min("event_id").alias("first_event"),
-            )
-            .select(
-                "user_id",
-                F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-                "n_events",
-                "first_event",
-            )
+        .select(
+            "user_id",
+            F.col("w.start").cast("timestamp_ntz").alias("session_start"),
+            "n_events",
+            "first_event",
         )
-        return run_available_now(
-            agg, query_name, "complete", "pdfi_sesswin_ckpt_"
-        )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    ))
 
 
-def sessionize_events(spark: SparkSession, sf_dir: str,
-                      gap_minutes: int = 30) -> DataFrame:
+def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows via the lag -> gap-flag -> running-sum pattern
     (batch DataFrame; the same sessionization the reference's layout
     clustering uses per document, SURVEY.md §2.7, applied cross-row).
@@ -384,7 +339,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str,
         "new_session",
         # half-open boundary (gap >= timeout starts a NEW session),
         # matching the native session_window operator exactly
-        F.when(gap.isNull() | (gap >= gap_minutes * 60), 1).otherwise(0),
+        F.when(gap.isNull() | (gap >= SESSION_GAP_MINUTES * 60), 1).otherwise(0),
     )
     sessions = flagged.withColumn(
         "session_seq", F.sum("new_session").over(

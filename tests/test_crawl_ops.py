@@ -124,9 +124,7 @@ def test_frontier_streaming_equals_batch_schedule(spark):
     from pdfi_spark.streaming import frontier_schedule_streaming
 
     stream_rows = sorted(
-        map(tuple, frontier_schedule_streaming(
-            spark, SF, query_name="frontier_test"
-        ).collect())
+        map(tuple, frontier_schedule_streaming(spark, SF).collect())
     )
     batch_rows = sorted(map(tuple, ops.frontier_schedule(spark, SF).collect()))
     assert stream_rows == batch_rows

@@ -546,11 +546,14 @@ def test_exact_substring_excise_in_row(spark):
 def test_bm25_topk_take_ordered(spark):
     # top-k must be TakeOrderedAndProject (per-partition partial top-k),
     # never a global sort through a single partition; the 3-row df
-    # dimension joins broadcast
+    # dimension joins broadcast. The one single-partition exchange is
+    # the 1-row avgdl aggregate's, under its broadcast
     plan = _plan(ops.bm25_topk(spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange SinglePartition" not in plan, plan
-    assert "BroadcastExchange" in plan, plan
+    assert plan.count("Exchange SinglePartition") == 1, plan
+    assert plan.index("BroadcastExchange IdentityBroadcastMode") \
+        < plan.index("Exchange SinglePartition"), plan
+    assert "BroadcastExchange HashedRelationBroadcastMode" in plan, plan
 
 
 def test_surprisal_buckets_no_per_lang_window(spark):
@@ -707,12 +710,18 @@ def test_host_cap_sample_one_host_window_no_funnel(spark):
 
 def test_pmi_collocations_broadcast_dims_topk(spark):
     # the two unigram dimension sides ride BroadcastExchanges off the
-    # checkpointed vocab aggregate; the only shuffle is the c12
-    # aggregate; top-k is TakeOrderedAndProject, never a global sort
+    # checkpointed vocab aggregate; the only data shuffle is the c12
+    # aggregate, and the one single-partition exchange is the 1-row
+    # totals aggregate's, under its broadcast; top-k is
+    # TakeOrderedAndProject, never a global sort
     plan = _plan(ops.pmi_collocations(spark, SF))
     assert "TakeOrderedAndProject" in plan
-    assert plan.count("BroadcastExchange") == 2
-    assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
+    assert plan.count("BroadcastExchange HashedRelationBroadcastMode") == 2
+    assert plan.count("BroadcastExchange IdentityBroadcastMode") == 1
+    assert plan.count("Exchange") - plan.count("BroadcastExchange") == 2
+    assert plan.count("Exchange SinglePartition") == 1, plan
+    assert plan.index("BroadcastExchange IdentityBroadcastMode") \
+        < plan.index("Exchange SinglePartition"), plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
 
 

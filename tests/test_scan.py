@@ -62,9 +62,7 @@ def test_footer_schema_of_a_spark_written_file(spark, tmp_path):
 # collected scalar is two jobs under AQE: the shuffle-map stage and the
 # result).
 CONSTRUCTION_JOBS = {
-    "decontaminate": (2, "collects the benchmark shingle set (.first())"),
-    "bm25_topk": (2, "collects N and the corpus token total (.first())"),
-    "pmi_collocations": (4, "collects the token totals and checkpoints the unigram counts"),
+    "pmi_collocations": (2, "eager checkpoint of the unigram counts"),
     "cms_heavy_hitters": (2, "eager checkpoint of the per-term counts"),
     "ngram_jaccard": (2, "eager checkpoint of the shingle sets"),
     "simhash_neardup_pairs": (2, "eager checkpoint of the signatures"),

@@ -21,8 +21,7 @@ def test_extract_stream_matches_batch(spark, tmp_path):
     docs.write.parquet(input_dir)
 
     streamed = extract_stream(
-        spark, input_dir, query_name="t_extract_stream",
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        spark, input_dir, checkpoint_dir=str(tmp_path / "ckpt"),
     ).toPandas().sort_values("url").reset_index(drop=True)
 
     batch = (
@@ -34,10 +33,8 @@ def test_extract_stream_matches_batch(spark, tmp_path):
     assert streamed["error"].isna().all()
 
 
-def test_windowed_event_counts_match_batch(spark):
-    sf = "/root/testdata/sf0.01"
-    streamed = windowed_event_counts(spark, sf, query_name="t_windowed")
-    batch = (
+def _windowed_batch(spark, sf):
+    return (
         spark.read.parquet(f"{sf}/events.parquet")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"),
@@ -45,6 +42,9 @@ def test_windowed_event_counts_match_batch(spark):
         .select(F.col("w.start").alias("window_start"), "event_type",
                 "n_events", "sum_value")
     )
+
+
+def _assert_windowed_equal(streamed, batch):
     s = streamed.toPandas().sort_values(["window_start", "event_type"]).reset_index(drop=True)
     b = batch.toPandas().sort_values(["window_start", "event_type"]).reset_index(drop=True)
     assert len(s) == len(b) > 0
@@ -52,8 +52,26 @@ def test_windowed_event_counts_match_batch(spark):
     assert (s["sum_value"].values == b["sum_value"].values).all()
 
 
+def test_windowed_event_counts_match_batch(spark):
+    sf = "/root/testdata/sf0.01"
+    _assert_windowed_equal(windowed_event_counts(spark, sf), _windowed_batch(spark, sf))
+
+
+def test_streaming_operator_twice_in_one_session(spark):
+    """Each run names its own memory sink: a second run over another
+    input leaves the first run's frame reading the first result."""
+    small, large = SF, "/root/testdata/sf0.01"
+    first = windowed_event_counts(spark, small)
+    _assert_windowed_equal(first, _windowed_batch(spark, small))
+    second = windowed_event_counts(spark, large)
+    _assert_windowed_equal(second, _windowed_batch(spark, large))
+    _assert_windowed_equal(first, _windowed_batch(spark, small))
+    n_events = [f.agg(F.sum("n_events")).first()[0] for f in (first, second)]
+    assert n_events[0] != n_events[1]
+
+
 def test_sessionize_events_gap_semantics(spark):
-    sessions = sessionize_events(spark, "/root/testdata/sf0.01", gap_minutes=30)
+    sessions = sessionize_events(spark, "/root/testdata/sf0.01")
     pdf = sessions.toPandas()
     events = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
     assert pdf["n_events"].sum() == events.count()
@@ -75,23 +93,23 @@ def test_sessionize_events_gap_semantics(spark):
 
 
 def test_streaming_dedup_state_matches_batch_and_spans_batches(spark):
-    import uuid
+    from pdfi_spark.streaming import (
+        _first_seen_ledger, _scratch_stream, streaming_dedup_state,
+    )
 
-    from pyspark.sql import functions as F
-
-    from pdfi_spark.streaming import streaming_dedup_state
-
-    name = f"dedup_state_test_{uuid.uuid4().hex[:8]}"
-    ledger = streaming_dedup_state(spark, SF, query_name=name)
+    ledger = streaming_dedup_state(spark, SF)
+    dedup_key = F.concat_ws(" ", F.slice(F.split("text", " "), 1, 5)).alias("dedup_key")
     batch = (
         spark.read.parquet(f"{SF}/documents.parquet")
-        .groupBy(F.concat_ws(" ", F.slice(F.split("text", " "), 1, 5)).alias("dedup_key"))
+        .groupBy(dedup_key)
         .agg(F.count("*").alias("n_dups"), F.min("doc_id").alias("keep_id"))
     )
     assert ledger.exceptAll(batch).count() == 0
     assert batch.exceptAll(ledger).count() == 0
-    # update-mode sink re-emits a key's row in every micro-batch that
-    # touches it: with 4 input files there must be keys emitted >1 time,
-    # proving state persisted across micro-batches
-    emissions = spark.table(name).groupBy("dedup_key").count()
+    # the ledger's update-mode sink re-emits a key's row in every
+    # micro-batch that touches it: with 4 input files there must be keys
+    # emitted >1 time, proving state persisted across micro-batches
+    keyed = spark.read.parquet(f"{SF}/documents.parquet").select(dedup_key, "doc_id")
+    raw = _first_seen_ledger(_scratch_stream(keyed, split=True), "dedup_key", "n_dups")
+    emissions = raw.groupBy("dedup_key").count()
     assert emissions.filter("count > 1").count() > 0

@@ -104,3 +104,23 @@ def test_parquet_reads_go_through_the_one_reader():
         if n:
             hits[rel] = n
     assert hits == _READ_SITES_ALLOWED
+
+
+def test_streams_start_only_in_run_available_now():
+    """``.writeStream`` appears once, in ``streaming.run_available_now``:
+    the one place that names a stream's memory sink and checkpoint."""
+    import inspect
+
+    from pdfi_spark.streaming import run_available_now
+
+    files = [os.path.join(REPO, "__spark_entry__.py")]
+    for root, _, names in os.walk(os.path.join(REPO, "pdfi_spark")):
+        files += [os.path.join(root, n) for n in names if n.endswith(".py")]
+    hits = {}
+    for path in files:
+        with open(path, encoding="utf-8") as f:
+            n = len(re.findall(r"\.\s*writeStream\b", f.read()))
+        if n:
+            hits[os.path.relpath(path, REPO)] = n
+    assert hits == {os.path.join("pdfi_spark", "streaming.py"): 1}
+    assert ".writeStream" in inspect.getsource(run_available_now)

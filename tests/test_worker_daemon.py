@@ -181,3 +181,41 @@ def test_freeze_once_at_the_second_task():
     )
     assert proc.returncode == 0, proc.stderr
     assert proc.stdout.strip() == "ok"
+
+
+DECOY_SCRIPT = r"""
+import sys
+
+sys.path.insert(0, sys.argv[1])
+import pdfi_spark
+from pdfi_spark.pipeline import make_spark
+
+assert pdfi_spark.__file__.startswith(sys.argv[1]), pdfi_spark.__file__
+spark = make_spark("decoy-probe", master="local[1]")
+n = spark.range(4, numPartitions=1).mapInPandas(lambda it: it, "id long").count()
+spark.stop()
+print(n)
+"""
+
+
+def test_workers_ignore_a_daemon_in_the_working_directory(tmp_path):
+    """A driver whose working directory holds another ``pdfi_spark``
+    (say, a second checkout) still starts its workers on the daemon of
+    the package it imported: ``python -m`` would put the working
+    directory first on the workers' ``sys.path``."""
+    decoy = tmp_path / "cwd" / "pdfi_spark"
+    decoy.mkdir(parents=True)
+    (decoy / "__init__.py").write_text("")
+    (decoy / "_worker_daemon.py").write_text(
+        "raise SystemExit('decoy daemon imported')\n")
+    script = tmp_path / "probe.py"
+    script.write_text(DECOY_SCRIPT)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [sys.executable, str(script), REPO],
+        cwd=decoy.parent, env=env, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.strip().splitlines()[-1] == "4"
