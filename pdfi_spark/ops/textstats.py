@@ -126,10 +126,14 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     and building the query runs no job."""
     from .dedup import _shingles
 
-    docs = _docs(spark, sf_dir).filter(F.size(F.split("text", " ")) >= 3)
+    min_words = F.size(F.split("text", " ")) >= 3
+    docs = _docs(spark, sf_dir).filter(min_words)
     # lexicographically-smallest N shingles: order-insensitive choice
-    # (engines disagree on distinct-preserving order); no doc 0 -> empty
-    bench = docs.filter(F.col("doc_id") == 0).agg(F.coalesce(
+    # (engines disagree on distinct-preserving order); no doc 0 -> empty.
+    # The 1-row side reads unfanned at any size: it keeps at most one row
+    bench = read(spark, f"{sf_dir}/documents.parquet").filter(
+        min_words & (F.col("doc_id") == 0)
+    ).agg(F.coalesce(
         F.first(F.slice(F.array_sort(_shingles()), 1, N_BENCH_SHINGLES)),
         F.array().cast("array<string>"),
     ).alias("bench"))

@@ -21,7 +21,7 @@ import tempfile
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import DOCUMENTS_SCHEMA
@@ -69,20 +69,29 @@ def run_available_now(df: DataFrame, output_mode: str,
     return df.sparkSession.table(label)
 
 
-def _scratch_stream(frame: DataFrame, split: bool = False) -> DataFrame:
+def _scratch_stream(frame: DataFrame) -> DataFrame:
     """Write ``frame`` to a self-cleaning scratch directory and stream it
-    back with the frame's own schema. A ``split`` input is written as
-    N_INPUT_FILES files and delivered one file per micro-batch
-    (maxFilesPerTrigger=1), so operator state has to persist across
-    micro-batches."""
+    back with the frame's own schema, all in one micro-batch."""
     input_dir = scratch_dir(prefix="pdfi_stream_in_")
-    if split:
-        frame = frame.repartition(N_INPUT_FILES)
     frame.write.mode("overwrite").parquet(input_dir)
-    reader = frame.sparkSession.readStream.schema(frame.schema)
-    if split:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    return reader.parquet(input_dir)
+    return frame.sparkSession.readStream.schema(frame.schema).parquet(input_dir)
+
+
+def _split_stream(frame: DataFrame, part: Column) -> DataFrame:
+    """Stream ``frame`` back in N_INPUT_FILES micro-batches, in order:
+    the rows whose ``part`` is i are written as the i-th file of a
+    self-cleaning scratch directory, each in its own sequential job
+    (strictly increasing mtimes), and the file source delivers one file
+    per micro-batch, oldest first. So operator state has to persist
+    across micro-batches, and it sees the parts in ``part`` order."""
+    input_dir = scratch_dir(prefix="pdfi_stream_in_")
+    for i in range(N_INPUT_FILES):
+        frame.filter(part == i).coalesce(1).write.mode("append").parquet(input_dir)
+    return (
+        frame.sparkSession.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(input_dir)
+    )
 
 
 def extract_stream(spark: SparkSession, input_dir: str,
@@ -191,7 +200,8 @@ def streaming_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
     ledger = _first_seen_ledger(
-        _scratch_stream(docs, split=True), "dedup_key", "n_dups"
+        _split_stream(docs, F.pmod("doc_id", F.lit(N_INPUT_FILES))),
+        "dedup_key", "n_dups",
     )
     return ledger.groupBy("dedup_key").agg(
         F.max("n_dups").alias("n_dups"), F.min("keep_id").alias("keep_id")
@@ -210,7 +220,8 @@ def url_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ops.webtext import _raw_url_expr, canonical_url
 
     docs = read(spark, f"{sf_dir}/documents.parquet").select("doc_id")
-    canon = _scratch_stream(docs, split=True).select(
+    split = _split_stream(docs, F.pmod("doc_id", F.lit(N_INPUT_FILES)))
+    canon = split.select(
         canonical_url(_raw_url_expr()).alias("canon_url"), "doc_id"
     )
     ledger = _first_seen_ledger(canon, "canon_url", "n_docs")
@@ -254,17 +265,7 @@ def frontier_schedule_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source and never run this block
     hi = allowed.agg(F.max("doc_id")).first()[0] or 0
     span = hi // N_INPUT_FILES + 1
-    input_dir = scratch_dir(prefix="pdfi_frontier_in_")
-    for i in range(N_INPUT_FILES):  # sequential jobs: increasing mtimes
-        allowed.filter(
-            (F.col("doc_id") >= i * span) & (F.col("doc_id") < (i + 1) * span)
-        ).coalesce(1).write.mode("append").parquet(input_dir)
-
-    stream = (
-        spark.readStream.schema(allowed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
+    stream = _split_stream(allowed, F.expr(f"doc_id div {span}"))
 
     def update(key, pdfs, state):
         host = key[0]

@@ -92,12 +92,18 @@ def test_sessionize_events_gap_semantics(spark):
     assert n_sessions == int(pdf[pdf["user_id"] == uid]["session_seq"].max())
 
 
-def test_streaming_dedup_state_matches_batch_and_spans_batches(spark):
-    from pdfi_spark.streaming import (
-        _first_seen_ledger, _scratch_stream, streaming_dedup_state,
-    )
+def test_streaming_dedup_state_matches_batch_and_spans_batches(spark, monkeypatch):
+    from pdfi_spark import streaming
 
-    ledger = streaming_dedup_state(spark, SF)
+    raw_sinks = []
+    ledger_fn = streaming._first_seen_ledger
+
+    def recording_ledger(*args):
+        raw_sinks.append(ledger_fn(*args))
+        return raw_sinks[-1]
+
+    monkeypatch.setattr(streaming, "_first_seen_ledger", recording_ledger)
+    ledger = streaming.streaming_dedup_state(spark, SF)
     dedup_key = F.concat_ws(" ", F.slice(F.split("text", " "), 1, 5)).alias("dedup_key")
     batch = (
         spark.read.parquet(f"{SF}/documents.parquet")
@@ -107,9 +113,9 @@ def test_streaming_dedup_state_matches_batch_and_spans_batches(spark):
     assert ledger.exceptAll(batch).count() == 0
     assert batch.exceptAll(ledger).count() == 0
     # the ledger's update-mode sink re-emits a key's row in every
-    # micro-batch that touches it: with 4 input files there must be keys
-    # emitted >1 time, proving state persisted across micro-batches
-    keyed = spark.read.parquet(f"{SF}/documents.parquet").select(dedup_key, "doc_id")
-    raw = _first_seen_ledger(_scratch_stream(keyed, split=True), "dedup_key", "n_dups")
+    # micro-batch that touches it: with N_INPUT_FILES input files there
+    # must be keys emitted >1 time, proving state persisted across
+    # micro-batches of the operator's own run
+    [raw] = raw_sinks
     emissions = raw.groupBy("dedup_key").count()
     assert emissions.filter("count > 1").count() > 0
