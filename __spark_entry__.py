@@ -22,7 +22,10 @@ from pdfi_spark.core.pdfgen import ORACLE_EXPECTED_SQL, ORACLE_PER_BLOCK, build_
 from pdfi_spark.datagen import build_documents, build_documents_with_id
 from pdfi_spark.ops._scan import read
 from pdfi_spark.ops.dedup import MINHASH_LANE_OFFSETS, SIMHASH_BITS
-from pdfi_spark.ops.similarity import LSH_PLANES
+from pdfi_spark.ops.similarity import (
+    IVF_NPROBE, LLOYD_ITERS, LSH_PLANES, N_CENTROIDS, PQ_TOPK, QUERY_VEC_ID,
+    SEMDEDUP_TAU, SIM_TOPK,
+)
 from pdfi_spark.ops.textstats import BPE_ISH_RE, EN_STOPWORDS
 from pdfi_spark.pipeline import extract_text
 
@@ -630,8 +633,6 @@ _COSINE_EXPR = "(round(" + _COSINE_RAW + ", 3) + 0.0)"
 def _ivf_assigned_cte() -> str:
     """CTE chain reproducing ops.similarity._ivf_assign in SQL: first-8
     codebook, cross-join cosine, argmax per vector (ties -> centroid_id)."""
-    from pdfi_spark.ops.similarity import N_CENTROIDS
-
     cos = _COSINE_RAW.format(a="e.embedding", b="c.cvec")
     return (
         "WITH cent AS (SELECT vec_id AS centroid_id, embedding AS cvec "
@@ -676,7 +677,7 @@ _PQ_L2SQ = (
 )
 
 
-def _ivf_train_cte(iters: int = 2) -> tuple[list[str], str]:
+def _ivf_train_cte() -> tuple[list[str], str]:
     """Unrolled Lloyd CTE chain (shared by _ivf_train_sql and
     _semdedup_sql): returns (cte_parts, name_of_final_centroid_cte).
     The float-mean determinism problem (double sums depend on partition
@@ -685,7 +686,6 @@ def _ivf_train_cte(iters: int = 2) -> tuple[list[str], str]:
     cast("array<float>"); DuckDB: m::FLOAT), which rounds away the
     sub-ULP summation-order noise, so both engines iterate from
     bit-identical codebooks."""
-    from pdfi_spark.ops.similarity import N_CENTROIDS
 
     def cos(a: str, b: str) -> str:
         return _COSINE_RAW.format(a=a, b=b)
@@ -695,7 +695,7 @@ def _ivf_train_cte(iters: int = 2) -> tuple[list[str], str]:
         f"FROM embeddings WHERE vec_id < {N_CENTROIDS})"
     ]
     prev = "cent0"
-    for it in range(1, iters + 1):
+    for it in range(1, LLOYD_ITERS + 1):
         parts.append(
             f"a{it} AS (SELECT e.vec_id, e.embedding, c.centroid_id "
             f"FROM embeddings e CROSS JOIN {prev} c "
@@ -720,9 +720,9 @@ def _ivf_train_cte(iters: int = 2) -> tuple[list[str], str]:
     return parts, prev
 
 
-def _ivf_train_sql(iters: int = 2) -> str:
+def _ivf_train_sql() -> str:
     """Twin of ops.similarity.ivf_train_cells (see _ivf_train_cte)."""
-    parts, prev = _ivf_train_cte(iters)
+    parts, prev = _ivf_train_cte()
 
     def cos(a: str, b: str) -> str:
         return _COSINE_RAW.format(a=a, b=b)
@@ -738,15 +738,11 @@ def _ivf_train_sql(iters: int = 2) -> str:
     return ", ".join(parts) + " " + final
 
 
-def _semdedup_sql(iters: int = 2, tau: float | None = None) -> str:
+def _semdedup_sql() -> str:
     """Twin of ops.similarity.semdedup: trained-codebook assignment (the
     same unrolled Lloyd chain as _ivf_train_sql), then within-cell pairs
-    with round(cosine,3) >= tau mark the higher vec_id removed."""
-    from pdfi_spark.ops.similarity import SEMDEDUP_TAU
-
-    if tau is None:
-        tau = SEMDEDUP_TAU
-    parts, prev = _ivf_train_cte(iters)
+    with round(cosine,3) >= SEMDEDUP_TAU mark the higher vec_id removed."""
+    parts, prev = _ivf_train_cte()
     acos = _COSINE_RAW.format(a="e.embedding", b="c.cvec")
     pcos = _COSINE_EXPR.format(a="a.embedding", b="b.embedding")
     parts.append(
@@ -758,7 +754,7 @@ def _semdedup_sql(iters: int = 2, tau: float | None = None) -> str:
     parts.append(
         "removed AS (SELECT DISTINCT a.vec_id FROM asg a JOIN asg b "
         "ON a.centroid_id = b.centroid_id AND b.vec_id < a.vec_id "
-        f"WHERE {pcos} >= {tau!r})"
+        f"WHERE {pcos} >= {SEMDEDUP_TAU!r})"
     )
     return (
         ", ".join(parts)
@@ -982,11 +978,13 @@ def oracle_sql() -> dict[str, str]:
         "min(k)::INTEGER AS min_k, max(k)::INTEGER AS max_k FROM k "
         "GROUP BY event_type"
     )
+    from pdfi_spark.ops.relational import EVENTS_PER_USER
+
     out["top_events_per_user"] = (
         "SELECT user_id, row_number() OVER "
         "(PARTITION BY user_id ORDER BY value DESC, event_id ASC) AS rank, "
         "event_id, round(value, 6) AS value FROM events "
-        "QUALIFY rank <= 3"
+        f"QUALIFY rank <= {EVENTS_PER_USER}"
     )
     out["dedup_exact"] = (
         "SELECT array_to_string(list_slice(string_split(text, ' '), 1, 5), ' ') AS dedup_key, "
@@ -1155,10 +1153,11 @@ def oracle_sql() -> dict[str, str]:
     )
     cos_q = _COSINE_EXPR.format(a="e.embedding", b="q.qe")
     out["cosine_topk"] = (
-        "WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0) "
+        "WITH q AS (SELECT embedding AS qe FROM embeddings "
+        f"WHERE vec_id = {QUERY_VEC_ID}) "
         f"SELECT e.vec_id, {cos_q} AS cosine "
-        "FROM embeddings e, q WHERE e.vec_id <> 0 "
-        "ORDER BY cosine DESC, e.vec_id ASC LIMIT 10"
+        f"FROM embeddings e, q WHERE e.vec_id <> {QUERY_VEC_ID} "
+        f"ORDER BY cosine DESC, e.vec_id ASC LIMIT {SIM_TOPK}"
     )
     cos_adj = _COSINE_EXPR.format(a="a.embedding", b="b.embedding")
     out["cosine_adjacent"] = (
@@ -1176,7 +1175,7 @@ def oracle_sql() -> dict[str, str]:
         "SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, "
         f"{cos_ab} AS cosine "
         "FROM coded a JOIN coded b ON a.bucket = b.bucket AND a.vec_id < b.vec_id "
-        "ORDER BY cosine DESC, vec_a ASC, vec_b ASC LIMIT 10"
+        f"ORDER BY cosine DESC, vec_a ASC, vec_b ASC LIMIT {SIM_TOPK}"
     )
     stopword_list = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
     from pdfi_spark.ops.textstats import EN_TRIGRAMS, LANG_ID_THRESHOLD
@@ -1353,28 +1352,21 @@ def oracle_sql() -> dict[str, str]:
     )
     out["ivf_train_cells"] = _ivf_train_sql()
     out["semdedup"] = _semdedup_sql()
-    cos_q = _COSINE_RAW.format(a="a.embedding", b="q.qvec")
     cos_cq = _COSINE_RAW.format(a="cvec", b="q.qvec")
     cos_aq = _COSINE_RAW.format(a="a.embedding", b="q.qvec")
-    out["ivf_topk_nprobe2"] = (
-        _ivf_assigned_cte()
-        + ", q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0), "
-        "qcells AS (SELECT centroid_id FROM cent, q "
-        f"QUALIFY row_number() OVER (ORDER BY {cos_cq} DESC, centroid_id ASC) <= 2) "
-        f"SELECT a.vec_id, (round({cos_aq}, 3) + 0.0) AS cosine "
-        "FROM assigned a JOIN qcells USING (centroid_id), q "
-        "WHERE a.vec_id <> 0 "
-        "ORDER BY cosine DESC, a.vec_id ASC LIMIT 10"
-    )
-    out["ivf_topk"] = (
-        _ivf_assigned_cte()
-        + ", q AS (SELECT centroid_id AS qcell, embedding AS qvec "
-        "FROM assigned WHERE vec_id = 0) "
-        f"SELECT a.vec_id, (round({cos_q}, 3) + 0.0) AS cosine "
-        "FROM assigned a, q WHERE a.centroid_id = q.qcell AND a.vec_id <> 0 "
-        "ORDER BY cosine DESC, a.vec_id ASC LIMIT 10"
-    )
-    from pdfi_spark.ops.similarity import PQ_M, PQ_SUBDIM, PQ_TOPK
+    for name, nprobe in (("ivf_topk", 1), ("ivf_topk_nprobe2", IVF_NPROBE)):
+        out[name] = (
+            _ivf_assigned_cte()
+            + ", q AS (SELECT embedding AS qvec FROM embeddings "
+            f"WHERE vec_id = {QUERY_VEC_ID}), "
+            "qcells AS (SELECT centroid_id FROM cent, q QUALIFY row_number() "
+            f"OVER (ORDER BY {cos_cq} DESC, centroid_id ASC) <= {nprobe}) "
+            f"SELECT a.vec_id, (round({cos_aq}, 3) + 0.0) AS cosine "
+            "FROM assigned a JOIN qcells USING (centroid_id), q "
+            f"WHERE a.vec_id <> {QUERY_VEC_ID} "
+            f"ORDER BY cosine DESC, a.vec_id ASC LIMIT {SIM_TOPK}"
+        )
+    from pdfi_spark.ops.similarity import PQ_M, PQ_SUBDIM
 
     out["pq_codes"] = (
         _pq_cte() + " SELECT vec_id, " + ", ".join(
@@ -1389,7 +1381,7 @@ def oracle_sql() -> dict[str, str]:
     qd2 = _PQ_L2SQ.format(a="q.qv", b="c.cvec", n=PQ_SUBDIM)
     out["pq_topk"] = (
         _pq_cte()
-        + ", q AS (SELECT m, sv AS qv FROM sv WHERE vec_id = 0), "
+        + f", q AS (SELECT m, sv AS qv FROM sv WHERE vec_id = {QUERY_VEC_ID}), "
         f"qtab AS (SELECT c.m, c.centroid_id AS code, round({qd2}, 9) "
         "AS qd2 FROM q JOIN cs c USING (m)), "
         "est AS (SELECT cd.vec_id, round(sum(qd2), 6) AS est_d2 "
@@ -1404,14 +1396,15 @@ def oracle_sql() -> dict[str, str]:
     ed2 = _PQ_L2SQ.format(a="e.embedding", b="qq.qvec", n=64)
     out["pq_topk_refine"] = (
         _pq_cte()
-        + ", q AS (SELECT m, sv AS qv FROM sv WHERE vec_id = 0), "
+        + f", q AS (SELECT m, sv AS qv FROM sv WHERE vec_id = {QUERY_VEC_ID}), "
         f"qtab AS (SELECT c.m, c.centroid_id AS code, round({qd2}, 9) "
         "AS qd2 FROM q JOIN cs c USING (m)), "
         "est AS (SELECT cd.vec_id, round(sum(qd2), 6) AS est_d2 "
         "FROM codes cd JOIN qtab USING (m, code) GROUP BY cd.vec_id), "
         "short AS (SELECT vec_id FROM est "
         f"ORDER BY est_d2 ASC, vec_id ASC LIMIT {PQ_SHORTLIST}), "
-        "qq AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0) "
+        "qq AS (SELECT embedding AS qvec FROM embeddings "
+        f"WHERE vec_id = {QUERY_VEC_ID}) "
         f"SELECT e.vec_id, round({ed2}, 6) AS d2 "
         "FROM embeddings e JOIN short USING (vec_id), qq "
         f"ORDER BY d2 ASC, e.vec_id ASC LIMIT {PQ_TOPK}"

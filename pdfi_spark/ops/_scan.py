@@ -91,11 +91,11 @@ def read(spark: SparkSession, path: str, fan: str = "raw") -> DataFrame:
     if os.path.isfile(os.path.join(path, "_metrics.jsonl")):
         from ..pipeline import OUTPUT_SCHEMA
 
-        # only the manifest: the committed buckets held no rows
-        if not any(n.startswith("bucket=") for n in os.listdir(path)):
-            return spark.createDataFrame([], OUTPUT_SCHEMA)
-        df = (spark.read.schema(OUTPUT_SCHEMA).option("basePath", path)
-              .parquet(os.path.join(path, "bucket=*")))
+        # the directory itself (Spark skips the _metrics.jsonl manifest),
+        # not a bucket=* glob, which Spark's sink-metadata probe stats as
+        # a literal path and logs as missing; with only the manifest (no
+        # committed rows) this reads as an empty frame
+        df = spark.read.schema(OUTPUT_SCHEMA).parquet(path)
     else:
         schema = footer_schema(path)
         # None (a directory, glob or remote URI): Spark infers the schema

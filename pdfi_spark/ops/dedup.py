@@ -246,10 +246,10 @@ def minhash128_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sig.select("doc_id", F.md5(joined).alias("sig_md5"))
 
 
-def _minhash128_bands():
-    """Literal 16-struct array expression over column ``sig``: per band,
-    (band, bucket=md5 of the band's comma-joined 8 lanes)."""
-    return F.array(*[
+def _minhash128_members(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) membership rows of a 128-lane ``sig``
+    column: per band, bucket = md5 of the band's comma-joined 8 lanes."""
+    bands = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
             F.md5(F.concat_ws(",", F.transform(
@@ -259,16 +259,8 @@ def _minhash128_bands():
         )
         for b in range(MINHASH128_BANDS)
     ])
-
-
-def _lsh128_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(band, bucket, doc_id) membership rows of the 128-perm sketch.
-    The signature is localCheckpoint'ed before banding for the same
-    subtree-reuse reason as _lsh_members: downstream self-joins would
-    otherwise re-run the 128-lane fold per join side."""
-    sig = _minhash128_artifacts(_docs(spark, sf_dir)).localCheckpoint(eager=True)
     return (
-        sig.select("doc_id", F.explode(_minhash128_bands()).alias("bb"))
+        sig.select("doc_id", F.explode(bands).alias("bb"))
         .select("doc_id", F.col("bb.band").alias("band"),
                 F.col("bb.bucket").alias("bucket"))
     )
@@ -282,9 +274,7 @@ def minhash128_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     combiner-friendly (map-side partial counts)."""
     sig = _minhash128_artifacts(_docs(spark, sf_dir))
     return (
-        sig.select("doc_id", F.explode(_minhash128_bands()).alias("bb"))
-        .select("doc_id", F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"))
+        _minhash128_members(sig)
         .groupBy("band", "bucket")
         .agg(F.count("*").alias("n_docs"))
     )
@@ -306,12 +296,7 @@ def minhash128_jaccard_estimates(spark: SparkSession,
     art = _minhash128_artifacts(
         _docs(spark, sf_dir), with_words=True
     ).localCheckpoint(eager=True)
-    members = (
-        art.select("doc_id", F.explode(_minhash128_bands()).alias("bb"))
-        .select("doc_id", F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"))
-    )
-    pairs = _pairs_from_members(members)
+    pairs = _pairs_from_members(_minhash128_members(art))
     est = (
         pairs
         .join(art.select(F.col("doc_id").alias("doc_a"),
@@ -501,16 +486,15 @@ def _lsh_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     return b1.unionAll(b2)
 
 
-def candidate_pairs(spark: SparkSession, sf_dir: str,
-                    max_bucket: int = MAX_LSH_BUCKET) -> DataFrame:
+def candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidate pairs = docs sharing an LSH band bucket
     (doc_a < doc_b, distinct across bands). The self-join is keyed on
     (band, bucket), so its cost is sum(bucket_size^2) — the whole point
     of LSH banding vs the all-pairs cross join. Buckets larger than
-    ``max_bucket`` are dropped first (see MAX_LSH_BUCKET — this is an
-    explicit coverage cap, mirrored in the DuckDB oracle, not a silent
-    one); residual moderate-bucket skew is AQE skew-join territory."""
-    return _pairs_from_members(_lsh_members(spark, sf_dir), max_bucket)
+    MAX_LSH_BUCKET are dropped first (an explicit coverage cap, mirrored
+    in the DuckDB oracle, not a silent one); residual moderate-bucket
+    skew is AQE skew-join territory."""
+    return _pairs_from_members(_lsh_members(spark, sf_dir))
 
 
 def _pairs_from_members(members: DataFrame,
@@ -701,13 +685,8 @@ def dedup_clusters_128(spark: SparkSession, sf_dir: str) -> DataFrame:
     art = _minhash128_artifacts(
         _docs(spark, sf_dir), with_shingles=True
     ).localCheckpoint(eager=True)
-    members = (
-        art.select("doc_id", F.explode(_minhash128_bands()).alias("bb"))
-        .select("doc_id", F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"))
-    )
     return _dedup_clusters_from(
-        spark, sf_dir, _pairs_from_members(members),
+        spark, sf_dir, _pairs_from_members(_minhash128_members(art)),
         shingle_df=art.select("doc_id", "shingles"),
     )
 

@@ -33,17 +33,17 @@ def _rev_cents(price_col: str = "l_extendedprice", disc_col: str = "l_discount")
     return price_c * (F.lit(100) - disc_pct)
 
 
-def nation_revenue_topk(spark: SparkSession, sf_dir: str,
-                        segment: str = MKT_SEGMENT, k: int = TOP_K) -> DataFrame:
-    """Top-k nations by lineitem revenue from customers in one market
-    segment: lineitem -> orders -> customer -> broadcast(nation)."""
+def nation_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-TOP_K nations by lineitem revenue from customers in the
+    MKT_SEGMENT market segment: lineitem -> orders -> customer ->
+    broadcast(nation)."""
     lineitem = read(spark, f"{sf_dir}/lineitem.parquet")
     orders = read(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey"
     )
     customer = (
         read(spark, f"{sf_dir}/customer.parquet")
-        .filter(F.col("c_mktsegment") == segment)   # pushed to the scan
+        .filter(F.col("c_mktsegment") == MKT_SEGMENT)   # pushed to the scan
         .select("c_custkey", "c_nationkey")
     )
     nation = read(spark, f"{sf_dir}/nation.parquet").select(
@@ -75,7 +75,7 @@ def nation_revenue_topk(spark: SparkSession, sf_dir: str,
         )
         .select("n_name", "revenue_cp", "n_orders", "n_customers")
     )
-    return result.orderBy(F.desc("revenue_cp"), F.asc("n_name")).limit(k)
+    return result.orderBy(F.desc("revenue_cp"), F.asc("n_name")).limit(TOP_K)
 
 
 Q1_SHIP_CUTOFF = "1998-09-01"
@@ -136,10 +136,9 @@ Q3_CUTOFF = "1998-01-01"
 Q3_TOPK = 10
 
 
-def q3_shipping_priority(spark: SparkSession, sf_dir: str,
-                         segment: str = MKT_SEGMENT) -> DataFrame:
+def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 (shipping priority) shape over the driver tables: the
-    top unshipped-revenue orders for one market segment — orders placed
+    top unshipped-revenue orders for MKT_SEGMENT — orders placed
     before the cutoff whose lineitems ship after it. The canonical
     multi-join + top-k pattern a corpus-metadata warehouse runs daily.
 
@@ -152,7 +151,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str,
     cutoff = F.lit(Q3_CUTOFF).cast("timestamp")
     customer = (
         read(spark, f"{sf_dir}/customer.parquet")
-        .filter(F.col("c_mktsegment") == segment)
+        .filter(F.col("c_mktsegment") == MKT_SEGMENT)
         .select("c_custkey")
     )
     orders = (
@@ -185,10 +184,9 @@ Q5_REGION = "ASIA"
 Q5_FROM, Q5_TO = "1996-01-01", "1999-01-01"
 
 
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str,
-                             region: str = Q5_REGION) -> DataFrame:
-    """TPC-H Q5 (local supplier volume) shape: revenue per nation in one
-    region where the CUSTOMER and the SUPPLIER sit in the same nation —
+def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q5 (local supplier volume) shape: revenue per nation in
+    Q5_REGION where the CUSTOMER and the SUPPLIER sit in the same nation —
     the classic snowflake join with a cross-branch equality.
 
     Plan shape at scale: the date range pushes into the orders scan;
@@ -218,7 +216,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str,
         .join(
             F.broadcast(
                 read(spark, f"{sf_dir}/region.parquet")
-                .filter(F.col("r_name") == region)
+                .filter(F.col("r_name") == Q5_REGION)
             ),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
@@ -371,10 +369,14 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def top_events_per_user(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Per-group top-k via a rank window: the other canonical window
-    shape (sessionization being the first). One exchange on user_id;
-    rank prunes before anything wide is carried."""
+EVENTS_PER_USER = 3
+
+
+def top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user top EVENTS_PER_USER events by value via a rank window:
+    the other canonical window shape (sessionization being the first).
+    One exchange on user_id; rank prunes before anything wide is
+    carried."""
     from pyspark.sql import Window
 
     events = read(spark, f"{sf_dir}/events.parquet")
@@ -383,7 +385,7 @@ def top_events_per_user(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFra
     )
     return (
         events.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= EVENTS_PER_USER)
         .select("user_id", "rank", "event_id",
                 F.round("value", 6).alias("value"))
     )

@@ -19,6 +19,10 @@ from ._scan import read
 
 LSH_PLANES = 8
 LSH_MAX_DIMS = 64  # widest embedding the literal weight arrays cover
+# every query-vector search ranks against this vector and returns the
+# top SIM_TOPK rows (PQ keeps its own PQ_TOPK); the oracles read both
+QUERY_VEC_ID = 0
+SIM_TOPK = 10
 
 
 def plane_weights(plane: int, n_dims: int = LSH_MAX_DIMS) -> list[int]:
@@ -54,21 +58,20 @@ def _norm(a):
     )
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
-                k: int = 10) -> DataFrame:
-    """Brute-force cosine top-k against the query vector (vec_id=0 by
-    default). The single-row query side is broadcast; the scan side is a
-    narrow map + TakeOrdered — no shuffle."""
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k against the query vector (QUERY_VEC_ID).
+    The single-row query side is broadcast; the scan side is a narrow
+    map + TakeOrdered — no shuffle."""
     emb = _emb(spark, sf_dir)
     # query norm precomputed in the 1-row broadcast side (it was being
     # re-folded per scanned row); same fold -> same double -> same
     # product, so the scores are bit-identical
-    query = emb.filter(F.col("vec_id") == query_vec_id).select(
+    query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec"),
         _norm(F.col("embedding")).alias("qnrm"),
     )
     scored = (
-        emb.filter(F.col("vec_id") != query_vec_id)
+        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(query))
         .select(
             "vec_id",
@@ -82,7 +85,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
             ).alias("cosine"),
         )
     )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(SIM_TOPK)
 
 
 def cosine_adjacent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,7 +143,7 @@ def lsh_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return coded.groupBy("bucket").agg(F.count("*").alias("n_vecs"))
 
 
-def embedding_neardup_topk(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def embedding_neardup_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup candidates at the LSH-bucket scale shape:
     exact cosine is computed ONLY within each hyperplane bucket (the
     self-join is keyed on the bucket code, so cost is sum(bucket^2), not
@@ -183,7 +186,9 @@ def embedding_neardup_topk(spark: SparkSession, sf_dir: str, k: int = 10) -> Dat
             ).alias("cosine"),
         )
     )
-    return pairs.orderBy(F.desc("cosine"), F.asc("vec_a"), F.asc("vec_b")).limit(k)
+    return pairs.orderBy(
+        F.desc("cosine"), F.asc("vec_a"), F.asc("vec_b")
+    ).limit(SIM_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -191,6 +196,8 @@ def embedding_neardup_topk(spark: SparkSession, sf_dir: str, k: int = 10) -> Dat
 # ---------------------------------------------------------------------------
 
 N_CENTROIDS = 8
+LLOYD_ITERS = 2  # k-means steps behind ivf_train_cells and semdedup
+IVF_NPROBE = 2   # cells ivf_topk_nprobe searches (ivf_topk: one)
 
 
 def _centroids(emb: DataFrame, n: int = N_CENTROIDS) -> DataFrame:
@@ -203,7 +210,7 @@ def _centroids(emb: DataFrame, n: int = N_CENTROIDS) -> DataFrame:
 
 
 def kmeans_codebook(emb: DataFrame, n: int = N_CENTROIDS,
-                    iters: int = 2) -> DataFrame:
+                    iters: int = LLOYD_ITERS) -> DataFrame:
     """Deterministic Lloyd iterations over the embedding column:
     init = first-n vectors, assign by cosine against the broadcast
     codebook, new centroid = element-wise mean of its members. The mean
@@ -213,7 +220,7 @@ def kmeans_codebook(emb: DataFrame, n: int = N_CENTROIDS,
     (centroid_id, cvec); empty cells keep their previous centroid."""
     cent = _centroids(emb, n)
     for _ in range(iters):
-        assigned = _ivf_assign(emb, n, centroids=cent)
+        assigned = _ivf_assign(emb, cent)
         dims = assigned.select(
             "centroid_id", F.posexplode("embedding").alias("dim", "v")
         )
@@ -245,11 +252,10 @@ def kmeans_codebook(emb: DataFrame, n: int = N_CENTROIDS,
     return cent
 
 
-def ivf_train_cells(spark: SparkSession, sf_dir: str,
-                    iters: int = 2) -> DataFrame:
-    """IVF build with a TRAINED codebook (2 Lloyd iterations) instead of
+def ivf_train_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF build with a TRAINED codebook (LLOYD_ITERS steps) instead of
     the first-n stand-in: cell occupancy per trained centroid. Has a full
-    DuckDB twin (__spark_entry__._ivf_train_sql unrolls the two Lloyd
+    DuckDB twin (__spark_entry__._ivf_train_sql unrolls the same Lloyd
     steps in SQL): the per-iteration cast to array<float> below is what
     makes the float means cross-engine deterministic — it rounds away the
     sub-ULP double-summation-order noise, so both engines iterate from
@@ -259,13 +265,11 @@ def ivf_train_cells(spark: SparkSession, sf_dir: str,
     # the final assignment would otherwise each re-pay the scan (and its
     # fan-out exchange) — same subtree-reuse rule as the codebook itself
     emb = _emb(spark, sf_dir).localCheckpoint(eager=True)
-    codebook = kmeans_codebook(emb, iters=iters)
-    assigned = _ivf_assign(emb, centroids=codebook)
+    assigned = _ivf_assign(emb, kmeans_codebook(emb))
     return assigned.groupBy("centroid_id").agg(F.count("*").alias("n_vecs"))
 
 
-def _ivf_assign(emb: DataFrame, n: int = N_CENTROIDS,
-                codebook_src: DataFrame | None = None,
+def _ivf_assign(emb: DataFrame,
                 centroids: DataFrame | None = None) -> DataFrame:
     """vec_id -> nearest-centroid cell, vectorized: the codebook is a
     trained MODEL of dimension size (n_centroids x dims floats — KBs
@@ -287,14 +291,11 @@ def _ivf_assign(emb: DataFrame, n: int = N_CENTROIDS,
     DIVIDE_BY_ZERO outright, and real corpora have none). Pinned
     output-for-output against the HOF twin in tests/test_kmeans.py.
     ``centroids`` supplies an explicit (centroid_id, cvec) codebook
-    (e.g. from kmeans_codebook); else first-n of ``codebook_src``/emb."""
+    (e.g. from kmeans_codebook); else the first-n stand-in of emb."""
     import numpy as np
     import pandas as pd
 
-    if centroids is not None:
-        cent = centroids
-    else:
-        cent = _centroids(codebook_src if codebook_src is not None else emb, n)
+    cent = centroids if centroids is not None else _centroids(emb)
     rows = sorted(
         cent.select("centroid_id", "cvec").collect(),
         key=lambda r: r["centroid_id"],
@@ -354,17 +355,13 @@ def _ivf_assign(emb: DataFrame, n: int = N_CENTROIDS,
     )
 
 
-def _ivf_assign_hof(emb: DataFrame, n: int = N_CENTROIDS,
-                    codebook_src: DataFrame | None = None,
+def _ivf_assign_hof(emb: DataFrame,
                     centroids: DataFrame | None = None) -> DataFrame:
     """The Catalyst twin of _ivf_assign (cross-check): broadcast cross
     join + argmax cosine via ``max_by`` under groupBy (map-side
     partials — the shuffle carries one row per vector, not one per
     (vector, centroid))."""
-    if centroids is not None:
-        cent = centroids
-    else:
-        cent = _centroids(codebook_src if codebook_src is not None else emb, n)
+    cent = centroids if centroids is not None else _centroids(emb)
     # norms precomputed ONCE per vector / per centroid before the
     # broadcast cross join: the HOF norm fold is interpreted per
     # element, so evaluating it per (vector, centroid) row costs n x
@@ -401,27 +398,47 @@ def ivf_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_topk(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
-             k: int = 10) -> DataFrame:
-    """IVF probe (nprobe=1): search only the query's cell with exact
-    cosine. Turns the brute-force O(N) scan into O(N/cells); the cell
-    filter prunes before any expensive math."""
+def _ivf_probe(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """IVF probe: search only the query's `nprobe` nearest cells with
+    exact cosine. Turns the brute-force O(N) scan into O(N/cells) per
+    probed cell; more cells is the standard recall/latency knob (one
+    cell can miss neighbors that quantized into an adjacent one). The
+    cell shortlist is a tiny ranked broadcast, so the probe side stays
+    pruned to sum(probed cell sizes) rows before any expensive math."""
+    from pyspark.sql import Window
+
     emb = _emb(spark, sf_dir)
-    assigned = _ivf_assign(emb)
-    # assign ONLY the query row on the probe side: filtering before the
-    # cross join keeps this a 1-row plan instead of a second full
-    # assignment pass over all vectors
-    qcell = _ivf_assign(
-        emb.filter(F.col("vec_id") == query_vec_id), codebook_src=emb
-    ).select(
-        F.col("centroid_id").alias("qcell"), F.col("embedding").alias("qvec"),
-        # query norm precomputed in the 1-row broadcast side (was
-        # re-folded per probed row; bit-identical product)
+    cent = _centroids(emb)
+    assigned = _ivf_assign(emb, cent)
+    # query norm precomputed once in the 1-row side (was re-folded per
+    # candidate centroid and again per probed row; bit-identical)
+    query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("embedding").alias("qvec"),
         _norm(F.col("embedding")).alias("qnrm"),
     )
+    qcells = (
+        cent.crossJoin(F.broadcast(query))
+        .select(
+            "centroid_id",
+            "qvec",
+            "qnrm",
+            (
+                _dot(F.col("cvec"), F.col("qvec"))
+                / (_norm(F.col("cvec")) * F.col("qnrm"))
+            ).alias("cos_c"),
+        )
+        .withColumn(
+            "cell_rank",
+            F.row_number().over(
+                Window.orderBy(F.desc("cos_c"), F.asc("centroid_id"))
+            ),
+        )
+        .filter(F.col("cell_rank") <= nprobe)
+        .select("centroid_id", "qvec", "qnrm")
+    )
     probe = (
-        assigned.join(F.broadcast(qcell), F.col("centroid_id") == F.col("qcell"))
-        .filter(F.col("vec_id") != query_vec_id)
+        assigned.join(F.broadcast(qcells), "centroid_id")
+        .filter(F.col("vec_id") != QUERY_VEC_ID)
         .select(
             "vec_id",
             (
@@ -434,7 +451,17 @@ def ivf_topk(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
             ).alias("cosine"),
         )
     )
-    return probe.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
+    return probe.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(SIM_TOPK)
+
+
+def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF top-k probing the query's own cell only (nprobe=1)."""
+    return _ivf_probe(spark, sf_dir, 1)
+
+
+def ivf_topk_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF top-k probing the query's IVF_NPROBE nearest cells."""
+    return _ivf_probe(spark, sf_dir, IVF_NPROBE)
 
 
 SEMDEDUP_TAU = 0.3  # probe-derived: splits the driver corpus ~300 kept
@@ -442,16 +469,15 @@ SEMDEDUP_TAU = 0.3  # probe-derived: splits the driver corpus ~300 kept
 # so both verdicts are well represented in the oracle hash
 
 
-def semdedup(spark: SparkSession, sf_dir: str, iters: int = 2,
-             tau: float = SEMDEDUP_TAU) -> DataFrame:
+def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDedup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering the embedding space and pruning
     near-duplicate pairs WITHIN each cluster only. Reuses the trained
     k-means codebook (kmeans_codebook — the cross-engine-deterministic
     Lloyd loop) and the IVF assignment; within a cell, every vector that
-    has a lower-id cell-mate with cosine >= tau is dropped (the paper
-    keeps one exemplar per epsilon-ball; "keep the lowest vec_id" makes
-    that choice deterministic). Returns one row per vector:
+    has a lower-id cell-mate with cosine >= SEMDEDUP_TAU is dropped (the
+    paper keeps one exemplar per epsilon-ball; "keep the lowest vec_id"
+    makes that choice deterministic). Returns one row per vector:
     (vec_id, centroid_id, kept).
 
     Scale shape: the pair stage is a self-join KEYED on centroid_id, so
@@ -462,10 +488,10 @@ def semdedup(spark: SparkSession, sf_dir: str, iters: int = 2,
     not re-execute per self-join side (Catalyst does not share subtrees
     across self-joins), and cosine is rounded to 3 decimals before the
     threshold compare so the verdict is reproducible across engines."""
-    return _semdedup_from(_emb(spark, sf_dir), iters=iters, tau=tau)
+    return _semdedup_from(_emb(spark, sf_dir))
 
 
-def _semdedup_from(emb: DataFrame, iters: int = 2,
+def _semdedup_from(emb: DataFrame, iters: int = LLOYD_ITERS,
                    tau: float = SEMDEDUP_TAU,
                    n: int = N_CENTROIDS) -> DataFrame:
     """semdedup core over an explicit (vec_id, embedding) DataFrame —
@@ -480,7 +506,7 @@ def _semdedup_from(emb: DataFrame, iters: int = 2,
     # (2 x 64-element aggregates x sum(cell^2) pairs) would triple the
     # pair stage; sqrt(sum) per row then na*nb in the pair is
     # bit-identical to the inline formula, so the oracle is unchanged
-    assigned = _ivf_assign(emb, n, centroids=codebook).select(
+    assigned = _ivf_assign(emb, codebook).select(
         "vec_id", "centroid_id", "embedding",
         _norm(F.col("embedding")).alias("nrm"),
     ).localCheckpoint(eager=True)
@@ -513,62 +539,6 @@ def _semdedup_from(emb: DataFrame, iters: int = 2,
         "centroid_id",
         F.col("is_removed").isNull().alias("kept"),
     )
-
-
-def ivf_topk_nprobe(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
-                    k: int = 10, nprobe: int = 2) -> DataFrame:
-    """IVF probe with nprobe > 1: search the query's `nprobe` nearest
-    cells — the standard recall/latency knob (nprobe=1 can miss
-    neighbors that quantized into an adjacent cell). The cell shortlist
-    is a tiny ranked broadcast; the probe side stays pruned to
-    sum(probed cell sizes) rows."""
-    from pyspark.sql import Window
-
-    emb = _emb(spark, sf_dir)
-    assigned = _ivf_assign(emb)
-    cent = _centroids(emb)
-    # query norm precomputed once in the 1-row side (was re-folded per
-    # candidate centroid and again per probed row; bit-identical)
-    query = emb.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qvec"),
-        _norm(F.col("embedding")).alias("qnrm"),
-    )
-    qcells = (
-        cent.crossJoin(F.broadcast(query))
-        .select(
-            "centroid_id",
-            "qvec",
-            "qnrm",
-            (
-                _dot(F.col("cvec"), F.col("qvec"))
-                / (_norm(F.col("cvec")) * F.col("qnrm"))
-            ).alias("cos_c"),
-        )
-        .withColumn(
-            "cell_rank",
-            F.row_number().over(
-                Window.orderBy(F.desc("cos_c"), F.asc("centroid_id"))
-            ),
-        )
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("centroid_id", "qvec", "qnrm")
-    )
-    probe = (
-        assigned.join(F.broadcast(qcells), "centroid_id")
-        .filter(F.col("vec_id") != query_vec_id)
-        .select(
-            "vec_id",
-            (
-                F.round(
-                    _dot(F.col("embedding"), F.col("qvec"))
-                    / (_norm(F.col("embedding")) * F.col("qnrm")),
-                    3,
-                )
-                + F.lit(0.0)
-            ).alias("cosine"),
-        )
-    )
-    return probe.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
 # --- product quantization: the 10^12-vector ANN memory path ---
@@ -651,8 +621,7 @@ def _pq_codes_from(emb: DataFrame) -> DataFrame:
     ])
 
 
-def pq_topk(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
-            k: int = PQ_TOPK) -> DataFrame:
+def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance (ADC) search: the query's distance to
     every sub-centroid is a PQ_M*PQ_CODES-row table (computed once,
     broadcast); each candidate's estimated distance is then PQ_M table
@@ -661,13 +630,12 @@ def pq_topk(spark: SparkSession, sf_dir: str, query_vec_id: int = 0,
     vec_id; TakeOrderedAndProject, no global sort. Determinism: per-
     entry distances snap to 9 (element-order-exact sums both engines),
     the PQ_M-addend per-vector sum to 6."""
-    return _pq_topk_from(_emb(spark, sf_dir), query_vec_id, k)
+    return _pq_topk_from(_emb(spark, sf_dir))
 
 
-def _pq_topk_from(emb: DataFrame, query_vec_id: int = 0,
-                  k: int = PQ_TOPK) -> DataFrame:
+def _pq_topk_from(emb: DataFrame, k: int = PQ_TOPK) -> DataFrame:
     q = _pq_subspaces(
-        emb.filter(F.col("vec_id") == query_vec_id), "vec_id", "qv"
+        emb.filter(F.col("vec_id") == QUERY_VEC_ID), "vec_id", "qv"
     )
     qtab = q.join(_pq_dim(emb), "m").select(
         "m", F.col("centroid_id").alias("code"),
@@ -685,8 +653,7 @@ def _pq_topk_from(emb: DataFrame, query_vec_id: int = 0,
 PQ_SHORTLIST = 50
 
 
-def pq_topk_refine(spark: SparkSession, sf_dir: str,
-                   query_vec_id: int = 0, k: int = PQ_TOPK) -> DataFrame:
+def pq_topk_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage PQ retrieval, the standard IVF-PQ serving shape: the
     ADC pass shortlists PQ_SHORTLIST candidates from compressed codes
     (cheap, quantization-lossy), then ONLY those candidates pay exact
@@ -697,13 +664,12 @@ def pq_topk_refine(spark: SparkSession, sf_dir: str,
     TakeOrderedAndProject. Exact d2 snaps to 6 (element-order sums
     match DuckDB's list_sum bit-for-bit; ordering uses the snapped
     value so the rank grid is shared)."""
-    return _pq_topk_refine_from(_emb(spark, sf_dir), query_vec_id, k)
+    return _pq_topk_refine_from(_emb(spark, sf_dir))
 
 
-def _pq_topk_refine_from(emb: DataFrame, query_vec_id: int = 0,
-                         k: int = PQ_TOPK) -> DataFrame:
-    shortlist = _pq_topk_from(emb, query_vec_id, PQ_SHORTLIST).select("vec_id")
-    q = emb.filter(F.col("vec_id") == query_vec_id).select(
+def _pq_topk_refine_from(emb: DataFrame) -> DataFrame:
+    shortlist = _pq_topk_from(emb, PQ_SHORTLIST).select("vec_id")
+    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec")
     )
     exact = (
@@ -714,4 +680,4 @@ def _pq_topk_refine_from(emb: DataFrame, query_vec_id: int = 0,
             F.round(_l2sq(F.col("embedding"), F.col("qvec")), 6).alias("d2"),
         )
     )
-    return exact.orderBy("d2", "vec_id").limit(k)
+    return exact.orderBy("d2", "vec_id").limit(PQ_TOPK)

@@ -651,12 +651,11 @@ SHARD_TOKEN_BUDGET = 1000
 SHARD_CHUNKS = 8
 
 
-def pack_training_shards(spark: SparkSession, sf_dir: str,
-                         budget: int = SHARD_TOKEN_BUDGET) -> DataFrame:
+def pack_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget shard packing — the sequence-packing pass that turns
     a cleaned corpus into fixed-token-budget training shards: shard_id =
-    floor(prefix_tokens_before_doc / budget) over doc_id order (greedy
-    packing, the standard pre-tokenization layout step).
+    floor(prefix_tokens_before_doc / SHARD_TOKEN_BUDGET) over doc_id
+    order (greedy packing, the standard pre-tokenization layout step).
 
     The interesting part is the SHAPE: a naive formulation is one global
     window (ORDER BY doc_id with no partition) — an
@@ -709,22 +708,22 @@ def pack_training_shards(spark: SparkSession, sf_dir: str,
     return packed.select(
         "doc_id",
         "n_tokens",
-        F.expr(f"cum_before div {int(budget)}").alias("shard_id"),
+        F.expr(f"cum_before div {SHARD_TOKEN_BUDGET}").alias("shard_id"),
     )
 
 
 N_SHUFFLE_SHARDS = 16
 
 
-def training_shuffle_manifest(spark: SparkSession, sf_dir: str,
-                              n_shards: int = N_SHUFFLE_SHARDS) -> DataFrame:
+def training_shuffle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic pseudo-random global shuffle — the reproducible
     corpus-order randomization every training run needs before packing
     (doc order must be shuffled, but re-runs must produce the SAME
-    order). shard = first 8 hex digits of md5(doc_id) mod n_shards (a
-    pure narrow map), position within shard = row_number over the full
-    hex digest (doc_id as the theoretical tie-break). Reading shards
-    0..n-1 each in pos order IS the shuffled epoch order.
+    order). shard = first 8 hex digits of md5(doc_id) mod
+    N_SHUFFLE_SHARDS (a pure narrow map), position within shard =
+    row_number over the full hex digest (doc_id as the theoretical
+    tie-break). Reading shards 0..n-1 each in pos order IS the shuffled
+    epoch order.
 
     Scale shape: the only window is PARTITIONED BY shard — n_shards
     independent sorts of ~N/n_shards rows each, never the naive global
@@ -743,7 +742,7 @@ def training_shuffle_manifest(spark: SparkSession, sf_dir: str,
         "hx",
         F.pmod(
             F.conv(F.substring("hx", 1, 8), 16, 10).cast("long"),
-            F.lit(n_shards),
+            F.lit(N_SHUFFLE_SHARDS),
         ).cast("int").alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("hx", "doc_id")

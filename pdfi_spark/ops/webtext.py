@@ -134,8 +134,21 @@ def html_main_content(recipe: str):
     return q
 
 
-def html_outlinks(spark: SparkSession, sf_dir: str,
-                  n_docs: int | None = None) -> DataFrame:
+def _citations(batch: pd.DataFrame, n_docs: int):
+    """(src, dst, link_rank, anchor) per planted ``/doc/{dst}`` citation
+    on each batch row's generated page, in page order; nav/ad/footer
+    links are filtered out by href shape."""
+    for doc_id, text in zip(batch["doc_id"], batch["text"]):
+        page, _ = build_linked_page(
+            int(doc_id), n_docs, text, per_block=ORACLE_PER_BLOCK
+        )
+        cites = (link for link in parse_links(page)
+                 if link["href"].startswith("/doc/"))
+        for rank, link in enumerate(cites):
+            yield int(doc_id), int(link["href"][5:]), rank, link["text"]
+
+
+def html_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-graph edge extraction — the Common-Crawl outlink operator.
     Pages (generated with deterministically planted ``/doc/{target}``
     citations amid boilerplate links) are parsed with core/html.py's
@@ -145,30 +158,17 @@ def html_outlinks(spark: SparkSession, sf_dir: str,
     (zero exchanges; the generator's modulus is a footer row count,
     absent in production where hrefs come off real pages); edge fan-out
     happens inside the UDF, so no explode shuffle either."""
-    base = _base(spark, sf_dir)
-    if n_docs is None:
-        n_docs = _n_docs(spark, sf_dir)  # footer read: no Spark job
+    n_docs = _n_docs(spark, sf_dir)  # footer read: no Spark job
 
     def run(iterator):
         for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                page, _ = build_linked_page(
-                    int(doc_id), n_docs, text, per_block=ORACLE_PER_BLOCK
-                )
-                rank = 0
-                for link in parse_links(page):
-                    href = link["href"]
-                    if href.startswith("/doc/"):
-                        rows.append({
-                            "src": int(doc_id),
-                            "dst": int(href[5:]),
-                            "link_rank": rank,
-                        })
-                        rank += 1
+            rows = [(src, dst, rank)
+                    for src, dst, rank, _ in _citations(batch, n_docs)]
             yield pd.DataFrame(rows, columns=["src", "dst", "link_rank"])
 
-    return base.mapInPandas(run, schema="src long, dst long, link_rank int")
+    return _base(spark, sf_dir).mapInPandas(
+        run, schema="src long, dst long, link_rank int"
+    )
 
 
 def canonical_url(u):
@@ -356,8 +356,7 @@ def robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verdict
 
 
-def anchor_text_index(spark: SparkSession, sf_dir: str,
-                      n_docs: int | None = None) -> DataFrame:
+def anchor_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inbound anchor-text aggregation — the classic web-graph relevance
     signal (what OTHER pages call a document; search engines and
     LLM-data quality filters both consume it). Citation anchors are
@@ -370,28 +369,15 @@ def anchor_text_index(spark: SparkSession, sf_dir: str,
     production index keeps a per-(dst, anchor) count first. At 10^12
     edges this is one keyed exchange with map-side partials, same shape
     as link_graph_degrees."""
-    base = _base(spark, sf_dir)
-    if n_docs is None:
-        n_docs = _n_docs(spark, sf_dir)  # footer read: no Spark job
+    n_docs = _n_docs(spark, sf_dir)  # footer read: no Spark job
 
     def run(iterator):
         for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                page, _ = build_linked_page(
-                    int(doc_id), n_docs, text, per_block=ORACLE_PER_BLOCK
-                )
-                for link in parse_links(page):
-                    href = link["href"]
-                    if href.startswith("/doc/"):
-                        rows.append({
-                            "src": int(doc_id),
-                            "dst": int(href[5:]),
-                            "anchor": link["text"],
-                        })
+            rows = [(src, dst, anchor)
+                    for src, dst, _, anchor in _citations(batch, n_docs)]
             yield pd.DataFrame(rows, columns=["src", "dst", "anchor"])
 
-    edges = base.mapInPandas(
+    edges = _base(spark, sf_dir).mapInPandas(
         run, schema="src long, dst long, anchor string"
     )
     return edges.groupBy("dst").agg(
@@ -1067,7 +1053,7 @@ def link_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     with real mass)."""
     nodes = _nodes(spark, sf_dir)
     n_docs = _n_docs(spark, sf_dir)
-    edges = html_outlinks(spark, sf_dir, n_docs=n_docs)
+    edges = html_outlinks(spark, sf_dir)
     return _pagerank_topk(nodes, edges, n_docs)
 
 
@@ -1088,7 +1074,7 @@ def link_graph_pagerank_dangling(spark: SparkSession,
     nodes = _nodes(spark, sf_dir)
     n_docs = _n_docs(spark, sf_dir)
     edges = (
-        html_outlinks(spark, sf_dir, n_docs=n_docs)
+        html_outlinks(spark, sf_dir)
         .filter(F.col("src") % PAGERANK_DANGLING_MOD != 0)
     )
     return _pagerank_topk(nodes, edges, n_docs)
@@ -1254,7 +1240,7 @@ def link_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = _nodes(spark, sf_dir)
     n_docs = _n_docs(spark, sf_dir)
     edges = (
-        html_outlinks(spark, sf_dir, n_docs=n_docs)
+        html_outlinks(spark, sf_dir)
         .select("src", "dst").localCheckpoint(eager=True)
     )
 

@@ -70,9 +70,8 @@ def test_pack_training_shards_matches_naive_prefix_sum(spark):
 def test_anchor_text_index_matches_planted_graph(spark):
     from pdfi_spark.core.htmlgen import outlink_targets
 
-    n_docs = 500
-    rows = {r.dst: r for r in
-            ops.anchor_text_index(spark, SF, n_docs=n_docs).collect()}
+    n_docs = 500  # the sf0.001 documents table
+    rows = {r.dst: r for r in ops.anchor_text_index(spark, SF).collect()}
     # rebuild the planted in-link census in pure Python
     inlinks = {}
     for src in range(n_docs):

@@ -307,7 +307,7 @@ def test_pagerank_dangling_mass_conserved(spark):
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     nodes = docs.select("doc_id")
     n_docs = nodes.count()
-    edges = html_outlinks(spark, sf, n_docs=n_docs).filter(
+    edges = html_outlinks(spark, sf).filter(
         F.col("src") % PAGERANK_DANGLING_MOD != 0
     )
     # read ALL ranks, not just top-k: widen the limit to n_docs
@@ -327,7 +327,7 @@ def test_pagerank_dangling_mass_conserved(spark):
     wt.PAGERANK_TOPK = n_docs
     try:
         full = _pagerank_topk(
-            nodes, html_outlinks(spark, sf, n_docs=n_docs), n_docs
+            nodes, html_outlinks(spark, sf), n_docs
         )
         total_full = full.agg(F.sum("pagerank")).collect()[0][0]
     finally:

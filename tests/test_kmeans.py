@@ -89,7 +89,7 @@ def test_pq_topk_adc_distances_are_code_table_lookups(spark):
     # query = v0 = zeros, so qtab[m][j] = 16*j^2 and every vector's
     # est_d2 is the sum of its four code entries
     got = [(r["vec_id"], r["est_d2"])
-           for r in _pq_topk_from(_pq_emb(spark), query_vec_id=0, k=10).collect()]
+           for r in _pq_topk_from(_pq_emb(spark), k=10).collect()]
     exp = {j: 4 * 16.0 * j * j for j in range(8)}
     exp[8] = 16.0 * (1 + 4 + 49 + 49)
     exp[9] = 4 * 16.0 * 4
@@ -103,10 +103,10 @@ def test_pq_topk_refine_reranks_quantization_error_exactly(spark):
     emb = _pq_emb(spark)
     # ADC ties v2 and v9 at 256 (v9's codes collapse onto sub-centroid
     # 2); exact re-rank separates them: d2(v9) = 64*2.5^2 = 400
-    adc = [r["vec_id"] for r in _pq_topk_from(emb, 0, 10).collect()]
+    adc = [r["vec_id"] for r in _pq_topk_from(emb, k=10).collect()]
     assert adc.index(2) < adc.index(9)  # tie broken by vec_id only
     got = [(r["vec_id"], r["d2"])
-           for r in _pq_topk_refine_from(emb, 0, 10).collect()]
+           for r in _pq_topk_refine_from(emb).collect()]
     import numpy as np
 
     # the column is array<float>: levels like 0.9 quantize to float32
@@ -130,7 +130,7 @@ def test_ivf_assign_numpy_matches_hof(spark):
     (duplicate vectors), scaled copies (cosine exactly 1 vs two
     centroids), and a zero vector (NaN cosine against every centroid:
     max_by sorts NaN greatest, ties to the smaller centroid_id)."""
-    from pdfi_spark.ops.similarity import _ivf_assign, _ivf_assign_hof
+    from pdfi_spark.ops.similarity import _centroids, _ivf_assign, _ivf_assign_hof
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     got_np = {r["vec_id"]: r["centroid_id"]
@@ -149,10 +149,11 @@ def test_ivf_assign_numpy_matches_hof(spark):
         ],
         "vec_id long, embedding array<float>",
     )
+    two = _centroids(hand, 2)
     np_rows = {r["vec_id"]: r["centroid_id"]
-               for r in _ivf_assign(hand, n=2).collect()}
+               for r in _ivf_assign(hand, centroids=two).collect()}
     hof_rows = {r["vec_id"]: r["centroid_id"]
-                for r in _ivf_assign_hof(hand, n=2).collect()}
+                for r in _ivf_assign_hof(hand, centroids=two).collect()}
     assert np_rows == hof_rows
     assert np_rows[4] == 0  # exact cosine tie resolves to the smaller id
 
@@ -164,6 +165,7 @@ def test_ivf_assign_numpy_matches_hof(spark):
         ],
         "vec_id long, embedding array<float>",
     )
+    two = _centroids(with_zero, 2)
     z = {r["vec_id"]: r["centroid_id"]
-         for r in _ivf_assign(with_zero, n=2).collect()}
+         for r in _ivf_assign(with_zero, centroids=two).collect()}
     assert z[3] == 0  # all-NaN row resolves to the smallest id

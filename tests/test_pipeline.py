@@ -129,7 +129,7 @@ def test_binaryfile_source_extracts(spark, tmp_path):
 
 def test_empty_run_reads_back_as_empty_frame(spark, tmp_path):
     # no rows -> every bucket commits empty and no bucket= directory is
-    # written; reading the output back must not fail on the missing glob
+    # written; the output directory must still read back, as no rows
     out = str(tmp_path / "empty")
     empty = spark.createDataFrame([], "url string, html binary")
     summary = run_pipeline(spark, empty, out, n_buckets=16)

@@ -159,9 +159,11 @@ def test_dedup_clusters_128_candidates_keyed_not_cartesian(spark):
     # checkpointed so the ONLY md5s on the join sides are the 16
     # band-key digests per side's shared source — never the per-word
     # fold (which would show as nested transform/aggregate md5s)
-    from pdfi_spark.ops.dedup import _lsh128_members, _pairs_from_members
+    from pdfi_spark.ops.dedup import (_docs, _minhash128_artifacts,
+                                      _minhash128_members, _pairs_from_members)
 
-    plan = _plan(_pairs_from_members(_lsh128_members(spark, SF)))
+    sig = _minhash128_artifacts(_docs(spark, SF)).localCheckpoint(eager=True)
+    plan = _plan(_pairs_from_members(_minhash128_members(sig)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "ExistingRDD" in plan  # the checkpointed signature
@@ -336,7 +338,7 @@ def test_pagerank_iteration_over_bucketed_edges_moves_only_ranks(spark):
 
     nodes = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
     n_docs = nodes.count()
-    edges = html_outlinks(spark, SF, n_docs=n_docs)
+    edges = html_outlinks(spark, SF)
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     ew = edges.join(deg, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
@@ -596,7 +598,7 @@ def test_frontier_schedule_per_host_window_broadcast_delays(spark):
 def test_anchor_text_index_single_keyed_exchange(spark):
     # anchor parse is a narrow mapInPandas; the rollup is ONE keyed
     # aggregate on dst (map-side partials)
-    plan = _plan(ops.anchor_text_index(spark, SF, n_docs=500))
+    plan = _plan(ops.anchor_text_index(spark, SF))
     assert "MapInPandas" in plan
     assert plan.count("hashpartitioning") <= 2, plan  # agg (+AQE reuse)
     assert "CartesianProduct" not in plan

@@ -70,7 +70,7 @@ CONSTRUCTION_JOBS = {
     "minhash128_jaccard_estimates": (2, "eager checkpoint of the signature artifacts"),
     "embedding_neardup_topk": (2, "eager checkpoint of the coded vectors"),
     "ivf_cell_counts": (2, "collects the codebook the in-row scorer closes over"),
-    "ivf_topk": (4, "collects the codebook, once per assignment"),
+    "ivf_topk": (2, "collects the codebook the in-row scorer closes over"),
     "ivf_topk_nprobe2": (2, "collects the codebook the in-row scorer closes over"),
     "bloom_dedup_gate": (2, "eager checkpoint of the old-snapshot digests"),
     "link_graph_triangles": (3, "eager checkpoint of the undirected edges"),

@@ -78,6 +78,33 @@ def test_tool_query_lists_resolve_in_registry():
         == list(registry)
 
 
+# the one operator setting still passed in: whether a vocabulary is
+# broadcast or joined, which depends on its size, not on a fixed value
+_EXTRA_PARAMS_ALLOWED = {
+    name: ["broadcast_vocab"] for name in (
+        "tfidf_top_terms", "unigram_surprisal", "bigram_surprisal",
+        "pmi_collocations")
+}
+
+
+def test_registered_queries_take_spark_and_sf_dir_only():
+    """Every registered query is ``fn(spark, sf_dir)``: an operator
+    value with one setting in use is a module constant, which the
+    query's DuckDB oracle reads too. Only the four vocabulary operators
+    keep ``broadcast_vocab``."""
+    import inspect
+
+    from __spark_entry__ import queries
+
+    extra = {}
+    for name, fn in queries().items():
+        params = list(inspect.signature(fn).parameters)
+        assert params[:2] == ["spark", "sf_dir"], (name, params)
+        if params[2:]:
+            extra[name] = params[2:]
+    assert extra == _EXTRA_PARAMS_ALLOWED
+
+
 # a batch parquet read: ``<x>.read``, then any chain of calls such as
 # ``.schema(...)`` or ``.option(...)``, then ``.parquet(``
 _PARQUET_READ = re.compile(

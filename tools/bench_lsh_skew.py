@@ -55,7 +55,7 @@ def main() -> int:
         MINHASH128_BANDS,
         _docs,
         _minhash128_artifacts,
-        _minhash128_bands,
+        _minhash128_members,
         _pairs_from_members,
     )
     from pdfi_spark.pipeline import make_spark
@@ -75,12 +75,7 @@ def main() -> int:
     docs = base.unionAll(planted).repartition(32).localCheckpoint(eager=True)
 
     sig = _minhash128_artifacts(docs).localCheckpoint(eager=True)
-    members = (
-        sig.select("doc_id", F.explode(_minhash128_bands()).alias("bb"))
-        .select("doc_id", F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"))
-        .localCheckpoint(eager=True)
-    )
+    members = _minhash128_members(sig).localCheckpoint(eager=True)
 
     sizes = members.groupBy("band", "bucket").count()
     dist = {

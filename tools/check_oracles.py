@@ -1,12 +1,15 @@
 """Local replica of the driver's correctness gate: run every
 __spark_entry__ query on Spark and its oracle on DuckDB at the given SF,
 compare row count, schema shape, and an order-insensitive value hash.
+Each passing query prints its ``[rows, md5]``, so the OK lines of two
+runs (say, before and after a refactor) can be diffed.
 
 Usage: python tools/check_oracles.py [sf_dir] [query_name ...]
 """
 from __future__ import annotations
 
 import hashlib
+import json
 import sys
 
 import duckdb
@@ -76,13 +79,15 @@ def main() -> int:
         sn, scols, shash = canon(spark_df)
         dn, dcols, dhash = canon(duck_df)
         ok = (sn == dn) and (scols == dcols) and (shash == dhash)
-        status = "OK  " if ok else "FAIL"
-        print(f"{status} {name}: spark rows={sn} duck rows={dn} cols={scols == dcols} hash={shash == dhash}")
-        if not ok:
-            failures.append((name, f"rows {sn}/{dn} cols {scols}/{dcols}"))
-            merged = spark_df.reindex(sorted(spark_df.columns), axis=1)
-            print("  spark head:", merged.head(3).to_dict("records"))
-            print("  duck head:", duck_df.reindex(sorted(duck_df.columns), axis=1).head(3).to_dict("records"))
+        if ok:
+            # [rows, md5] per query: two runs' OK lines diff directly
+            print(f"OK   {name}: {json.dumps([sn, shash])}")
+            continue
+        print(f"FAIL {name}: spark rows={sn} duck rows={dn} cols={scols == dcols} hash={shash == dhash}")
+        failures.append((name, f"rows {sn}/{dn} cols {scols}/{dcols}"))
+        merged = spark_df.reindex(sorted(spark_df.columns), axis=1)
+        print("  spark head:", merged.head(3).to_dict("records"))
+        print("  duck head:", duck_df.reindex(sorted(duck_df.columns), axis=1).head(3).to_dict("records"))
     spark.stop()
     if failures:
         print(f"\n{len(failures)} FAILURES: {[f[0] for f in failures]}")
