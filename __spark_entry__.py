@@ -12,11 +12,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdfi_spark import ops, streaming
+from pdfi_spark._rows import map_rows
 from pdfi_spark.core.api import read_pdf
 from pdfi_spark.core.pdfgen import ORACLE_EXPECTED_SQL, ORACLE_PER_BLOCK, build_pdf
 from pdfi_spark.datagen import build_documents, build_documents_with_id
@@ -121,24 +121,14 @@ def _extract_sections_struct_query(spark: SparkSession, sf_dir: str) -> DataFram
         spark, sf_dir, "sections_oracle", per_block=ORACLE_PER_BLOCK
     )
 
-    def probe(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, html in zip(batch["doc_id"], batch["html"]):
-                paper = read_pdf(bytes(html), type="paper")
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "sections": [
-                        {"title": s["title"], "paragraphs": s["paragraphs"]}
-                        for s in paper["sections"]
-                    ],
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "sections"])
+    def probe(doc_id, html, _expected):
+        paper = read_pdf(bytes(html), type="paper")
+        yield doc_id, [(s["title"], s["paragraphs"]) for s in paper["sections"]]
 
-    structured = docs.mapInPandas(
-        probe,
-        schema="doc_id long, "
-               "sections array<struct<title: string, paragraphs: array<string>>>",
+    structured = map_rows(
+        docs, probe,
+        "doc_id long, "
+        "sections array<struct<title: string, paragraphs: array<string>>>",
     )
     exploded = structured.select(
         "doc_id", F.posexplode("sections").alias("section_idx", "sec")
@@ -190,37 +180,21 @@ def _info_metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's Node utf16le decode), /Author is PDFDocEncoding."""
     docs = build_documents_with_id(spark, sf_dir, "info_unicode", per_block=ORACLE_PER_BLOCK)
 
-    def probe(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, html in zip(batch["doc_id"], batch["html"]):
-                info = read_pdf(bytes(html), type="metadata")["Info"]
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "title": info["Title"],
-                    "author": info["Author"],
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "title", "author"])
+    def probe(doc_id, html, _expected):
+        info = read_pdf(bytes(html), type="metadata")["Info"]
+        yield doc_id, info["Title"], info["Author"]
 
-    return docs.mapInPandas(probe, schema="doc_id long, title string, author string")
+    return map_rows(docs, probe, "doc_id long, title string, author string")
 
 
 def _metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailer metadata probe (readSourceSync type='metadata' analog)."""
     docs = build_documents_with_id(spark, sf_dir, "simple", per_block=ORACLE_PER_BLOCK)
 
-    def probe(iterator):
-        for batch in iterator:
-            rows = [
-                {
-                    "doc_id": int(doc_id),
-                    "trailer_size": int(read_pdf(bytes(html), type="metadata")["Size"]),
-                }
-                for doc_id, html in zip(batch["doc_id"], batch["html"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "trailer_size"])
+    def probe(doc_id, html, _expected):
+        yield doc_id, int(read_pdf(bytes(html), type="metadata")["Size"])
 
-    return docs.mapInPandas(probe, schema="doc_id long, trailer_size int")
+    return map_rows(docs, probe, "doc_id long, trailer_size int")
 
 
 def _xref_count_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,18 +202,10 @@ def _xref_count_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the PDF-1.5 xref-stream + ObjStm corpus."""
     docs = build_documents_with_id(spark, sf_dir, "xref_stream", per_block=ORACLE_PER_BLOCK)
 
-    def probe(iterator):
-        for batch in iterator:
-            rows = [
-                {
-                    "doc_id": int(doc_id),
-                    "n_xrefs": len(read_pdf(bytes(html), type="xref")),
-                }
-                for doc_id, html in zip(batch["doc_id"], batch["html"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "n_xrefs"])
+    def probe(doc_id, html, _expected):
+        yield doc_id, len(read_pdf(bytes(html), type="xref"))
 
-    return docs.mapInPandas(probe, schema="doc_id long, n_xrefs int")
+    return map_rows(docs, probe, "doc_id long, n_xrefs int")
 
 
 # constants for the metadata/xref oracles, derived from the generator
@@ -263,20 +229,13 @@ def _layout_lines_window_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
-    def spans_batches(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                pdf, _ = build_pdf(text, "word_grid", per_block=WORDS_PER_LINE)
-                for s in extract_spans(pdf):
-                    rows.append({
-                        "doc_id": int(doc_id), "seq": s["seq"],
-                        "min_y": s["minY"], "word": s["text"],
-                    })
-            yield pd.DataFrame(rows, columns=["doc_id", "seq", "min_y", "word"])
+    def word_spans(doc_id, text):
+        pdf, _ = build_pdf(text, "word_grid", per_block=WORDS_PER_LINE)
+        for s in extract_spans(pdf):
+            yield doc_id, s["seq"], s["minY"], s["text"]
 
-    spans = base.mapInPandas(
-        spans_batches, schema="doc_id long, seq int, min_y double, word string"
+    spans = map_rows(
+        base, word_spans, "doc_id long, seq int, min_y double, word string"
     )
     w = Window.partitionBy("doc_id").orderBy("seq")
     flagged = spans.withColumn(
@@ -351,20 +310,11 @@ def _html_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
-    def gen(iterator):
-        for batch in iterator:
-            rows = [
-                {
-                    "url": str(int(doc_id)),
-                    "html": build_html(
-                        text, "boiler", per_block=HTML_ORACLE_PER_BLOCK
-                    )[0],
-                }
-                for doc_id, text in zip(batch["doc_id"], batch["text"])
-            ]
-            yield pd.DataFrame(rows, columns=["url", "html"])
+    def gen(doc_id, text):
+        yield (str(int(doc_id)),
+               build_html(text, "boiler", per_block=HTML_ORACLE_PER_BLOCK)[0])
 
-    pages = base.mapInPandas(gen, schema="url string, html binary")
+    pages = map_rows(base, gen, "url string, html binary")
     stream = streaming._scratch_stream(pages)
     return streaming.run_available_now(
         strip_boilerplate(stream), "append"
@@ -382,16 +332,11 @@ def _warc_streaming_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
-    def gen(iterator):
-        for batch in iterator:
-            rows = [
-                {"path": f"seg/{int(doc_id)}.warc.gz",
-                 "content": _capture_blob(int(doc_id), text)}
-                for doc_id, text in zip(batch["doc_id"], batch["text"])
-            ]
-            yield pd.DataFrame(rows, columns=["path", "content"])
+    def gen(doc_id, text):
+        doc_id = int(doc_id)
+        yield f"seg/{doc_id}.warc.gz", _capture_blob(doc_id, text)
 
-    blobs = base.mapInPandas(gen, schema="path string, content binary")
+    blobs = map_rows(base, gen, "path string, content binary")
     stream = streaming._scratch_stream(blobs)
     stripped = strip_boilerplate(read_warc_pages(stream), page_col="page")
     return streaming.run_available_now(stripped, "append").select(

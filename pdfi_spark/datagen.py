@@ -13,10 +13,10 @@ from __future__ import annotations
 
 import datetime
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._rows import map_rows
 from .core.pdfgen import ORACLE_PER_BLOCK, RECIPES, build_pdf
 
 DOCUMENTS_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -66,35 +66,26 @@ def build_documents(spark: SparkSession, sf_dir: str, recipe: str = "flate",
         # and leave generation bound by the source file count)
         base = base.repartition(n_partitions)
 
-    def generate(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, text, lang in zip(batch["doc_id"], batch["text"], batch["lang"]):
-                doc_id = int(doc_id)
-                if skew and doc_id % 100 == 0:
-                    big_text = " ".join([text] * 50)
-                    pdf, expected = build_pdf(big_text, "multipage", per_block=40)
-                elif recipe == "heavy":
-                    # realistic crawl-document weight: ~30 KB multi-page
-                    # PDFs (~29 ms/doc) so per-doc work dominates fixed
-                    # per-row JVM/Arrow costs, as it does on real corpora
-                    big_text = " ".join([text] * 10)
-                    pdf, expected = build_pdf(big_text, "multipage", per_block=40)
-                elif recipe == "mixed":
-                    r = MIXED_RECIPES[doc_id % len(MIXED_RECIPES)]
-                    pdf, expected = build_pdf(text, r, per_block=per_block)
-                else:
-                    pdf, expected = build_pdf(text, recipe, per_block=per_block)
-                rows.append({
-                    "url": url_for(doc_id),
-                    "warc_ts": _EPOCH + datetime.timedelta(seconds=doc_id),
-                    "html": pdf,
-                    "text": expected,
-                    "lang": lang,
-                })
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+    def generate(doc_id, text, lang):
+        doc_id = int(doc_id)
+        if skew and doc_id % 100 == 0:
+            big_text = " ".join([text] * 50)
+            pdf, expected = build_pdf(big_text, "multipage", per_block=40)
+        elif recipe == "heavy":
+            # realistic crawl-document weight: ~30 KB multi-page
+            # PDFs (~29 ms/doc) so per-doc work dominates fixed
+            # per-row JVM/Arrow costs, as it does on real corpora
+            big_text = " ".join([text] * 10)
+            pdf, expected = build_pdf(big_text, "multipage", per_block=40)
+        elif recipe == "mixed":
+            r = MIXED_RECIPES[doc_id % len(MIXED_RECIPES)]
+            pdf, expected = build_pdf(text, r, per_block=per_block)
+        else:
+            pdf, expected = build_pdf(text, recipe, per_block=per_block)
+        yield (url_for(doc_id), _EPOCH + datetime.timedelta(seconds=doc_id),
+               pdf, expected, lang)
 
-    return base.mapInPandas(generate, schema=DOCUMENTS_SCHEMA)
+    return map_rows(base, generate, DOCUMENTS_SCHEMA)
 
 
 def build_documents_with_id(spark: SparkSession, sf_dir: str, recipe: str,
@@ -104,15 +95,10 @@ def build_documents_with_id(spark: SparkSession, sf_dir: str, recipe: str,
 
     base = read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
-    def generate(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                pdf, expected = build_pdf(text, recipe, per_block=per_block)
-                rows.append({"doc_id": int(doc_id), "html": pdf, "expected": expected})
-            yield pd.DataFrame(rows, columns=["doc_id", "html", "expected"])
+    def generate(doc_id, text):
+        yield doc_id, *build_pdf(text, recipe, per_block=per_block)
 
-    return base.mapInPandas(generate, schema="doc_id long, html binary, expected string")
+    return map_rows(base, generate, "doc_id long, html binary, expected string")
 
 
 def materialize_corpus(spark: SparkSession, sf_dir: str, out_path: str,

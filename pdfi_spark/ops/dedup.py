@@ -162,12 +162,11 @@ def _shingle_lists(words_per_doc, n: int) -> list[list[str]]:
 
 
 def _minhash128_artifacts(docs: DataFrame, with_words: bool = False,
-                          with_shingles: bool = False,
-                          shingle_n: int = 3) -> DataFrame:
+                          with_shingles: bool = False) -> DataFrame:
     """ONE fused Arrow pass producing every per-doc artifact the sketch
     family needs: the 128-lane signature (always), and optionally the
     distinct word set (`words`, for true-Jaccard audits) and the
-    distinct n-gram shingles (`shingles`, for pair verification).
+    distinct word 3-gram shingles (`shingles`, for pair verification).
 
     Signature math is the bit-identical numpy twin of the HOF fold
     ``minhash128_sig_hof`` in tests/reference_folds.py: Catalyst
@@ -223,7 +222,7 @@ def _minhash128_artifacts(docs: DataFrame, with_words: bool = False,
             if with_words:
                 out["words"] = words_per_doc
             if with_shingles:
-                out["shingles"] = _shingle_lists(raw_per_doc, shingle_n)
+                out["shingles"] = _shingle_lists(raw_per_doc, 3)
             yield pd.DataFrame(out)
 
     schema = "doc_id long, sig array<long>"

@@ -15,10 +15,10 @@ post-decode analytics (groupBy codec, joins on metadata) stay JVM-side.
 """
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._rows import map_rows
 from ._scan import read
 
 # magic-byte sniffing table: prefix -> (codec, modality)
@@ -114,26 +114,16 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )
 
-    def extract(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                payload = bytes(payload)
-                codec, modality = sniff_codec(payload)
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "modality": modality,
-                    "features": fake_decode_features(payload),
-                    "frame_offsets": frame_sample_offsets(len(payload)),
-                })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "modality", "features", "frame_offsets"]
-            )
+    def extract(doc_id, payload):
+        payload = bytes(payload)
+        _codec, modality = sniff_codec(payload)
+        yield (doc_id, modality, fake_decode_features(payload),
+               frame_sample_offsets(len(payload)))
 
-    return docs.mapInPandas(
-        extract,
-        schema="doc_id long, modality string, features array<double>, "
-               "frame_offsets array<int>",
+    return map_rows(
+        docs, extract,
+        "doc_id long, modality string, features array<double>, "
+        "frame_offsets array<int>",
     )
 
 
@@ -172,15 +162,10 @@ def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )
 
-    def resize(iterator):
-        for batch in iterator:
-            rows = [
-                {"doc_id": int(doc_id), "thumb": fake_resize(bytes(payload))}
-                for doc_id, payload in zip(batch["doc_id"], batch["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "thumb"])
+    def resize(doc_id, payload):
+        yield doc_id, fake_resize(bytes(payload))
 
-    thumbs = docs.mapInPandas(resize, schema="doc_id long, thumb binary")
+    thumbs = map_rows(docs, resize, "doc_id long, thumb binary")
     return thumbs.select(
         "doc_id",
         F.length("thumb").cast("int").alias("thumb_bytes"),

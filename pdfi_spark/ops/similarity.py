@@ -278,8 +278,9 @@ def _ivf_assign(emb: DataFrame,
     production pipeline ships a trained model into a UDF. The whole
     argmax happens IN-ROW — no per-(vector, centroid) row blowup and no
     groupBy exchange at all (the previous broadcast-cross-join +
-    max_by shape, kept below as ``_ivf_assign_hof``, paid ~n_centroids
-    interpreted 64-element HOF folds per vector plus a keyed shuffle).
+    max_by shape, now the test twin ``ivf_assign_hof`` in
+    tests/reference_folds.py, paid ~n_centroids interpreted 64-element
+    HOF folds per vector plus a keyed shuffle).
 
     Bit-exactness: the scorer reproduces the Catalyst fold order
     exactly — per-dimension sequential accumulate of the
@@ -289,7 +290,7 @@ def _ivf_assign(emb: DataFrame,
     smaller centroid_id — the NaN branch is defensive only: a
     zero-norm vector makes the ANSI-mode Catalyst twin throw
     DIVIDE_BY_ZERO outright, and real corpora have none). Pinned
-    output-for-output against the HOF twin in tests/test_kmeans.py.
+    output-for-output against that twin in tests/test_kmeans.py.
     ``centroids`` supplies an explicit (centroid_id, cvec) codebook
     (e.g. from kmeans_codebook); else the first-n stand-in of emb."""
     import numpy as np
@@ -355,41 +356,6 @@ def _ivf_assign(emb: DataFrame,
     )
 
 
-def _ivf_assign_hof(emb: DataFrame,
-                    centroids: DataFrame | None = None) -> DataFrame:
-    """The Catalyst twin of _ivf_assign (cross-check): broadcast cross
-    join + argmax cosine via ``max_by`` under groupBy (map-side
-    partials — the shuffle carries one row per vector, not one per
-    (vector, centroid))."""
-    cent = centroids if centroids is not None else _centroids(emb)
-    # norms precomputed ONCE per vector / per centroid before the
-    # broadcast cross join: the HOF norm fold is interpreted per
-    # element, so evaluating it per (vector, centroid) row costs n x
-    # (resp. N/n_centroids x) the useful work. The product of the same
-    # two fold results is bit-identical to the inline formula, so the
-    # assignment (and its oracle) is unchanged.
-    embn = emb.withColumn("_nrm", _norm(F.col("embedding")))
-    centn = cent.select(
-        "centroid_id", "cvec", _norm(F.col("cvec")).alias("_cnrm")
-    )
-    scored = embn.crossJoin(F.broadcast(centn)).select(
-        "vec_id",
-        "embedding",
-        "centroid_id",
-        (
-            _dot(F.col("embedding"), F.col("cvec"))
-            / (F.col("_nrm") * F.col("_cnrm"))
-        ).alias("cos_c"),
-    )
-    # lexicographic (cos_c, -centroid_id) == ORDER BY cos_c DESC, centroid ASC
-    return scored.groupBy("vec_id").agg(
-        F.max_by(
-            "centroid_id", F.struct(F.col("cos_c"), (-F.col("centroid_id")))
-        ).alias("centroid_id"),
-        F.first("embedding").alias("embedding"),
-    ).select("vec_id", "embedding", "centroid_id")
-
-
 def ivf_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF build step: cell occupancy histogram."""
     emb = _emb(spark, sf_dir)
@@ -405,8 +371,6 @@ def _ivf_probe(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     cell can miss neighbors that quantized into an adjacent one). The
     cell shortlist is a tiny ranked broadcast, so the probe side stays
     pruned to sum(probed cell sizes) rows before any expensive math."""
-    from pyspark.sql import Window
-
     emb = _emb(spark, sf_dir)
     cent = _centroids(emb)
     assigned = _ivf_assign(emb, cent)
@@ -416,26 +380,23 @@ def _ivf_probe(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
         F.col("embedding").alias("qvec"),
         _norm(F.col("embedding")).alias("qnrm"),
     )
-    qcells = (
-        cent.crossJoin(F.broadcast(query))
-        .select(
-            "centroid_id",
-            "qvec",
-            "qnrm",
-            (
-                _dot(F.col("cvec"), F.col("qvec"))
-                / (_norm(F.col("cvec")) * F.col("qnrm"))
-            ).alias("cos_c"),
-        )
-        .withColumn(
-            "cell_rank",
-            F.row_number().over(
-                Window.orderBy(F.desc("cos_c"), F.asc("centroid_id"))
-            ),
-        )
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("centroid_id", "qvec", "qnrm")
-    )
+    # the nprobe best cells ranked in one row, no window: a descending
+    # sort of (cos_c, -centroid_id) is ORDER BY cos_c DESC (NaN first,
+    # as Spark sorts it above every value), centroid_id ASC
+    cells = cent.crossJoin(F.broadcast(query)).select(F.struct(
+        (
+            _dot(F.col("cvec"), F.col("qvec"))
+            / (_norm(F.col("cvec")) * F.col("qnrm"))
+        ).alias("cos_c"),
+        (-F.col("centroid_id")).alias("neg_id"),
+        "centroid_id",
+        "qvec",
+        "qnrm",
+    ).alias("cell"))
+    qcells = cells.agg(
+        F.slice(F.sort_array(F.collect_list("cell"), asc=False), 1, nprobe)
+        .alias("cells")
+    ).select(F.inline("cells")).select("centroid_id", "qvec", "qnrm")
     probe = (
         assigned.join(F.broadcast(qcells), "centroid_id")
         .filter(F.col("vec_id") != QUERY_VEC_ID)

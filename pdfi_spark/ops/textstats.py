@@ -664,12 +664,12 @@ def pack_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1) closed-form chunk = doc_id / chunk_span (deterministic range
     partitioning without a sampling pass); (2) per-chunk token totals —
     one tiny keyed aggregate (SHARD_CHUNKS rows); (3) exclusive running
-    offsets across chunks — a window over those few rows only (the one
-    single-partition exchange, on a dimension-sized input); (4) offsets
-    broadcast back and added to a within-chunk running sum (window
-    PARTITIONED BY chunk). Arithmetic is exact integer addition, so the
-    two-pass sum equals the global prefix sum bit-for-bit — the DuckDB
-    oracle is the naive global window. Plan shape (no full-data
+    offsets across chunks — one row collecting those few totals, summed
+    in-row (the one single-partition exchange, on a dimension-sized
+    input); (4) offsets broadcast back and added to a within-chunk
+    running sum (window PARTITIONED BY chunk). Arithmetic is exact
+    integer addition, so the two-pass sum equals the global prefix sum
+    bit-for-bit — the DuckDB oracle is the naive global window. Plan shape (no full-data
     single-partition exchange, broadcast offsets) is pinned in
     tests/test_plans.py."""
     from pyspark.sql import Window
@@ -682,17 +682,22 @@ def pack_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
         F.expr(f"doc_id div {span}").alias("chunk"),
     )
-    chunk_w = Window.orderBy("chunk").rowsBetween(
-        Window.unboundedPreceding, -1
+    # exclusive prefix sums over the chunk totals in one row (no
+    # unpartitioned window): chunk i's offset adds the totals before it
+    totals = (
+        toks.groupBy("chunk").agg(F.sum("n_tokens").alias("tokens"))
+        .agg(F.sort_array(F.collect_list(F.struct("chunk", "tokens")))
+             .alias("ts"))
     )
-    offsets = (
-        toks.groupBy("chunk").agg(F.sum("n_tokens").alias("chunk_tokens"))
-        .select(
-            "chunk",
-            F.coalesce(F.sum("chunk_tokens").over(chunk_w), F.lit(0))
+    offsets = totals.select(F.inline(F.transform(
+        "ts",
+        lambda t, i: F.struct(
+            t["chunk"].alias("chunk"),
+            F.aggregate(F.slice("ts", 1, i), F.lit(0).cast("long"),
+                        lambda acc, u: acc + u["tokens"])
             .alias("chunk_offset"),
-        )
-    )
+        ),
+    )))
     doc_w = Window.partitionBy("chunk").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, -1
     )

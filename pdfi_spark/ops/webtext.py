@@ -21,11 +21,11 @@ extraction in pipeline.py.
 """
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspark.sql import functions as F
 
+from .._rows import map_rows
 from ..core.html import block_stats, extract_main_text, parse_blocks, parse_links
 from ..core.htmlgen import ORACLE_PER_BLOCK, build_html, build_linked_page
 from ._scan import parquet_num_rows, read
@@ -68,45 +68,30 @@ def _base_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
 
-def strip_boilerplate(df: DataFrame, page_col: str = "html",
-                      url_col: str = "url") -> DataFrame:
+def strip_boilerplate(df: DataFrame, page_col: str = "html") -> DataFrame:
     """Production surface: strip boilerplate from a REAL page column.
-    Input: any DataFrame with (url_col, page_col binary|string); output:
+    Input: any DataFrame with (url, page_col binary|string); output:
     (url, main_text, n_blocks, n_content_blocks, n_boiler_words). Narrow
     Arrow-batched mapInPandas — select only the two columns upstream so
     the scan prunes (same contract as pipeline.extract_text)."""
 
-    def run(iterator):
-        for batch in iterator:
-            rows = []
-            for url, page in zip(batch[url_col], batch[page_col]):
-                try:
-                    # containment starts at the cast: a NULL page cell
-                    # must yield an empty row, never a task failure
-                    page = bytes(page) if not isinstance(page, str) else page
-                    blocks = parse_blocks(page)
-                except Exception:  # noqa: BLE001 — containment: never fail the task
-                    blocks = []
-                content = [b for b in blocks if b["is_content"]]
-                rows.append({
-                    "url": url,
-                    "main_text": "\n".join(b["text"] for b in content),
-                    "n_blocks": len(blocks),
-                    "n_content_blocks": len(content),
-                    "n_boiler_words": sum(
-                        b["n_words"] for b in blocks if not b["is_content"]
-                    ),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "main_text", "n_blocks", "n_content_blocks",
-                         "n_boiler_words"],
-            )
+    def strip(url, page):
+        try:
+            # containment starts at the cast: a NULL page cell
+            # must yield an empty row, never a task failure
+            page = bytes(page) if not isinstance(page, str) else page
+            blocks = parse_blocks(page)
+        except Exception:  # noqa: BLE001 — containment: never fail the task
+            blocks = []
+        content = [b for b in blocks if b["is_content"]]
+        yield (url, "\n".join(b["text"] for b in content), len(blocks),
+               len(content),
+               sum(b["n_words"] for b in blocks if not b["is_content"]))
 
-    return df.select(url_col, page_col).mapInPandas(
-        run,
-        schema="url string, main_text string, n_blocks int, "
-               "n_content_blocks int, n_boiler_words int",
+    return map_rows(
+        df.select("url", page_col), strip,
+        "url string, main_text string, n_blocks int, "
+        "n_content_blocks int, n_boiler_words int",
     )
 
 
@@ -115,37 +100,28 @@ def html_main_content(recipe: str):
     returns (doc_id, main_text) where main_text must equal the golden
     text column."""
 
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        def run(iterator):
-            for batch in iterator:
-                rows = []
-                for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                    page, _ = build_html(text, recipe, per_block=ORACLE_PER_BLOCK)
-                    rows.append(
-                        {"doc_id": int(doc_id),
-                         "main_text": extract_main_text(page)}
-                    )
-                yield pd.DataFrame(rows, columns=["doc_id", "main_text"])
+    def strip(doc_id, text):
+        page, _ = build_html(text, recipe, per_block=ORACLE_PER_BLOCK)
+        yield doc_id, extract_main_text(page)
 
-        return _base(spark, sf_dir).mapInPandas(
-            run, schema="doc_id long, main_text string"
-        )
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return map_rows(_base(spark, sf_dir), strip,
+                        "doc_id long, main_text string")
 
     return q
 
 
-def _citations(batch: pd.DataFrame, n_docs: int):
+def _citations(doc_id, text, n_docs: int):
     """(src, dst, link_rank, anchor) per planted ``/doc/{dst}`` citation
-    on each batch row's generated page, in page order; nav/ad/footer
+    on one document's generated page, in page order; nav/ad/footer
     links are filtered out by href shape."""
-    for doc_id, text in zip(batch["doc_id"], batch["text"]):
-        page, _ = build_linked_page(
-            int(doc_id), n_docs, text, per_block=ORACLE_PER_BLOCK
-        )
-        cites = (link for link in parse_links(page)
-                 if link["href"].startswith("/doc/"))
-        for rank, link in enumerate(cites):
-            yield int(doc_id), int(link["href"][5:]), rank, link["text"]
+    doc_id = int(doc_id)
+    page, _ = build_linked_page(doc_id, n_docs, text,
+                                per_block=ORACLE_PER_BLOCK)
+    cites = (link for link in parse_links(page)
+             if link["href"].startswith("/doc/"))
+    for rank, link in enumerate(cites):
+        yield doc_id, int(link["href"][5:]), rank, link["text"]
 
 
 def html_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,15 +136,12 @@ def html_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens inside the UDF, so no explode shuffle either."""
     n_docs = _n_docs(spark, sf_dir)  # footer read: no Spark job
 
-    def run(iterator):
-        for batch in iterator:
-            rows = [(src, dst, rank)
-                    for src, dst, rank, _ in _citations(batch, n_docs)]
-            yield pd.DataFrame(rows, columns=["src", "dst", "link_rank"])
+    def edges(doc_id, text):
+        for src, dst, rank, _ in _citations(doc_id, text, n_docs):
+            yield src, dst, rank
 
-    return _base(spark, sf_dir).mapInPandas(
-        run, schema="src long, dst long, link_rank int"
-    )
+    return map_rows(_base(spark, sf_dir), edges,
+                    "src long, dst long, link_rank int")
 
 
 def canonical_url(u):
@@ -307,23 +280,14 @@ def robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         list(ROBOTS_TXT.items()), "host string, robots_txt string"
     )
 
-    def parse(iterator):
-        for batch in iterator:
-            rows = []
-            for host, txt in zip(batch["host"], batch["robots_txt"]):
-                for allow, pattern in rules_for(str(txt), "*"):
-                    rows.append({
-                        "host": str(host), "allow": bool(allow),
-                        "prefix": pattern, "plen": len(pattern),
-                        "rx": pattern_regex(pattern),
-                    })
-            yield pd.DataFrame(
-                rows, columns=["host", "allow", "prefix", "plen", "rx"]
-            )
+    def parse(host, txt):
+        for allow, pattern in rules_for(str(txt), "*"):
+            yield (str(host), bool(allow), pattern, len(pattern),
+                   pattern_regex(pattern))
 
-    rules = robots_dim.mapInPandas(
-        parse,
-        schema="host string, allow boolean, prefix string, plen int, rx string",
+    rules = map_rows(
+        robots_dim, parse,
+        "host string, allow boolean, prefix string, plen int, rx string",
     )
     matched = (
         pages.join(F.broadcast(rules), "host", "left")
@@ -371,15 +335,12 @@ def anchor_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     as link_graph_degrees."""
     n_docs = _n_docs(spark, sf_dir)  # footer read: no Spark job
 
-    def run(iterator):
-        for batch in iterator:
-            rows = [(src, dst, anchor)
-                    for src, dst, _, anchor in _citations(batch, n_docs)]
-            yield pd.DataFrame(rows, columns=["src", "dst", "anchor"])
+    def anchors(doc_id, text):
+        for src, dst, _, anchor in _citations(doc_id, text, n_docs):
+            yield src, dst, anchor
 
-    edges = _base(spark, sf_dir).mapInPandas(
-        run, schema="src long, dst long, anchor string"
-    )
+    edges = map_rows(_base(spark, sf_dir), anchors,
+                     "src long, dst long, anchor string")
     return edges.groupBy("dst").agg(
         F.count("*").alias("n_inlinks"),
         F.countDistinct("src").alias("n_unique_srcs"),
@@ -803,10 +764,10 @@ def link_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ne.crossJoin(F.broadcast(nw)).crossJoin(F.broadcast(nt))
 
 
-def read_warc_pages(df: DataFrame, warc_col: str = "content") -> DataFrame:
-    """Production WARC connector: a DataFrame of .warc.gz blobs (e.g.
-    ``spark.read.format("binaryFile").load("s3://.../\\*.warc.gz")``) ->
-    one row per response capture (path, url, warc_date, page). Record
+def read_warc_pages(df: DataFrame) -> DataFrame:
+    """Production WARC connector: a DataFrame of (path, content) .warc.gz
+    blobs (e.g. ``spark.read.format("binaryFile").load("s3://.../\\*.warc.gz")``)
+    -> one row per response capture (path, url, warc_date, page). Record
     fan-out happens inside an Arrow-batched mapInPandas (one gzip member
     per record, so a blob decompresses incrementally); malformed or
     truncated archives yield the records recovered before the damage,
@@ -816,32 +777,20 @@ def read_warc_pages(df: DataFrame, warc_col: str = "content") -> DataFrame:
     repartition as the PDF path once pages are rows."""
     from ..core.warc import gunzip_members, responses
 
-    path_col = "path" if "path" in df.columns else None
+    def captures(path, blob):
+        try:
+            data = bytes(blob)
+            if data[:2] == b"\x1f\x8b":
+                data = gunzip_members(data)
+            caps = responses(data)
+        except Exception:  # noqa: BLE001 — containment
+            caps = []
+        for c in caps:
+            yield path, c["url"], c["date"], c["page"]
 
-    def run(iterator):
-        for batch in iterator:
-            rows = []
-            paths = batch[path_col] if path_col else [""] * len(batch)
-            for path, blob in zip(paths, batch[warc_col]):
-                try:
-                    data = bytes(blob)
-                    if data[:2] == b"\x1f\x8b":
-                        data = gunzip_members(data)
-                    caps = responses(data)
-                except Exception:  # noqa: BLE001 — containment
-                    caps = []
-                rows.extend(
-                    {"path": path, "url": c["url"],
-                     "warc_date": c["date"], "page": c["page"]}
-                    for c in caps
-                )
-            yield pd.DataFrame(
-                rows, columns=["path", "url", "warc_date", "page"]
-            )
-
-    cols = [path_col, warc_col] if path_col else [warc_col]
-    return df.select(*cols).mapInPandas(
-        run, schema="path string, url string, warc_date string, page binary"
+    return map_rows(
+        df.select("path", "content"), captures,
+        "path string, url string, warc_date string, page binary",
     )
 
 
@@ -871,32 +820,20 @@ def warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fused generate+parse mapInPandas: zero exchanges, scan pruned."""
     from ..core.warc import gunzip_members, parse_records, split_http_payload
 
-    def run(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                doc_id = int(doc_id)
-                recs = parse_records(gunzip_members(_capture_blob(doc_id, text)))
-                caps = [r for r in recs if r["type"] == "response"]
-                rows.append({
-                    "doc_id": doc_id,
-                    "url": (
-                        caps[0]["headers"].get("WARC-Target-URI")
-                        if caps else None
-                    ),
-                    "main_text": (
-                        extract_main_text(split_http_payload(caps[0]["payload"]))
-                        if caps else None
-                    ),
-                    "n_records": len(recs),
-                })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "url", "main_text", "n_records"]
-            )
+    def roundtrip(doc_id, text):
+        doc_id = int(doc_id)
+        recs = parse_records(gunzip_members(_capture_blob(doc_id, text)))
+        caps = [r for r in recs if r["type"] == "response"]
+        if caps:
+            yield (doc_id, caps[0]["headers"].get("WARC-Target-URI"),
+                   extract_main_text(split_http_payload(caps[0]["payload"])),
+                   len(recs))
+        else:
+            yield doc_id, None, None, len(recs)
 
-    return _base(spark, sf_dir).mapInPandas(
-        run,
-        schema="doc_id long, url string, main_text string, n_records int",
+    return map_rows(
+        _base(spark, sf_dir), roundtrip,
+        "doc_id long, url string, main_text string, n_records int",
     )
 
 
@@ -917,44 +854,28 @@ def wet_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_record, gunzip_members, gzip_member, parse_records,
     )
 
-    def run(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                doc_id = int(doc_id)
-                url = f"https://example.org/page/{doc_id}"
-                payload = str(text).encode("utf-8")
-                rec = build_record(
-                    "conversion",
-                    {"WARC-Target-URI": url,
-                     "WARC-Date": "2026-01-01T00:00:00Z",
-                     "WARC-Refers-To": f"<urn:uuid:{doc_id:08x}>",
-                     "Content-Type": "text/plain"},
-                    payload,
-                )
-                parsed = parse_records(gunzip_members(gzip_member(rec)))
-                conv = [r for r in parsed if r["type"] == "conversion"]
-                rows.append({
-                    "doc_id": doc_id,
-                    "url": (conv[0]["headers"].get("WARC-Target-URI")
-                            if conv else None),
-                    "wet_text": (
-                        conv[0]["payload"].decode("utf-8")
-                        if conv else None
-                    ),
-                    "n_payload_bytes": (
-                        len(conv[0]["payload"]) if conv else None
-                    ),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "url", "wet_text", "n_payload_bytes"],
-            )
+    def roundtrip(doc_id, text):
+        doc_id = int(doc_id)
+        rec = build_record(
+            "conversion",
+            {"WARC-Target-URI": f"https://example.org/page/{doc_id}",
+             "WARC-Date": "2026-01-01T00:00:00Z",
+             "WARC-Refers-To": f"<urn:uuid:{doc_id:08x}>",
+             "Content-Type": "text/plain"},
+            str(text).encode("utf-8"),
+        )
+        parsed = parse_records(gunzip_members(gzip_member(rec)))
+        conv = [r for r in parsed if r["type"] == "conversion"]
+        if conv:
+            payload = conv[0]["payload"]
+            yield (doc_id, conv[0]["headers"].get("WARC-Target-URI"),
+                   payload.decode("utf-8"), len(payload))
+        else:
+            yield doc_id, None, None, None
 
-    return _base(spark, sf_dir).mapInPandas(
-        run,
-        schema=("doc_id long, url string, wet_text string, "
-                "n_payload_bytes int"),
+    return map_rows(
+        _base(spark, sf_dir), roundtrip,
+        "doc_id long, url string, wet_text string, n_payload_bytes int",
     )
 
 
@@ -1089,29 +1010,15 @@ def html_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the text column — both sides of the oracle are closed-form.
     Same fused zero-exchange mapInPandas shape as the other html ops."""
 
-    def run(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                page, _ = build_html(text, "boiler", per_block=ORACLE_PER_BLOCK)
-                for idx, b in enumerate(parse_blocks(page)):
-                    rows.append({
-                        "doc_id": int(doc_id),
-                        "block_idx": idx,
-                        "block_text": b["text"],
-                        "n_words": b["n_words"],
-                        "is_content": b["is_content"],
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "block_idx", "block_text", "n_words",
-                         "is_content"],
-            )
+    def spans(doc_id, text):
+        page, _ = build_html(text, "boiler", per_block=ORACLE_PER_BLOCK)
+        for idx, b in enumerate(parse_blocks(page)):
+            yield doc_id, idx, b["text"], b["n_words"], b["is_content"]
 
-    return _base(spark, sf_dir).mapInPandas(
-        run,
-        schema="doc_id long, block_idx int, block_text string, "
-               "n_words int, is_content boolean",
+    return map_rows(
+        _base(spark, sf_dir), spans,
+        "doc_id long, block_idx int, block_text string, "
+        "n_words int, is_content boolean",
     )
 
 
@@ -1162,16 +1069,11 @@ def corpus_build_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = degraded.unionByName(dups)
 
-    def run(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                page, _ = build_html(text, "boiler", per_block=ORACLE_PER_BLOCK)
-                rows.append({"doc_id": int(doc_id),
-                             "main_text": extract_main_text(page)})
-            yield pd.DataFrame(rows, columns=["doc_id", "main_text"])
+    def strip(doc_id, text):
+        page, _ = build_html(text, "boiler", per_block=ORACLE_PER_BLOCK)
+        yield doc_id, extract_main_text(page)
 
-    stripped = corpus.mapInPandas(run, schema="doc_id long, main_text string")
+    stripped = map_rows(corpus, strip, "doc_id long, main_text string")
     t = F.col("main_text")
     _, _, _, keep = quality_gates(t)
     agg = stripped.agg(
@@ -1193,24 +1095,15 @@ def html_block_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a page-skeleton constant; the content side is derivable from the
     text column — both mirrored in the oracle."""
 
-    def run(iterator):
-        for batch in iterator:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                page, _ = build_html(text, "boiler", per_block=ORACLE_PER_BLOCK)
-                stats = block_stats(page)
-                rows.append({"doc_id": int(doc_id), **stats})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_blocks", "n_content_blocks",
-                         "n_boiler_blocks", "n_content_words",
-                         "n_boiler_words"],
-            )
+    def stats(doc_id, text):
+        page, _ = build_html(text, "boiler", per_block=ORACLE_PER_BLOCK)
+        # block_stats' keys are in the schema's order
+        yield doc_id, *block_stats(page).values()
 
-    return _base(spark, sf_dir).mapInPandas(
-        run,
-        schema="doc_id long, n_blocks int, n_content_blocks int, "
-               "n_boiler_blocks int, n_content_words int, n_boiler_words int",
+    return map_rows(
+        _base(spark, sf_dir), stats,
+        "doc_id long, n_blocks int, n_content_blocks int, "
+        "n_boiler_blocks int, n_content_words int, n_boiler_words int",
     )
 
 

@@ -172,13 +172,13 @@ def read_pdf_files(spark: SparkSession, path: str,
     )
 
 
-def with_bucket(df: DataFrame, url_col: str = "url", n_buckets: int = 64) -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Stable, salt-style bucket id: pure function of the url, so retries
     and resumes are deterministic."""
-    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets)))
+    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)))
 
 
-def extract_text(df: DataFrame, payload_col: str = "html", url_col: str = "url",
+def extract_text(df: DataFrame, payload_col: str = "html",
                  n_partitions: int | None = None,
                  passthrough: list[str] | None = None,
                  with_timing: bool = False) -> DataFrame:
@@ -196,7 +196,7 @@ def extract_text(df: DataFrame, payload_col: str = "html", url_col: str = "url",
     """
     passthrough = passthrough or []
     projected = df.select(
-        F.col(url_col).alias("url"), F.col(payload_col).alias("payload"), *passthrough
+        "url", F.col(payload_col).alias("payload"), *passthrough
     )
     if n_partitions:
         # salt domain = 32x the partition count: hashing exactly

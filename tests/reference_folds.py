@@ -1,12 +1,14 @@
-"""Catalyst higher-order-function twins of the vectorized sketch folds.
+"""Catalyst higher-order-function twins of the vectorized numpy folds.
 
-The product folds in ``pdfi_spark.ops.dedup`` run in numpy inside
-``mapInPandas``. These twins compute the same signatures as pure JVM
-expressions (``transform``/``aggregate``/``zip_with``), the form the
+The product folds in ``pdfi_spark.ops.dedup`` and the IVF assignment in
+``pdfi_spark.ops.similarity`` run in numpy inside ``mapInPandas``. These
+twins compute the same results as pure JVM expressions
+(``transform``/``aggregate``/``zip_with``/``max_by``), the form the
 DuckDB oracles mirror. They are the proof that the numpy folds are
-bit-identical: ``tests/test_dedup_clusters.py`` compares them lane for
-lane, and ``tests/test_plans.py`` pins the one-md5-per-word plan of the
-MinHash twin. Only tests import this module.
+bit-identical: ``tests/test_dedup_clusters.py`` compares the sketches
+lane for lane, ``tests/test_kmeans.py`` the cell assignments, and
+``tests/test_plans.py`` pins the one-md5-per-word plan of the MinHash
+twin. Only tests import this module.
 """
 from __future__ import annotations
 
@@ -20,6 +22,7 @@ from pdfi_spark.ops.dedup import (
     SIMHASH_BITS,
     _minhash128_params,
 )
+from pdfi_spark.ops.similarity import _centroids, _dot, _norm
 
 
 def hash32(col):
@@ -113,3 +116,33 @@ def simhash_hof(docs: DataFrame) -> DataFrame:
         lambda acc, v: acc + v,
     )
     return docs.select("doc_id", sim.alias("simhash"))
+
+
+def ivf_assign_hof(emb: DataFrame,
+                   centroids: DataFrame | None = None) -> DataFrame:
+    """The Catalyst twin of ``similarity._ivf_assign``: broadcast cross
+    join + argmax cosine via ``max_by`` under groupBy (map-side
+    partials — the shuffle carries one row per vector, not one per
+    (vector, centroid)). Norms are folded once per vector and per
+    centroid, the same fold results the numpy scorer reproduces."""
+    cent = centroids if centroids is not None else _centroids(emb)
+    embn = emb.withColumn("_nrm", _norm(F.col("embedding")))
+    centn = cent.select(
+        "centroid_id", "cvec", _norm(F.col("cvec")).alias("_cnrm")
+    )
+    scored = embn.crossJoin(F.broadcast(centn)).select(
+        "vec_id",
+        "embedding",
+        "centroid_id",
+        (
+            _dot(F.col("embedding"), F.col("cvec"))
+            / (F.col("_nrm") * F.col("_cnrm"))
+        ).alias("cos_c"),
+    )
+    # lexicographic (cos_c, -centroid_id) == ORDER BY cos_c DESC, centroid ASC
+    return scored.groupBy("vec_id").agg(
+        F.max_by(
+            "centroid_id", F.struct(F.col("cos_c"), (-F.col("centroid_id")))
+        ).alias("centroid_id"),
+        F.first("embedding").alias("embedding"),
+    ).select("vec_id", "embedding", "centroid_id")

@@ -130,13 +130,14 @@ def test_ivf_assign_numpy_matches_hof(spark):
     (duplicate vectors), scaled copies (cosine exactly 1 vs two
     centroids), and a zero vector (NaN cosine against every centroid:
     max_by sorts NaN greatest, ties to the smaller centroid_id)."""
-    from pdfi_spark.ops.similarity import _centroids, _ivf_assign, _ivf_assign_hof
+    from pdfi_spark.ops.similarity import _centroids, _ivf_assign
+    from reference_folds import ivf_assign_hof
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     got_np = {r["vec_id"]: r["centroid_id"]
               for r in _ivf_assign(emb).collect()}
     got_hof = {r["vec_id"]: r["centroid_id"]
-               for r in _ivf_assign_hof(emb).collect()}
+               for r in ivf_assign_hof(emb).collect()}
     assert got_np == got_hof and len(got_np) == 500
 
     hand = spark.createDataFrame(
@@ -153,7 +154,7 @@ def test_ivf_assign_numpy_matches_hof(spark):
     np_rows = {r["vec_id"]: r["centroid_id"]
                for r in _ivf_assign(hand, centroids=two).collect()}
     hof_rows = {r["vec_id"]: r["centroid_id"]
-                for r in _ivf_assign_hof(hand, centroids=two).collect()}
+                for r in ivf_assign_hof(hand, centroids=two).collect()}
     assert np_rows == hof_rows
     assert np_rows[4] == 0  # exact cosine tie resolves to the smaller id
 

@@ -133,6 +133,73 @@ def test_parquet_reads_go_through_the_one_reader():
     assert hits == _READ_SITES_ALLOWED
 
 
+# the per-batch pandas frames built outside ``map_rows``: vectorized numpy
+# folds that build whole columns per batch, the timed extraction UDF
+# (per-batch timing, passthrough columns) and the two streaming state
+# updates, which are not per-row maps
+_PANDAS_FRAMES_ALLOWED = {
+    ("pdfi_spark/_rows.py", "map_rows"): 1,
+    ("pdfi_spark/ops/dedup.py", "_minhash128_artifacts"): 1,
+    ("pdfi_spark/ops/dedup.py", "_simhash_np"): 1,
+    ("pdfi_spark/ops/dedup.py", "_shingles_df"): 1,
+    ("pdfi_spark/ops/similarity.py", "_ivf_assign"): 2,
+    ("pdfi_spark/pipeline.py", "extract_text"): 1,
+    ("pdfi_spark/streaming.py", "_first_seen_ledger"): 1,
+    ("pdfi_spark/streaming.py", "frontier_schedule_streaming"): 1,
+}
+
+
+def test_per_row_maps_go_through_map_rows():
+    """A pandas frame is built only in ``map_rows`` and at the named
+    batch-vectorized sites: a per-row map written out by hand names
+    each output column twice (schema and pandas columns)."""
+    import ast
+
+    files = [os.path.join(REPO, "__spark_entry__.py")]
+    for root, _, names in os.walk(os.path.join(REPO, "pdfi_spark")):
+        files += [os.path.join(root, n) for n in names if n.endswith(".py")]
+    hits = {}
+    for path in files:
+        rel = os.path.relpath(path, REPO).replace(os.sep, "/")
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (isinstance(node, ast.Call)
+                        and re.fullmatch(r"(pd|pandas)\.DataFrame(\.\w+)?",
+                                         ast.unparse(node.func))):
+                    key = (rel, getattr(top, "name", "<module>"))
+                    hits[key] = hits.get(key, 0) + 1
+    assert hits == _PANDAS_FRAMES_ALLOWED
+
+
+def test_map_rows_fans_out_and_keeps_the_schema(spark):
+    """``fn`` may yield no row or several per input row; an empty input
+    gives an empty frame of the same declared schema, and the plan
+    keeps the one ``MapInPandas`` operator."""
+    from pdfi_spark._rows import map_rows
+
+    def fan(n, s):
+        if n % 2:  # odd rows yield two rows, even rows none
+            yield n, s
+            yield n * 10, s.upper()
+
+    schema = "k long, tag string"
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c"), (4, "d")],
+                               "n long, s string")
+    out = map_rows(df, fan, schema)
+    assert out.schema.simpleString() == "struct<k:bigint,tag:string>"
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "a"), (3, "c"), (10, "A"), (30, "C")]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, plan
+
+    empty = map_rows(spark.createDataFrame([], "n long, s string"), fan,
+                     schema)
+    assert empty.schema == out.schema
+    assert empty.collect() == []
+
+
 def test_streams_start_only_in_run_available_now():
     """``.writeStream`` appears once, in ``streaming.run_available_now``:
     the one place that names a stream's memory sink and checkpoint."""
