@@ -119,9 +119,9 @@ def _extract_sections_struct_query(spark: SparkSession, sf_dir: str) -> DataFram
     exploded JVM-side with posexplode (SURVEY.md §1.1 'Paper' mapping)."""
     docs = build_documents_with_id(
         spark, sf_dir, "sections_oracle", per_block=ORACLE_PER_BLOCK
-    )
+    ).select("doc_id", "html")
 
-    def probe(doc_id, html, _expected):
+    def probe(doc_id, html):
         paper = read_pdf(bytes(html), type="paper")
         yield doc_id, [(s["title"], s["paragraphs"]) for s in paper["sections"]]
 
@@ -178,9 +178,11 @@ def _info_metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailer /Info dictionary decode: /Title is UTF-16BE with BOM
     (decodeBuffer's BOM branch keeps U+FEFF, exactly like the
     reference's Node utf16le decode), /Author is PDFDocEncoding."""
-    docs = build_documents_with_id(spark, sf_dir, "info_unicode", per_block=ORACLE_PER_BLOCK)
+    docs = build_documents_with_id(
+        spark, sf_dir, "info_unicode", per_block=ORACLE_PER_BLOCK
+    ).select("doc_id", "html")
 
-    def probe(doc_id, html, _expected):
+    def probe(doc_id, html):
         info = read_pdf(bytes(html), type="metadata")["Info"]
         yield doc_id, info["Title"], info["Author"]
 
@@ -189,9 +191,11 @@ def _info_metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailer metadata probe (readSourceSync type='metadata' analog)."""
-    docs = build_documents_with_id(spark, sf_dir, "simple", per_block=ORACLE_PER_BLOCK)
+    docs = build_documents_with_id(
+        spark, sf_dir, "simple", per_block=ORACLE_PER_BLOCK
+    ).select("doc_id", "html")
 
-    def probe(doc_id, html, _expected):
+    def probe(doc_id, html):
         yield doc_id, int(read_pdf(bytes(html), type="metadata")["Size"])
 
     return map_rows(docs, probe, "doc_id long, trailer_size int")
@@ -200,9 +204,11 @@ def _metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _xref_count_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-reference enumeration (readSourceSync type='xref' analog),
     over the PDF-1.5 xref-stream + ObjStm corpus."""
-    docs = build_documents_with_id(spark, sf_dir, "xref_stream", per_block=ORACLE_PER_BLOCK)
+    docs = build_documents_with_id(
+        spark, sf_dir, "xref_stream", per_block=ORACLE_PER_BLOCK
+    ).select("doc_id", "html")
 
-    def probe(doc_id, html, _expected):
+    def probe(doc_id, html):
         yield doc_id, len(read_pdf(bytes(html), type="xref"))
 
     return map_rows(docs, probe, "doc_id long, n_xrefs int")

@@ -116,6 +116,22 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
     (another checkout) would shadow ``PACKAGE_ROOT``. The workers'
     environment therefore also sets ``PYTHONSAFEPATH=1``, which drops
     that entry. Python before 3.11 ignores the variable.
+
+    The JVM talks to the daemon, its workers and the driver's accumulator
+    server over Unix domain sockets, not loopback TCP. Over TCP every
+    Python task waited about 35 ms with neither side on a CPU, for the
+    worker's 40 ms delayed ACK: an identity ``mapInPandas`` task spent a
+    median 51 ms in "time to run Python workers" (15 ms over a Unix
+    socket) for ~6 ms of Python CPU, and a 64-partition pass took about
+    1.0 s (0.45 s over a Unix socket; 4-core Xeon, local[4],
+    ``tools/bench_task_overhead.py``). The sockets live
+    in ``/tmp``, a short directory that must exist on every worker host.
+    It is set rather than left to Spark's default, ``java.io.tmpdir``,
+    because Linux caps an ``AF_UNIX`` path at 107 bytes and each socket
+    path is the directory plus ``/.<uuid4>.sock`` (43 characters): a
+    long ``java.io.tmpdir`` fails the session at start with ``OSError:
+    AF_UNIX path too long``. Sessions not built here keep loopback TCP
+    and its per-task wait.
     """
     advisory = os.environ.get("PDFI_SPARK_ADVISORY_PARTITION", "8m")
     builder = SparkSession.builder.appName(app_name)
@@ -141,6 +157,11 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE))
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.python.daemon.module", "pdfi_spark._worker_daemon")
+        # a loopback TCP socket stalls every Python task ~35 ms; the
+        # directory is fixed because the default, java.io.tmpdir, can
+        # push the socket path past AF_UNIX's 107 bytes (docstring)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", "/tmp")
         .getOrCreate()
     )
     # prepend, never replace: YARN ships --py-files through this same

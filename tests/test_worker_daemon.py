@@ -1,7 +1,9 @@
 """The worker daemon ``make_spark`` selects: zipimport directories survive
 PySpark's per-task ``importlib.invalidate_caches()`` unless the archive
 changed on disk, and a reused worker freezes its imported heap once so
-the daemon's post-task ``gc.collect()`` stops walking it."""
+the daemon's post-task ``gc.collect()`` stops walking it. The JVM talks
+to the daemon, its workers and the driver's accumulator server over
+Unix domain sockets in a fixed short directory."""
 import os
 import subprocess
 import sys
@@ -219,3 +221,83 @@ def test_workers_ignore_a_daemon_in_the_working_directory(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert proc.stdout.strip().splitlines()[-1] == "4"
+
+
+def test_workers_talk_to_the_jvm_over_a_unix_domain_socket(spark):
+    def probe(batches):
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED")]})
+
+    [row] = spark.range(1, numPartitions=1).mapInPandas(probe, "uds string").collect()
+    # the JVM writes the flag capitalised ("True"); pyspark.daemon lower-cases it
+    assert (row["uds"] or "").lower() == "true", row
+
+
+LONG_TMPDIR_SCRIPT = r"""
+import os
+import sys
+import time
+
+sys.path.insert(0, sys.argv[1])
+import pandas as pd
+from pdfi_spark.pipeline import make_spark
+
+spark = make_spark("uds-long-tmpdir", master="local[2]")
+sock_dir = spark.conf.get("spark.python.unix.domain.socket.dir")
+tmpdir = spark.sparkContext._jvm.java.lang.System.getProperty("java.io.tmpdir")
+assert tmpdir == os.environ["TMPDIR"], (tmpdir, os.environ["TMPDIR"])
+
+
+def socks():
+    return {f for f in os.listdir(sock_dir) if f.endswith(".sock")}
+
+
+accumulator_sock = spark.sparkContext._accumulatorServer.server_address
+assert os.path.dirname(accumulator_sock) == sock_dir, accumulator_sock
+before = socks()
+df = spark.range(8, numPartitions=2)
+assert df.mapInPandas(lambda it: it, "id long").count() == 8
+assert df.mapInArrow(lambda it: it, "id long").count() == 8
+assert df.toPandas()["id"].sum() == 28
+frame = spark.createDataFrame(pd.DataFrame({"x": [1, 2, 3]}))
+assert frame.mapInPandas(lambda it: it, frame.schema).toPandas()["x"].sum() == 6
+acc = spark.sparkContext.accumulator(0)
+spark.sparkContext.parallelize(range(10), 2).foreach(lambda x: acc.add(x))
+assert acc.value == 45, acc.value
+# this session's sockets: the accumulator server's and those of the
+# daemons its Python tasks started
+ours = socks() - before | {os.path.basename(accumulator_sock)}
+assert len(ours) >= 2, ours
+spark.stop()
+# the JVM stops the daemon with SIGTERM and does not wait for it, so the
+# daemon removes its socket shortly after stop() returns
+deadline = time.monotonic() + 10
+while ours & socks() and time.monotonic() < deadline:
+    time.sleep(0.1)
+assert not ours & socks(), ours & socks()
+print("ok")
+"""
+
+
+def test_socket_path_fits_whatever_the_tmpdir(tmp_path):
+    """``java.io.tmpdir`` and ``TMPDIR`` far longer than any benchmark run
+    directory: the socket paths must not be built from them, or they pass
+    AF_UNIX's 107-byte cap and the session fails to start."""
+    long_dir = str(tmp_path) + "/"
+    long_dir += "t" * (100 - len(long_dir))
+    os.makedirs(long_dir)
+    assert len(long_dir) >= 90
+    script = tmp_path / "probe.py"
+    script.write_text(LONG_TMPDIR_SCRIPT)
+    env = dict(os.environ, TMPDIR=long_dir)
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.driver.extraJavaOptions=-Djava.io.tmpdir={long_dir} "
+        "pyspark-shell")
+    proc = subprocess.run(
+        [sys.executable, str(script), REPO],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.strip().splitlines()[-1] == "ok"

@@ -15,6 +15,12 @@ workers. A worker that exits during a pass takes its CPU time with it;
 with worker reuse (Spark's default) workers live across passes. The
 tool only reads ``/proc``.
 
+Beside the CPU it reports each Python pass's per-task wall time on the
+engine side: the median over the measured runs' tasks of the SQL metric
+"time to run Python workers", read from the session's own event log
+(written to a temporary directory and removed at exit). Wall time that
+neither CPU column accounts for is time both sides spent waiting.
+
 Run: python tools/bench_task_overhead.py [--partitions 4,64] [--repeat 5]
 """
 from __future__ import annotations
@@ -23,9 +29,12 @@ import argparse
 import os
 import statistics
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(1, os.path.join(ROOT, "perfbench"))
 
 TICK_MS = 1000.0 / os.sysconf("SC_CLK_TCK")
 # the daemon's post-task gc.collect() runs after the task's result has
@@ -89,13 +98,29 @@ def cpu_ms(before: dict, after: dict, side: str) -> float:
                          for key, t in after[side].items())
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--partitions", default="4,64")
-    ap.add_argument("--repeat", type=int, default=5)
-    ap.add_argument("--rows-per-partition", type=int, default=256)
-    args = ap.parse_args()
+def python_ms_per_task(events: list[dict]) -> dict[str, float]:
+    """Median "time to run Python workers" (ms) per task, keyed by the job
+    description of the pass the task ran in."""
+    stage_desc: dict[int, str] = {}
+    per_desc: dict[str, list[float]] = {}
+    for ev in events:
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart":
+            desc = (ev.get("Properties") or {}).get("spark.job.description")
+            for sid in ev.get("Stage IDs", []):
+                stage_desc[sid] = desc
+        elif kind == "SparkListenerTaskEnd" and stage_desc.get(ev["Stage ID"]):
+            for acc in ev["Task Info"].get("Accumulables", []):
+                if acc.get("Name") == "time to run Python workers":
+                    per_desc.setdefault(stage_desc[ev["Stage ID"]], []).append(
+                        float(acc["Update"]))
+    return {desc: statistics.median(ms) for desc, ms in per_desc.items()}
 
+
+def measure(args) -> list[tuple[str, int, float, float, float]]:
+    """(pass, partitions, wall s, JVM CPU ms/task, Python-worker CPU
+    ms/task) per pass. Each measured run's jobs carry the description
+    ``pass/partitions``; the warm-up run's carry none."""
     from pdfi_spark.pipeline import make_spark
 
     nproc = len(os.sched_getaffinity(0))
@@ -110,11 +135,7 @@ def main() -> None:
         "mapInArrow": lambda df: df.mapInArrow(identity, df.schema),
         "jvm_only": lambda df: df,
     }
-    print(f"local[{nproc}], {args.rows_per_partition} rows per partition, "
-          f"median of {args.repeat} runs after a warm-up")
-    print("| pass | partitions | wall s | JVM CPU ms/task "
-          "| Python-worker CPU ms/task |")
-    print("|---|---|---|---|---|")
+    rows = []
     try:
         for n in (int(p) for p in args.partitions.split(",")):
             for kind, build in kinds.items():
@@ -122,6 +143,8 @@ def main() -> None:
                                        numPartitions=n))
                 walls, jvm, py = [], [], []
                 for run in range(args.repeat + 1):
+                    spark.sparkContext.setJobDescription(
+                        f"{kind}/{n}" if run else None)
                     before = cpu_snapshot()
                     t0 = time.perf_counter()
                     df.write.format("noop").mode("overwrite").save()
@@ -134,11 +157,41 @@ def main() -> None:
                     walls.append(wall)
                     jvm.append(cpu_ms(before, done, "jvm") / n)
                     py.append(cpu_ms(before, settled, "python") / n)
-                print(f"| {kind} | {n} | {statistics.median(walls):.3f} "
-                      f"| {statistics.median(jvm):.1f} "
-                      f"| {statistics.median(py):.1f} |", flush=True)
+                rows.append((kind, n, statistics.median(walls),
+                             statistics.median(jvm), statistics.median(py)))
+                print(f"{kind} at {n} partitions done", file=sys.stderr, flush=True)
     finally:
         spark.stop()
+    return rows
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--partitions", default="4,64")
+    ap.add_argument("--repeat", type=int, default=5)
+    ap.add_argument("--rows-per-partition", type=int, default=256)
+    args = ap.parse_args()
+
+    from tracing import read_event_log
+
+    with tempfile.TemporaryDirectory(prefix="task-overhead-eventlog-") as log_dir:
+        # passed at JVM launch, ahead of any submit arguments already set
+        os.environ["PYSPARK_SUBMIT_ARGS"] = (
+            f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir=file:{log_dir} "
+            + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell"))
+        rows = measure(args)
+        # the log is complete once the session has stopped
+        python_ms = python_ms_per_task(read_event_log(log_dir))
+
+    print(f"local[{len(os.sched_getaffinity(0))}], {args.rows_per_partition} rows "
+          f"per partition, median of {args.repeat} runs after a warm-up")
+    print("| pass | partitions | wall s | JVM CPU ms/task "
+          "| Python-worker CPU ms/task | time to run Python workers ms/task |")
+    print("|---|---|---|---|---|---|")
+    for kind, n, wall, jvm_ms, py_ms in rows:
+        run_ms = python_ms.get(f"{kind}/{n}")
+        run_col = "-" if run_ms is None else f"{run_ms:.1f}"
+        print(f"| {kind} | {n} | {wall:.3f} | {jvm_ms:.1f} | {py_ms:.1f} | {run_col} |")
 
 
 if __name__ == "__main__":
