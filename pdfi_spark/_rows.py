@@ -1,8 +1,9 @@
 """The one per-row Python map over Arrow batches.
 
 Every per-document Python stage that turns each input row into zero or
-more output rows (page generation, HTML strip, WARC parse, PDF probes)
-goes through ``map_rows``: the batch loop, the row zip and the pandas
+more output rows (PDF extraction and the commit path's timed wave, page
+generation, HTML strip, WARC parse, PDF probes) goes through
+``map_rows``: the batch loop, the row zip and the pandas
 frame are written here once, and each output column is named once, in
 the schema string.
 """

@@ -33,7 +33,11 @@ inside ``pyspark.worker.main`` and one after it returns:
    fell from about 55 ms to about 9 ms on a 4-core host at ``local[4]``
    (``tools/bench_task_overhead.py``, 64 partitions).
 
-Forked workers inherit both wraps; importing this module (say in the
+A third wrap, ``end_at_eof``, is not about cost: it lets an idle reused
+worker whose socket the JVM closes (at ``spark.stop()``) exit without a
+task, instead of reporting the EOF as a failed task on a dead socket.
+
+Forked workers inherit the wraps; importing this module (say in the
 driver) installs nothing.
 """
 from __future__ import annotations
@@ -104,6 +108,30 @@ def freeze_after_first_task(run_task):
     return run
 
 
+def end_at_eof(run_task):
+    """Wrap a forked worker's task function to end the worker, running no
+    task, when its socket is at EOF before the task's first byte.
+
+    The JVM closes an idle reused worker's socket when the session stops.
+    ``pyspark.worker.main`` would read that EOF as a failed task and write
+    an exception frame back; over a Unix socket the write to the closed
+    peer fails, and as the JVM sets
+    ``PYTHON_DAEMON_KILL_WORKER_ON_FLUSH_FAILURE``, the daemon re-raises
+    the failed flush and the driver's stderr gets a ``BrokenPipeError``
+    traceback. ``SystemExit(1)`` gives the daemon a
+    non-zero code, which ends its reuse loop: the worker exits rather
+    than wait on the closed socket again. A task's path is unchanged:
+    ``peek`` leaves the bytes it buffers for the task to read.
+    """
+
+    def run(infile, outfile):
+        if not infile.peek(1):
+            raise SystemExit(1)
+        return run_task(infile, outfile)
+
+    return run
+
+
 if __name__ == "__main__":
     install()
     # stamp the archives already read while this module was being found,
@@ -112,5 +140,5 @@ if __name__ == "__main__":
     from pyspark import daemon
 
     # each forked worker inherits a wrapper whose task count is still 0
-    daemon.worker_main = freeze_after_first_task(daemon.worker_main)
+    daemon.worker_main = end_at_eof(freeze_after_first_task(daemon.worker_main))
     daemon.manager()

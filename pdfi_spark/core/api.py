@@ -68,11 +68,15 @@ def read_pdf(data: bytes, type: str = "string"):
     return None
 
 
-def extract_record(url: str, data: bytes) -> dict:
-    """Pipeline row contract: never raises; malformed documents produce an
-    error string instead (the documented containment extension —
-    SURVEY.md §4.2; pdfi itself hard-throws, parsers/machine.ts:61-64)."""
+def extract_record(url: str, data: bytes | None) -> dict:
+    """Pipeline row contract: never raises; malformed documents and NULL
+    payloads produce an error string instead (the documented containment
+    extension — SURVEY.md §4.2; pdfi itself hard-throws,
+    parsers/machine.ts:61-64). The keys are in
+    ``pipeline.EXTRACTED_SCHEMA`` order."""
     try:
+        if data is None:
+            raise TypeError("null payload")
         doc = PDFDocument(data)
         pages = doc.pages
         text = paper_to_string(render_paper(doc, pages=pages))

@@ -22,14 +22,14 @@ the first exchange (spark_optimization_guide §2.5: "one huge
 unsplittable file ... repartition immediately after the read").
 
 - ``"raw"``: the plain scan.
-- ``"fanned"``: a round-robin repartition right above the scan, ONLY
-  when the scan plans fewer splits than the cluster's parallelism (never
-  at production split counts). It is deterministic under retries
-  (SPARK-23207); pruning and filter pushdown traverse it.
+- ``"fanned"``: a round-robin repartition right above the scan of a
+  single local file, ONLY when its footer holds fewer row groups than
+  the cluster's parallelism (never at production row-group counts). The
+  row groups, not Spark's planned splits, bound how many tasks get
+  data: a split holding no row group's midpoint reads nothing. It is
+  deterministic under retries (SPARK-23207); pruning and filter
+  pushdown traverse it. Any other path reads raw.
 - ``"auto"``: raw below ``MIN_FAN_BYTES``, fanned above it.
-
-The split count is planning metadata, memoized per (session, path); no
-data or results are ever cached.
 """
 from __future__ import annotations
 
@@ -40,8 +40,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
-
-_SCAN_PARTS: dict[tuple[int, str], int] = {}
 
 # Below this size the fan-out exchange costs aggregate-bound operators
 # more than the serial narrow work it parallelizes (sf0.1's 0.6 MB
@@ -103,14 +101,12 @@ def read(spark: SparkSession, path: str, fan: str = "raw") -> DataFrame:
               else spark.read).parquet(path)
     if fan not in ("raw", "fanned", "auto"):
         raise ValueError(f"fan must be 'raw', 'fanned' or 'auto', not {fan!r}")
-    if fan == "raw" or (fan == "auto" and os.path.isfile(path)
-                        and os.path.getsize(path) < MIN_FAN_BYTES):
+    if fan == "raw" or not os.path.isfile(path) or (
+            fan == "auto" and os.path.getsize(path) < MIN_FAN_BYTES):
         return df
     p = spark.sparkContext.defaultParallelism
-    key = (id(spark), path)
-    if key not in _SCAN_PARTS:
-        _SCAN_PARTS[key] = df.rdd.getNumPartitions()
-    return df.repartition(p) if _SCAN_PARTS[key] < p else df
+    under_split = pq.read_metadata(path).num_row_groups < p
+    return df.repartition(p) if under_split else df
 
 
 def parquet_num_rows(spark: SparkSession, path: str) -> int:

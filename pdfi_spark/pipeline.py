@@ -1,7 +1,8 @@
 """The distributed extraction pipeline.
 
-Scan -> salted repartition -> Arrow-batched ``mapInPandas`` extraction ->
-output + per-bucket lineage metrics -> checkpoint/resume.
+Scan -> salted repartition -> per-row extraction over Arrow batches
+(``_rows.map_rows``) -> output + per-bucket lineage metrics ->
+checkpoint/resume.
 
 Design for 10^12 documents (SURVEY.md §4.2):
 
@@ -34,7 +35,8 @@ Design for 10^12 documents (SURVEY.md §4.2):
   ``Observation.get`` on an empty wave fails while converting the
   metrics row.
 - **Error containment**: extraction never fails a task; malformed rows
-  produce ``error`` strings (the reference hard-throws,
+  and NULL payloads produce ``error`` strings (``core.api.extract_record``,
+  the one containment every caller shares; the reference hard-throws,
   /root/reference/parsers/machine.ts:61-64 — a deliberate, documented
   extension for web-scale corpora).
 """
@@ -44,10 +46,10 @@ import json
 import os
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._rows import map_rows
 from .core.api import extract_record
 
 EXTRACTED_SCHEMA = "url string, text string, n_pages int, n_chars int, error string"
@@ -176,17 +178,16 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
     return spark
 
 
-def read_pdf_files(spark: SparkSession, path: str,
-                   glob: str = "*.pdf") -> DataFrame:
-    """Raw-file source: Spark's binaryFile format over a directory tree ->
-    (url, html). The distributed equivalent of the reference's
-    one-local-file ``readSourceSync`` entry (reference index.ts:25-31);
-    partition planning, file listing and the 2 GB-per-file cap are
-    Spark's. Prefer parquet/Iceberg binary columns for crawl-scale input
+def read_pdf_files(spark: SparkSession, path: str) -> DataFrame:
+    """Raw-file source: Spark's binaryFile format over the ``*.pdf``
+    files of a directory tree -> (url, html). The distributed equivalent
+    of the reference's one-local-file ``readSourceSync`` entry (reference
+    index.ts:25-31); partition planning, file listing and the 2 GB-per-file
+    cap are Spark's. Prefer parquet/Iceberg binary columns for crawl-scale input
     (millions of small files stress the driver's listing)."""
     return (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.pdf")
         .option("recursiveFileLookup", "true")
         .load(path)
         .select(F.col("path").alias("url"), F.col("content").alias("html"))
@@ -200,25 +201,16 @@ def with_bucket(df: DataFrame, n_buckets: int = 64) -> DataFrame:
 
 
 def extract_text(df: DataFrame, payload_col: str = "html",
-                 n_partitions: int | None = None,
-                 passthrough: list[str] | None = None,
-                 with_timing: bool = False) -> DataFrame:
+                 n_partitions: int | None = None) -> DataFrame:
     """documents(url, html, ...) -> extracted(url, text, n_pages, n_chars, error).
 
-    The per-document library runs batch-at-a-time over Arrow inside
-    ``mapInPandas``; everything around it (shuffle, scan pruning, write)
-    stays JVM-side. Only ``url``, the payload column and any requested
-    passthrough columns are shipped to Python (column pruning keeps the
-    scan narrow). Passthrough columns are echoed into the output so no
-    re-join against the (binary-heavy) input is ever needed.
-
-    ``with_timing=True`` adds a ``_ms`` column (per-document extraction
-    wall time, measured inside the UDF) for latency-percentile metrics.
+    The per-document library runs row by row over Arrow batches through
+    ``map_rows``; everything around it (shuffle, scan pruning, write)
+    stays JVM-side. Only ``url`` and the payload column are shipped to
+    Python (column pruning keeps the scan narrow). A NULL payload, like
+    a malformed one, yields an error row (``extract_record``).
     """
-    passthrough = passthrough or []
-    projected = df.select(
-        "url", F.col(payload_col).alias("payload"), *passthrough
-    )
+    projected = df.select("url", F.col(payload_col).alias("payload"))
     if n_partitions:
         # salt domain = 32x the partition count: hashing exactly
         # n_partitions distinct salt values into n_partitions partitions
@@ -232,44 +224,12 @@ def extract_text(df: DataFrame, payload_col: str = "html",
             n_partitions,
             F.pmod(F.xxhash64(F.col("url")), F.lit(n_partitions * 32)),
         )
-    out_columns = ["url", "text", "n_pages", "n_chars", "error"]
 
-    def extract_batches(iterator):
-        timer = time.perf_counter
-        for batch in iterator:
-            records = []
-            times = []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                t0 = timer()
-                if payload is None:
-                    # containment starts at the cast (same contract as
-                    # strip_boilerplate): a NULL payload cell yields an
-                    # error row, never a task failure
-                    records.append({
-                        "url": url, "text": None, "n_pages": None,
-                        "n_chars": None, "error": "TypeError: null payload",
-                    })
-                else:
-                    records.append(extract_record(url, bytes(payload)))
-                times.append((timer() - t0) * 1000.0)
-            out = pd.DataFrame.from_records(records, columns=out_columns)
-            if with_timing:
-                out["_ms"] = times
-            for col in passthrough:
-                out[col] = batch[col].values
-            yield out
+    def extract(url, payload):
+        # extract_record's keys are in the schema's order
+        yield tuple(extract_record(url, payload).values())
 
-    schema = EXTRACTED_SCHEMA
-    if with_timing:
-        schema = schema + ", _ms double"
-    if passthrough:
-        extra = ", ".join(
-            f"{field.name} {field.dataType.simpleString()}"
-            for field in projected.schema.fields
-            if field.name in passthrough
-        )
-        schema = schema + ", " + extra
-    return projected.mapInPandas(extract_batches, schema=schema)
+    return map_rows(projected, extract, EXTRACTED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -344,11 +304,8 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, output_dir: str,
     for wave in waves:
         start = time.time()
         part = bucketed.filter(F.col("bucket").isin([int(b) for b in wave]))
-        with_size = part.withColumn("_nbytes", F.length(payload_col))
-        extracted = extract_text(
-            with_size, payload_col=payload_col,
-            passthrough=["bucket", "_nbytes"], with_timing=True,
-        )
+        extracted = map_rows(part.select("url", payload_col, "bucket"),
+                             _extract_timed, OUTPUT_SCHEMA + ", _ms double")
         # Per-bucket lineage metrics ride along as OBSERVED aggregates on
         # the write action itself: the just-written output is never
         # re-read (at 100 TB a metrics re-scan would double output I/O),
@@ -362,7 +319,7 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, output_dir: str,
         # dynamic partition overwrite, set on this write and not the
         # session: replace only the bucket partitions this wave touches,
         # never the committed ones or the manifest beside them
-        observed.select("url", "text", "n_pages", "n_chars", "error", "_nbytes", "bucket") \
+        observed.drop("_ms") \
             .write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
             .partitionBy("bucket").parquet(output_dir)
         wall_ms = int((time.time() - start) * 1000)
@@ -387,6 +344,17 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, output_dir: str,
             summary["n_docs"] += row["n_docs"]
             summary["n_errors"] += row["n_errors"]
     return summary
+
+
+def _extract_timed(url, payload, bucket):
+    """One ``OUTPUT_SCHEMA`` row plus ``_ms``, the extraction's wall time
+    measured in the worker, for the wave's latency percentiles."""
+    t0 = time.perf_counter()
+    record = extract_record(url, payload)
+    ms = (time.perf_counter() - t0) * 1000.0
+    # extract_record's keys are in the schema's order
+    yield (*record.values(), None if payload is None else len(payload),
+           bucket, ms)
 
 
 def _lineage_aggregates(wave: list[int]) -> list:

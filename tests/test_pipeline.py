@@ -230,3 +230,29 @@ def test_one_row_input_commits_every_bucket(spark, documents, tmp_path):
     assert [m["n_docs"] for m in metrics].count(1) == 1
     assert sum(m["n_docs"] for m in metrics) == 1
     assert read_extracted(spark, out).count() == 1
+
+
+def test_null_payload_commits_as_an_error_row(spark, tmp_path):
+    # the commit path shares extract_record's containment: the NULL row
+    # is written, with a NULL size and the error text, and its bucket's
+    # lineage agrees with JVM-side aggregates over the input
+    from pdfi_spark.core.pdfgen import build_pdf
+
+    pdf, expected = build_pdf("alpha doc", "simple")
+    df = spark.createDataFrame([("null.pdf", None), ("ok.pdf", pdf)],
+                               "url string, html binary")
+    out = str(tmp_path / "nulls")
+    summary = run_pipeline(spark, df, out, n_buckets=1)
+    assert (summary["n_docs"], summary["n_errors"]) == (2, 1)
+    rows = {r["url"]: r for r in read_extracted(spark, out).collect()}
+    assert rows["null.pdf"]["_nbytes"] is None
+    assert rows["null.pdf"]["text"] is None
+    assert rows["null.pdf"]["error"] == "TypeError: null payload"
+    assert rows["ok.pdf"]["_nbytes"] == len(pdf)
+    assert rows["ok.pdf"]["text"] == expected
+    assert rows["ok.pdf"]["error"] is None
+
+    [m] = CheckpointStore(out).metrics()
+    assert m["n_bytes"] == df.selectExpr("sum(length(html))").first()[0]
+    assert m["n_errors"] == read_extracted(spark, out).selectExpr(
+        "count_if(error IS NOT NULL)").first()[0]

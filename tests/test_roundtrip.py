@@ -61,6 +61,14 @@ def test_extract_record_contract():
     assert bad["text"] is None
 
 
+def test_extract_record_contains_a_null_payload():
+    # the one NULL-payload containment: Spark extraction, the commit
+    # path, streaming and the tools all reach it through extract_record
+    rec = extract_record("u", None)
+    assert rec == {"url": "u", "text": None, "n_pages": None,
+                   "n_chars": None, "error": "TypeError: null payload"}
+
+
 def test_empty_text():
     pdf, expected = build_pdf("", "simple")
     assert read_pdf(pdf, type="string") == expected

@@ -114,3 +114,27 @@ def test_construction_launches_no_job(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert got == {q: n for q, (n, _) in CONSTRUCTION_JOBS.items()}
+
+
+def test_fan_out_follows_the_footer_not_the_planned_splits(spark, tmp_path):
+    """A single-row-group file that Spark plans as many byte-range splits
+    still scans its rows in ONE task (the split holding the row group's
+    midpoint), so ``fan="fanned"`` must fan it out."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "one_group.parquet")
+    blobs = [os.urandom(1024) for _ in range(1500)]  # ~1.5 MB, incompressible
+    pq.write_table(pa.table({"id": list(range(1500)), "blob": blobs}), path,
+                   row_group_size=1 << 20)
+    assert pq.read_metadata(path).num_row_groups == 1
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(256 << 10))
+    try:
+        p = spark.sparkContext.defaultParallelism
+        assert spark.read.parquet(path).rdd.getNumPartitions() >= p
+        plan = read(spark, path, fan="fanned")._jdf.queryExecution() \
+            .executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert f"RoundRobinPartitioning({p})" in plan, plan

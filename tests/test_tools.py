@@ -134,8 +134,7 @@ def test_parquet_reads_go_through_the_one_reader():
 
 
 # the per-batch pandas frames built outside ``map_rows``: vectorized numpy
-# folds that build whole columns per batch, the timed extraction UDF
-# (per-batch timing, passthrough columns) and the two streaming state
+# folds that build whole columns per batch and the two streaming state
 # updates, which are not per-row maps
 _PANDAS_FRAMES_ALLOWED = {
     ("pdfi_spark/_rows.py", "map_rows"): 1,
@@ -143,7 +142,6 @@ _PANDAS_FRAMES_ALLOWED = {
     ("pdfi_spark/ops/dedup.py", "_simhash_np"): 1,
     ("pdfi_spark/ops/dedup.py", "_shingles_df"): 1,
     ("pdfi_spark/ops/similarity.py", "_ivf_assign"): 2,
-    ("pdfi_spark/pipeline.py", "extract_text"): 1,
     ("pdfi_spark/streaming.py", "_first_seen_ledger"): 1,
     ("pdfi_spark/streaming.py", "frontier_schedule_streaming"): 1,
 }

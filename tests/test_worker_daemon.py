@@ -301,3 +301,39 @@ def test_socket_path_fits_whatever_the_tmpdir(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert proc.stdout.strip().splitlines()[-1] == "ok"
+
+
+STOP_SCRIPT = r"""
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from pdfi_spark.pipeline import make_spark
+
+for i in range(5):
+    spark = make_spark(f"stop-{i}", master="local[8]")
+    df = spark.range(32, numPartitions=32)
+    assert df.mapInPandas(lambda it: it, "id long").count() == 32
+    spark.stop()
+print("ok")
+"""
+
+
+def test_session_stop_leaves_no_broken_pipe(tmp_path):
+    """At ``spark.stop()`` the JVM closes the sockets of its idle reused
+    workers. Each such worker reads EOF before a task's first byte and
+    must exit cleanly: reported as a failed task, its write to the
+    closed Unix socket fails and the daemon prints a ``BrokenPipeError``
+    traceback (about one per stop of a session whose 8 workers are idle
+    at stop, with the stock task function)."""
+    script = tmp_path / "stops.py"
+    script.write_text(STOP_SCRIPT)
+    env = dict(os.environ)
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [sys.executable, str(script), REPO],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.strip().splitlines()[-1] == "ok"
+    assert "BrokenPipeError" not in proc.stderr, proc.stderr[-4000:]
+    assert "Traceback" not in proc.stderr, proc.stderr[-4000:]
