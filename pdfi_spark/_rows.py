@@ -32,4 +32,6 @@ def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]],
                     for out in fn(*row)]
             yield pd.DataFrame(rows, columns=columns)
 
+    # plans and the Spark UI name a map after its function
+    run.__name__ = run.__qualname__ = fn.__name__
     return df.mapInPandas(run, schema=struct)

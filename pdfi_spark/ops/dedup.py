@@ -292,6 +292,7 @@ def minhash128_jaccard_estimates(spark: SparkSession,
     set together (the corpus is scanned once, not twice), so each pair
     side is a single join against the checkpointed artifacts instead of
     two."""
+    # kept: a shared repartition("doc_id") was 2.1-2.7x slower (2 maps)
     art = _minhash128_artifacts(
         _docs(spark, sf_dir), with_words=True
     ).localCheckpoint(eager=True)
@@ -376,31 +377,27 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is banded into four 8-bit keys — by pigeonhole, any pair within
     hamming distance 3 agrees exactly on at least one band — candidates
     bucket-join on (band, key) (sum(bucket^2), never N^2), and the exact
-    hamming check is bit_count(xor), all whole-stage codegen. The
-    four-way union of literal shifts keeps shiftright on a literal (a
-    per-row band column would force a non-codegen path).
-
-    The signature table is localCheckpoint'ed first: it is referenced by
-    4 union branches on each of 2 join sides, and Catalyst does not share
-    subtrees across union branches — without materialization the
-    per-word SimHash fold (the operator's dominant CPU term) would
-    execute 8x. At production scale signatures are materialized to a
-    table for exactly the same reason (they are 16 bytes/doc)."""
-    sig = simhash(spark, sf_dir).localCheckpoint(eager=True)
-    parts = [
-        sig.select(
+    hamming check is bit_count(xor), all whole-stage codegen. The four
+    bands (literal shifts: a per-row band column would force a
+    non-codegen path) explode from one select, and both join sides read
+    one (band, key) exchange (ReusedExchange), so the per-word SimHash
+    fold runs once per document, inside the query's own action."""
+    bands = F.array(*[
+        F.struct(
             F.lit(i).alias("band"),
             F.shiftright("simhash", SIMHASH_BAND_BITS * i)
             .bitwiseAND(F.lit((1 << SIMHASH_BAND_BITS) - 1))
             .alias("key"),
-            "doc_id",
-            F.col("simhash").alias("s"),
         )
         for i in range(SIMHASH_BANDS)
-    ]
-    members = parts[0]
-    for p in parts[1:]:
-        members = members.unionAll(p)
+    ])
+    members = (
+        simhash(spark, sf_dir)
+        .select(F.explode(bands).alias("bk"), "doc_id",
+                F.col("simhash").alias("s"))
+        .select("bk.band", "bk.key", "doc_id", "s")
+        .repartition("band", "key")
+    )
     a = members.select(
         "band", "key", F.col("doc_id").alias("doc_a"), F.col("s").alias("sa")
     )
@@ -469,20 +466,18 @@ def _lsh_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(band, bucket, doc_id) membership rows — the joinable form of
     minhash_lsh_buckets.
 
-    Signatures are localCheckpoint'ed first: the two band branches (and,
-    in candidate_pairs, the two self-join sides on top of them) are
-    separate subtrees to Catalyst, so without materialization the
-    per-word MinHash fold — the operator's dominant CPU term — would
-    re-execute up to 4x. Signatures are 5 longs/doc; at production scale
-    they'd be written to a table for the same reason."""
-    sig = minhash_signatures(spark, sf_dir).localCheckpoint(eager=True)
-    b1 = sig.select(
-        F.lit(1).alias("band"), F.concat_ws(":", "h1", "h2").alias("bucket"), "doc_id"
+    Both bands explode from one select (the _minhash128_members form),
+    so the per-word MinHash fold runs once, inside the query's action."""
+    sig = minhash_signatures(spark, sf_dir)
+    bands = F.array(
+        F.struct(F.lit(1).alias("band"),
+                 F.concat_ws(":", "h1", "h2").alias("bucket")),
+        F.struct(F.lit(2).alias("band"),
+                 F.concat_ws(":", "h3", "h4").alias("bucket")),
     )
-    b2 = sig.select(
-        F.lit(2).alias("band"), F.concat_ws(":", "h3", "h4").alias("bucket"), "doc_id"
+    return sig.select(F.explode(bands).alias("bb"), "doc_id").select(
+        "bb.band", "bb.bucket", "doc_id"
     )
-    return b1.unionAll(b2)
 
 
 def candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,7 +731,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production bucket->pair->verify->cluster path is materialized in
     ``dedup_clusters`` above)."""
     docs = _docs(spark, sf_dir).filter(F.size(F.split("text", " ")) >= 3)
-    # the shingle fold feeds both self-join sides: materialize once
+    # both join sides read it (slower: explode+max_by 1.44x, repartition 1.4x)
     sh = _shingles_df(docs).localCheckpoint(eager=True)
     right = sh.select(
         (F.col("doc_id") - 1).alias("doc_id"), F.col("shingles").alias("shingles_b")

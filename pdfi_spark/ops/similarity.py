@@ -153,6 +153,7 @@ def embedding_neardup_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are random (max within-bucket cosine ~0.45), so a fixed threshold
     would select nothing to verify — top-k keeps the oracle non-trivial."""
     emb = _emb(spark, sf_dir)
+    # kept: a shared repartition("bucket") was 1.32x slower (it adds a shuffle)
     # materialized: the two self-join sides are separate subtrees to
     # Catalyst, so the 8-plane sign-bit fold would otherwise run twice
     # norm precomputed per vector before the pair join (the interpreted

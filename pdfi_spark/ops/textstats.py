@@ -588,8 +588,8 @@ def pmi_collocations(spark: SparkSession, sf_dir: str,
     c(w1,w2) and the unigram model are keyed aggregates with map-side
     partials; the unigram dimension joins back twice (w1/w2 side),
     broadcast or shuffled per ``broadcast_vocab`` (see _vocab_dim for
-    the size bound) — it is checkpointed once because Catalyst will not
-    share the aggregate subtree across the two join sides. Top-k is
+    the size bound); both join sides reuse the unigram aggregate's one
+    exchange (ReusedExchange), so the corpus is exploded once. Top-k is
     orderBy+limit = TakeOrderedAndProject, never a global sort.
 
     Determinism: counts and totals are exact integers; the probability
@@ -623,7 +623,6 @@ def pmi_collocations(spark: SparkSession, sf_dir: str,
         docs.select(F.explode(ws).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
     )
     pmi = F.round(
         F.log(
@@ -932,6 +931,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(F.split("text", " ")).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("n"))
+        # kept: unshared, the term fold runs twice (2 scans, not 1)
         .localCheckpoint(eager=True)
     )
     rows = spark.range(CMS_D).select(F.col("id").cast("int").alias("r"))

@@ -5,6 +5,8 @@ refactor reintroduces a shuffle, drops a broadcast, or widens a scan,
 these fail even though results stay correct. (The 100 TB argument lives
 in the plan, not the output.)
 """
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -212,15 +214,18 @@ def test_outlink_extraction_is_narrow_and_degrees_one_shuffle(spark):
 
 
 def test_materialized_folds_do_not_reexecute(spark):
-    # the subtree-reuse rule (CLAUDE.md): expensive narrow folds feeding
-    # a union/self-join are localCheckpoint'ed, so the consumer plans
-    # must read ExistingRDD and contain ZERO fold re-execution (md5 for
-    # the hash folds) — dropping a .localCheckpoint silently reintroduces
-    # the measured 2x-4x re-execution these guards pin
-    for fn in [ops.minhash_lsh_buckets, ops.simhash_neardup_pairs]:
-        plan = _plan(fn(spark, SF))
-        assert "ExistingRDD" in plan, fn.__name__
-        assert "md5" not in plan, f"{fn.__name__} re-executes the fold"
+    # the subtree-reuse rule (CLAUDE.md): an expensive narrow fold with
+    # several consumers runs once. minhash_lsh_buckets explodes both
+    # bands from one select, so its plan holds ONE MinHash fold (one
+    # md5) and no Union branch; the self-join queries that share one
+    # exchange instead are pinned on their executed final plans in
+    # test_shared_work_runs_once_in_the_action. Where a fold IS
+    # localCheckpoint'ed, its consumers read ExistingRDD and contain
+    # ZERO fold re-execution — dropping that .localCheckpoint silently
+    # reintroduces the measured 2x-4x re-execution these guards pin
+    plan = _plan(ops.minhash_lsh_buckets(spark, SF))
+    assert plan.count("md5(") == 1, plan
+    assert "Union" not in plan, plan
     plan = _plan(ops.embedding_neardup_topk(spark, SF))
     assert "ExistingRDD" in plan
     assert _shuffles(plan) == 1  # only the bucket self-join shuffle
@@ -535,6 +540,32 @@ def test_exact_substring_dup_keyed_on_whash(spark):
     assert "ReusedExchange" in final, final
 
 
+@pytest.mark.parametrize("name, maps, scans, keyed, reused", [
+    ("minhash_lsh_buckets", 0, 1, 1, False),
+    ("simhash_neardup_pairs", 1, 1, 2, True),
+    ("pmi_collocations", 0, 3, 2, True),
+])
+def test_shared_work_runs_once_in_the_action(spark, name, maps, scans,
+                                             keyed, reused):
+    # work shared by several consumers runs once inside the query's own
+    # action, with no materialized checkpoint (Scan ExistingRDD): one
+    # MapInPandas per Python fold, no table scanned more often than by
+    # the old eager checkpoint job plus its action, each keyed shuffle
+    # once, and the join sides reading one exchange (ReusedExchange)
+    # where the plan shares one
+    from __spark_entry__ import queries
+
+    df = queries()[name](spark, os.path.join(os.path.dirname(SF), "sf0.01"))
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert "Scan ExistingRDD" not in final, final
+    assert final.count("MapInPandas") == maps, final
+    assert final.count("Scan parquet") == scans, final
+    assert final.count("+- Exchange hashpartitioning") == keyed, final
+    assert ("ReusedExchange" in final) == reused, final
+
+
 def test_exact_substring_excise_in_row(spark):
     # excision is in-row (filter-with-index over the words array): the
     # text side never joins against text — the only joins are the
@@ -711,16 +742,21 @@ def test_host_cap_sample_one_host_window_no_funnel(spark):
 
 
 def test_pmi_collocations_broadcast_dims_topk(spark):
-    # the two unigram dimension sides ride BroadcastExchanges off the
-    # checkpointed vocab aggregate; the only data shuffle is the c12
-    # aggregate, and the one single-partition exchange is the 1-row
-    # totals aggregate's, under its broadcast; top-k is
+    # the two unigram dimension sides ride ONE BroadcastExchange of the
+    # vocab aggregate (the second side is its ReusedExchange, so the
+    # corpus is exploded into unigrams once); the data shuffles are the
+    # c12 and unigram aggregates, and the one single-partition exchange
+    # is the 1-row totals aggregate's, under its broadcast; top-k is
     # TakeOrderedAndProject, never a global sort
-    plan = _plan(ops.pmi_collocations(spark, SF))
+    df = ops.pmi_collocations(spark, SF)
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan
     assert "TakeOrderedAndProject" in plan
-    assert plan.count("BroadcastExchange HashedRelationBroadcastMode") == 2
+    assert plan.count("+- BroadcastExchange HashedRelationBroadcastMode") == 1
+    assert plan.count("ReusedExchange") == 1, plan
     assert plan.count("BroadcastExchange IdentityBroadcastMode") == 1
-    assert plan.count("Exchange") - plan.count("BroadcastExchange") == 2
+    assert plan.count("Exchange hashpartitioning") == 2, plan
     assert plan.count("Exchange SinglePartition") == 1, plan
     assert plan.index("BroadcastExchange IdentityBroadcastMode") \
         < plan.index("Exchange SinglePartition"), plan

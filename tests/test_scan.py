@@ -62,11 +62,8 @@ def test_footer_schema_of_a_spark_written_file(spark, tmp_path):
 # collected scalar is two jobs under AQE: the shuffle-map stage and the
 # result).
 CONSTRUCTION_JOBS = {
-    "pmi_collocations": (2, "eager checkpoint of the unigram counts"),
     "cms_heavy_hitters": (2, "eager checkpoint of the per-term counts"),
     "ngram_jaccard": (2, "eager checkpoint of the shingle sets"),
-    "simhash_neardup_pairs": (2, "eager checkpoint of the signatures"),
-    "minhash_lsh_buckets": (2, "eager checkpoint of the signatures"),
     "minhash128_jaccard_estimates": (2, "eager checkpoint of the signature artifacts"),
     "embedding_neardup_topk": (2, "eager checkpoint of the coded vectors"),
     "ivf_cell_counts": (2, "collects the codebook the in-row scorer closes over"),

@@ -198,6 +198,19 @@ def test_map_rows_fans_out_and_keeps_the_schema(spark):
     assert empty.collect() == []
 
 
+def test_map_rows_names_the_plan_node_after_its_function(spark):
+    """A plan names each per-row map after the function it runs, not
+    ``map_rows``' inner loop."""
+    from pdfi_spark.ops.webtext import strip_boilerplate
+
+    pages = spark.createDataFrame([("u", "<p>hello world</p>")],
+                                  "url string, html string")
+    plan = strip_boilerplate(pages)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "MapInPandas strip(" in plan, plan
+    assert "MapInPandas run(" not in plan, plan
+
+
 def test_streams_start_only_in_run_available_now():
     """``.writeStream`` appears once, in ``streaming.run_available_now``:
     the one place that names a stream's memory sink and checkpoint."""

@@ -183,10 +183,11 @@ CASES = [
      "per-host window in deterministic md5 hash order — never a global "
      "sort/funnel; kept is a narrow comparison on the rank"),
     ("pmi_collocations",
-     "PMI phrase mining: bigrams fold in-row (zip_with), c12 is the "
-     "only shuffle, the checkpointed unigram dimension joins back "
-     "twice as BroadcastHashJoins (broadcast_vocab switch for open-web "
-     "vocabulary), top-k is TakeOrderedAndProject"),
+     "PMI phrase mining: bigrams fold in-row (zip_with), c12 and the "
+     "unigram counts are keyed aggregates, the unigram dimension joins "
+     "back twice as BroadcastHashJoins whose second side reuses the "
+     "first's exchange once executed (broadcast_vocab switch for "
+     "open-web vocabulary), top-k is TakeOrderedAndProject"),
     ("weighted_sample",
      "Efraimidis-Spirtakis weighted sampling without replacement: "
      "exponential keys are a narrow in-row map, selection is "
